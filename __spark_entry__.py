@@ -24,31 +24,13 @@ def entry(spark: SparkSession) -> DataFrame:
     return CATALOG["status_summary"].spark(spark, "/root/testdata/sf0.001")
 
 
-# The correctness gate checks ~50 entries/round, walking queries() in
-# dict order. Order comes from the per-entry content-hash state in
-# tools/gate_state.json (regenerated per round via tools/gate_state.py):
-# entries whose code CHANGED since their last green driver row walk
-# first, then never-checked entries, then oldest-checked — so both new
-# code and stale greens get driver rows before anything re-verified
-# recently. Falls back to plain catalog order if the state is unusable.
-def _gate_order() -> list[str]:
-    try:
-        from shuttlestandalonedbcreator_spark.gate import gate_order
-
-        return gate_order(CATALOG)
-    except Exception:
-        return list(CATALOG)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: CATALOG[name].spark for name in _gate_order()}
+    return {name: qd.spark for name, qd in CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (omitted → rows-only check)."""
     return {
-        name: CATALOG[name].oracle
-        for name in _gate_order()
-        if CATALOG[name].oracle is not None
+        name: qd.oracle for name, qd in CATALOG.items() if qd.oracle is not None
     }

@@ -21,24 +21,9 @@ box the hypervisor steals cores under full 32-thread saturation, so
 TOTALS from a loaded run overstate regressions (r8: +66%% total while
 the median ratio was 0.954); read the median first, then the weather.
 
-Because timing noise is one-sided (additive only), entries that ran
->1.5x their pinned time get re-measured in a FRESH subprocess session
-(min of 3 runs) and keep the min ("outlier_repairs" in the detail
-JSON, count on the printed line): a burst that vanishes in a fresh
-context was process noise (the long-running bench JVM degrades — r10
-measured audio_fingerprint at 3.5 s across 4 in-bench runs vs 1.9 s
-fresh), one that survives is a real slowdown of the entry itself.
-
-Round-11 protocol hardening (the r10 driver's 32-core run hit its wall
-timeout with nothing printed): the contract JSON line is printed TWICE —
-once with the raw main-loop timings immediately after the query loop
-("repaired": false), and once after the repair pass ("repaired": true,
-raw values preserved in outlier_checks) — so the measurement survives a
-timeout kill and the repaired estimator is no longer the only reading.
-The repair pass itself only runs when the committed pin records the
-SAME core count as $SPARK_GRAFT_CPUS (a 32-core pin made the 8-core
-driver run trip 52/230 repairs that measured the core deficit, not
-noise) and is capped at MAX_REPAIR_ENTRIES / REPAIR_BUDGET_SEC.
+The contract line is printed and flushed right after the query loop,
+before the scale probes run, so a timeout kill during the probes cannot
+erase the measurement.
 """
 
 from __future__ import annotations
@@ -52,7 +37,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from shuttlestandalonedbcreator_spark.queries import CATALOG  # noqa: E402
-from shuttlestandalonedbcreator_spark.session import get_spark  # noqa: E402
+from shuttlestandalonedbcreator_spark.session import (  # noqa: E402
+    get_spark,
+    spark_graft_cpus,
+)
 
 HEADLINE = (
     "status_summary",
@@ -738,10 +726,11 @@ def weather_fields(start: dict, end: dict) -> dict[str, float | None]:
     return out
 
 
-def load_pin_doc(sf: float | None) -> dict:
-    """The committed BENCH_DETAIL.json pin document, or {} when no pin
-    exists or it was recorded at a different SF (cross-SF ratios measure
-    the fixture, not the code — refuse rather than mislead)."""
+def load_pin(sf: float | None) -> dict[str, float]:
+    """Per-query timings from the committed BENCH_DETAIL.json pin, or {}
+    when no pin exists or it was recorded at a different SF (cross-SF
+    ratios measure the fixture, not the code — refuse rather than
+    mislead)."""
     pin_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
@@ -752,13 +741,7 @@ def load_pin_doc(sf: float | None) -> dict:
         return {}
     if sf is None or pin_doc.get("sf") != sf:
         return {}
-    return pin_doc
-
-
-def load_pin(sf: float | None) -> dict[str, float]:
-    """Per-query timings from the committed BENCH_DETAIL.json pin (see
-    load_pin_doc for the same-SF guard)."""
-    return load_pin_doc(sf).get("queries", {})
+    return pin_doc.get("queries", {})
 
 
 def median_ratio_vs_pin(timings: dict[str, float],
@@ -779,114 +762,11 @@ def median_ratio_vs_pin(timings: dict[str, float],
     return round(statistics.median(ratios), 3)
 
 
-_FRESH_SNIPPET = """
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from shuttlestandalonedbcreator_spark.session import get_spark
-from shuttlestandalonedbcreator_spark.queries import CATALOG
-spark = get_spark(app_name="bench_fresh")
-spark.sparkContext.setLogLevel("ERROR")
-spark.range(1000).count()
-best = None
-for _ in range(3):
-    t0 = time.perf_counter()
-    CATALOG[{name!r}].spark(spark, {sf_dir!r}).write.format(
-        "noop").mode("overwrite").save()
-    dt = time.perf_counter() - t0
-    best = dt if best is None else min(best, dt)
-print(json.dumps({{"best": best}}))
-"""
-
-
-def fresh_process_min(name: str, sf_dir: str,
-                      timeout: int = 180) -> float | None:
-    """Steady-state timing of one entry in a FRESH Spark session (own
-    JVM): min of 3 runs — run 1 absorbs session/JIT/worker warmup. Used
-    by the outlier-repair pass because a degraded long-running bench
-    process re-measures its own degradation; a fresh process measures
-    the entry. None on subprocess failure/timeout (caller keeps the
-    in-bench timing — the conservative direction)."""
-    import subprocess
-
-    code = _FRESH_SNIPPET.format(
-        repo=os.path.dirname(os.path.abspath(__file__)),
-        name=name, sf_dir=sf_dir,
-    )
-    try:
-        r = subprocess.run(
-            [sys.executable, "-c", code],
-            capture_output=True, text=True, timeout=timeout,
-        )
-        line = [ln for ln in r.stdout.splitlines() if ln.startswith("{")][-1]
-        return round(json.loads(line)["best"], 3)
-    except Exception:
-        return None
-
-
-# Bounds on the outlier-repair pass (round 11 — the r10 driver's 32-core
-# bench was killed at its wall timeout, and the unbounded repair pass was
-# implicated: at any core count other than the pin's, the >1.5x gate
-# mass-trips — 52/230 entries in the 8-core run, each spawning 1-2 fresh
-# Spark JVMs x 3 runs). Repairs are now (a) skipped entirely unless the
-# pin records the SAME core count the bench is running at, (b) capped at
-# MAX_REPAIR_ENTRIES entries (worst ratios first) and REPAIR_BUDGET_SEC of
-# wall time, and (c) the contract JSON line is printed BEFORE the pass so
-# a timeout kill cannot erase the measurement.
-MAX_REPAIR_ENTRIES = 8
-REPAIR_BUDGET_SEC = 90.0
-
-
-def repair_plan(timings: dict[str, float], pin_doc: dict,
-                cpus: int) -> list[str]:
-    """Which entries the outlier-repair pass may re-measure: none unless
-    the pin was recorded at this run's core count (comparing an N-core
-    run against an M-core pin flags the core deficit, not noise), then
-    the >1.5x-vs-pin entries, worst ratio first, capped at
-    MAX_REPAIR_ENTRIES. Pure so the gating is testable."""
-    if pin_doc.get("cpus") != cpus:
-        return []
-    pin = pin_doc.get("queries", {})
-    flagged = [
-        name for name, t in timings.items()
-        if pin.get(name, 0) > 0 and t / pin[name] > 1.5
-    ]
-    flagged.sort(key=lambda n: timings[n] / pin[n], reverse=True)
-    return flagged[:MAX_REPAIR_ENTRIES]
-
-
-def _contract_line(timings: dict[str, float], sf, fixtures, med_ratio,
-                   weather: dict, **extra) -> None:
-    """Print (and FLUSH — the driver may kill this process at a wall
-    timeout, and a block-buffered line would die with it) one contract
-    JSON line from the current per-query timings."""
-    subtotals = {
-        fam: round(sum(timings[q] for q in members if q in timings), 3)
-        for fam, members in FAMILIES.items()
-    }
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_time",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": subtotals,
-                "sf": sf,
-                "n_queries": len(timings),
-                "fixtures": fixtures,
-                "median_ratio_vs_pin": med_ratio,
-                **weather,
-                **extra,
-            }
-        ),
-        flush=True,
-    )
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = spark_graft_cpus()
     weather_start = load_weather()
 
     spark = get_spark(app_name="bench")
@@ -912,65 +792,34 @@ def main() -> None:
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
 
-    # Contract line #1 — raw main-loop timings, before any repair or
-    # probe work: the r10 32-core driver run was killed at its timeout
-    # with NOTHING printed, so the round had no certified measurement.
-    weather = weather_fields(weather_start, load_weather())
-    _contract_line(timings, sf, fixtures, median_ratio_vs_pin(timings, sf),
-                   weather, cpus=cpus, repaired=False)
-
-    # One-sided-noise repair: timing noise is strictly additive (a GC
-    # pause, an Arrow batch boundary, a stolen core) — nothing ever makes
-    # an operator run FASTER than its steady state. A per-entry burst
-    # that vanishes on re-measurement is noise, not a regression; one
-    # that survives is real and stays visible. Any entry whose best-of-2
-    # exceeded 1.5x its pinned time is re-measured in a FRESH SUBPROCESS
-    # session (3 runs, min — the standard min-estimator), not in this
-    # process: the r10 diagnosis found bursts that persist across 4
-    # same-process re-runs yet vanish in a fresh session (audio 3.5 s
-    # in-bench all 4 runs vs 1.9 s fresh; video 2.2 s vs 0.7 s) — the
-    # LONG-RUNNING PROCESS degrades, so only a fresh-context measurement
-    # separates "the entry got slower" from "the process got slower".
-    # The pass only makes sense against a pin recorded at the SAME core
-    # count (at 8 cores vs a 32-core pin, a 1.5x ratio is just the core
-    # deficit — the r10 8-core driver run tripped 52/230 entries), and it
-    # is capped so it can never become a wall-time bomb again.
-    outlier_repairs: dict[str, list[float]] = {}
-    outlier_checks: dict[str, list[float | None]] = {}
-    repair_t0 = time.perf_counter()
-    for name in repair_plan(timings, load_pin_doc(sf), cpus):
-        if time.perf_counter() - repair_t0 > REPAIR_BUDGET_SEC:
-            break
-        t = timings[name]
-        # up to two fresh sessions: the first can itself catch a
-        # weather burst (it runs on the same box), and an outlier
-        # left unrepaired poisons the recording's acceptance check
-        attempts: list[float | None] = [fresh_process_min(name, sf_dir)]
-        if (attempts[0] is None or attempts[0] >= t) and (
-            time.perf_counter() - repair_t0 <= REPAIR_BUDGET_SEC
-        ):
-            attempts.append(fresh_process_min(name, sf_dir))
-        outlier_checks[name] = [t, *attempts]
-        fresh = min((a for a in attempts if a is not None), default=None)
-        if fresh is not None and fresh < t:
-            outlier_repairs[name] = [t, fresh]
-            timings[name] = fresh
-
-    # Contract line #2 — repaired totals (same schema; "repaired": true).
-    # Both lines are honest measurements of the same run: the driver's
-    # capture may keep either, and the raw values always survive in
-    # outlier_checks below.
     weather = weather_fields(weather_start, load_weather())
     med_ratio = median_ratio_vs_pin(timings, sf)
-    _contract_line(timings, sf, fixtures, med_ratio, weather,
-                   cpus=cpus, repaired=True,
-                   n_outlier_repairs=len(outlier_repairs))
-
     total = round(sum(timings.values()), 3)
     subtotals = {
         fam: round(sum(timings[q] for q in members if q in timings), 3)
         for fam, members in FAMILIES.items()
     }
+    # the contract line goes out before the scale probes and is FLUSHED:
+    # the driver may kill this process at a wall timeout, and a
+    # block-buffered line would die with it
+    print(
+        json.dumps(
+            {
+                "metric": "headline_queries_total_time",
+                "value": total,
+                "unit": "sec",
+                "queries": subtotals,
+                "sf": sf,
+                "n_queries": len(timings),
+                "fixtures": fixtures,
+                "median_ratio_vs_pin": med_ratio,
+                **weather,
+                "cpus": cpus,
+            }
+        ),
+        flush=True,
+    )
+
     detail_name = (
         "BENCH_DETAIL.json"
         if os.environ.get("SPARK_GRAFT_BENCH_RECORD") == "1"
@@ -995,8 +844,6 @@ def main() -> None:
                     "scale_probes": probes,
                     "fixtures": fixtures,
                     "median_ratio_vs_pin": med_ratio,
-                    "outlier_repairs": outlier_repairs,
-                    "outlier_checks": outlier_checks,
                     **weather,
                 },
                 fh,

@@ -24,6 +24,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def spark_graft_cpus() -> int:
+    """Core count from $SPARK_GRAFT_CPUS. A missing, malformed or
+    non-positive value falls back to os.cpu_count() instead of crashing
+    session start."""
+    try:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        cpus = 0
+    return cpus if cpus > 0 else (os.cpu_count() or 4)
+
+
 def get_spark(
     app_name: str = "shuttlestandalonedbcreator-spark",
     master: str | None = None,
@@ -31,7 +42,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard profile."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = spark_graft_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle_partitions = shuffle_partitions or cpus
 

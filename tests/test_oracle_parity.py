@@ -30,3 +30,12 @@ def test_oracle_parity(spark, sf_small, duck, name):
     ddf = duck.execute(qd.oracle).df()
     problems = compare(name, sdf, ddf)
     assert not problems, f"{name}: {problems[:3]}"
+
+
+def test_driver_contract_walks_catalog_order():
+    """queries() lists every catalog entry in catalog order, and every
+    oracle belongs to a listed query."""
+    from __spark_entry__ import oracle_sql, queries
+
+    assert list(queries()) == list(CATALOG)
+    assert set(oracle_sql()) <= set(queries())

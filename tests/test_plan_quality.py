@@ -20,6 +20,13 @@ def plan_of(spark, sf_small, name: str) -> str:
     )
 
 
+@pytest.fixture(scope="module")
+def catalog_plans(spark, sf_small) -> dict[str, str]:
+    """Executed-plan text of every catalog entry, built once for the
+    whole-catalog gates below (planning all entries costs ~40 s)."""
+    return {name: plan_of(spark, sf_small, name) for name in CATALOG}
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_small):
     plan = plan_of(spark, sf_small, "files_filter")
     assert "PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice" in plan
@@ -410,14 +417,13 @@ _NESTED_LOOP_ALLOWED = {
 }
 
 
-def test_no_unlisted_cartesian_or_nested_loop_in_catalog(spark, sf_small):
+def test_no_unlisted_cartesian_or_nested_loop_in_catalog(catalog_plans):
     """Full-catalog quadratic-join gate: a CartesianProduct anywhere, or a
     BroadcastNestedLoopJoin outside the documented allowlist, fails the
     suite — a new query can't silently ship an accidental cross join.
     Plans are built, not executed (join strategy is visible pre-AQE)."""
     offenders = {}
-    plans = {name: plan_of(spark, sf_small, name) for name in CATALOG}
-    for name, plan in plans.items():
+    for name, plan in catalog_plans.items():
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in _NESTED_LOOP_ALLOWED:
@@ -425,7 +431,9 @@ def test_no_unlisted_cartesian_or_nested_loop_in_catalog(spark, sf_small):
     assert not offenders, offenders
     # the allowlist must not go stale: every listed query still plans a NL
     stale = {
-        n for n in _NESTED_LOOP_ALLOWED if "BroadcastNestedLoopJoin" not in plans[n]
+        n
+        for n in _NESTED_LOOP_ALLOWED
+        if "BroadcastNestedLoopJoin" not in catalog_plans[n]
     }
     assert not stale, f"allowlist entries no longer nested-loop: {stale}"
 
@@ -780,14 +788,14 @@ def _unpartitioned_window_count(plan: str) -> int:
     return hits
 
 
-def test_no_unpartitioned_window_outside_bounded_allowlist(spark, sf_small):
+def test_no_unpartitioned_window_outside_bounded_allowlist(catalog_plans):
     """Full-catalog single-partition-window gate: any entry planning an
     unpartitioned Window must carry a documented frame bound above — a
     new query can't silently ship a data-sized global sort through one
     task, and the allowlist can't go stale."""
     counts = {
-        name: _unpartitioned_window_count(plan_of(spark, sf_small, name))
-        for name in CATALOG
+        name: _unpartitioned_window_count(plan)
+        for name, plan in catalog_plans.items()
     }
     offenders = {
         n: c

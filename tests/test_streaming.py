@@ -764,3 +764,45 @@ def test_streaming_cdc_versioned_incremental_snapshots(spark, tmp_path):
 
     for b in (0, 2, 3):
         assert inodes(1, b) == inodes(2, b) == inodes(3, b), b
+
+
+def test_stream_fuzz_late_drop_helpers():
+    """The deterministic late-drop mode (VERDICT r9 #4) rests on two
+    pure facts pinned here: the watermark cutoff is chosen OFF the
+    window-end grid (so Spark's <=/< predicate conventions agree on the
+    drop and eviction sets), and the fixed gate block 85000-85003
+    round-robins all four sub-families via seed % 4."""
+    from tools.stream_fuzz import _dropped_by_watermark, pick_watermark_cutoff
+
+    # off-grid: no window end (multiples of grid, offset 0) equals W
+    w = pick_watermark_cutoff(0, 10_000_000, 0.5, grid_ms=1_000)
+    assert 0 < w < 10_000_000 and w % 1_000 != 0
+    # sliding grid with offset: ends sit on {k*slide + size % slide}
+    w = pick_watermark_cutoff(
+        0, 10_000_000, 0.36, grid_ms=600_000, grid_offset_ms=300_000
+    )
+    assert (w - 300_000) % 600_000 != 0
+    # frac=0.5 of an even span lands exactly on the offset grid and
+    # must be nudged off it, staying inside the open interval
+    w = pick_watermark_cutoff(0, 1_200_000, 0.5, grid_ms=600_000)
+    assert w % 600_000 != 0 and 0 < w < 1_200_000
+    # no grid: pure linear interpolation passthrough
+    assert pick_watermark_cutoff(100, 1100, 0.25) == 350
+
+    # gate block 85000-85003 covers tumbling(0)/sliding(1)/dedup(2)/
+    # session(3)
+    assert sorted(s % 4 for s in range(85000, 85004)) == [0, 1, 2, 3]
+
+    # drop metric sums across every progress entry and every operator
+    class _P:
+        def __init__(self, j):
+            self.json = j
+
+    q = type("Q", (), {})()
+    q.recentProgress = [
+        {"stateOperators": [{"numRowsDroppedByWatermark": 3}]},
+        _P('{"stateOperators": [{"numRowsDroppedByWatermark": 4},'
+           ' {"other": 1}]}'),
+        {"stateOperators": []},
+    ]
+    assert _dropped_by_watermark(q) == 7

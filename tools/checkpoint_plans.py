@@ -5,9 +5,10 @@ proved nothing about the claims that live INSIDE the checkpointed jobs).
 
 Monkeypatches DataFrame.localCheckpoint to write each pre-checkpoint
 frame's .explain("formatted") into plans/<outdir>/<entry>_ckpt<i>.txt
-before delegating to the real checkpoint, then builds (and, with --run,
-executes) each named entry. Zero entry-code changes — the capture wraps
-the same functions the driver runs.
+before delegating to the real checkpoint, then builds each named entry
+and writes its final plan to plans/<outdir>/<entry>_final.txt. Zero
+entry-code changes — the capture wraps the same functions the driver
+runs.
 
 Usage: python tools/checkpoint_plans.py <outdir> <entry> [entry ...]
 """

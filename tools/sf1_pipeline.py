@@ -1,8 +1,8 @@
 """sf1 COMPOSED-pipeline rehearsal: the scale probes measured each
-component alone (merge_crossover, incremental_crossover,
-version_crossover); this runs the production shape — one pipeline,
-stage after stage on the same session — at ~sf1 inputs synthesized by
-replication (documents ×10 ≈ 50k docs, lineitem ×10 ≈ 6M rows):
+component alone (the crossover tables in SCALING.md); this runs the
+production shape — one pipeline, stage after stage on the same
+session — at ~sf1 inputs synthesized by replication (documents ×10
+≈ 50k docs, lineitem ×10 ≈ 6M rows):
 
   1. curate   — quality gates → LSH near-dup → canonical keep → split
                 (plans/curation.py write_curated_observed, one write)
@@ -44,7 +44,38 @@ from shuttlestandalonedbcreator_spark.plans.merge import (  # noqa: E402
 )
 from shuttlestandalonedbcreator_spark.session import get_spark  # noqa: E402
 from shuttlestandalonedbcreator_spark.sources.registry import load_table  # noqa: E402
-from tools.incremental_crossover import replicate  # noqa: E402
+
+
+def replicate(docs, replicas: int):
+    """corpus × replicas with ids offset per replica and words
+    deterministically reordered (sorted by xxhash64(word, replica)) so
+    replicas share vocabulary but not shingles."""
+    parts = [docs.select("doc_id", "text")]
+    for r in range(1, replicas):
+        shuffled = F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.transform(
+                        F.split(F.col("text"), r"\s+"),
+                        lambda w: F.struct(
+                            F.xxhash64(w, F.lit(r)).alias("h"), w.alias("w")
+                        ),
+                    )
+                ),
+                lambda s: s["w"],
+            ),
+            " ",
+        )
+        parts.append(
+            docs.select(
+                (F.col("doc_id") + F.lit(r * (1 << 40))).alias("doc_id"),
+                shuffled.alias("text"),
+            )
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 def _shuffle_totals(spark) -> tuple[int, int]:

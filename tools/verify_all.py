@@ -7,11 +7,8 @@ run, in one command.
    any config the code path fails to set at runtime.
 2. queries()/oracle_sql() contract shape (oracle keys ⊆ query keys).
 3. Full catalog parity sweep vs DuckDB at sf_dir (default sf0.01).
-4. bench.py emits its contract JSON lines (run at sf0.001 here for
-   speed — the driver runs sf0.1). Since r11 the contract line prints
-   TWICE — raw main-loop timings first ("repaired": false, survives a
-   timeout kill), repaired totals last — both must parse with the full
-   key set.
+4. bench.py emits exactly one contract JSON line with the full key set
+   (run at sf0.001 here for speed — the driver runs sf0.1).
 5. Differential fuzz sweep: 50 generated Spark-vs-DuckDB query pairs at
    sf0.001 over a FIXED seed block (80000-80049 — disjoint from the 50
    pinned suite seeds), failing on any divergence. Every ship exercises
@@ -83,7 +80,7 @@ def main() -> int:
     if r.returncode != 0:
         failures.append(f"parity sweep failed: {last}")
 
-    # 4: bench emits its contract JSON lines (raw first, repaired last)
+    # 4: bench emits exactly one contract JSON line
     env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001")
     r = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
@@ -94,15 +91,12 @@ def main() -> int:
             ln for ln in r.stdout.strip().splitlines()
             if ln.startswith('{"metric"')
         ]
-        assert len(lines) == 2, f"expected 2 contract lines, got {len(lines)}"
-        for ln in lines:
-            payload = json.loads(ln)
-            assert {"metric", "value", "unit", "queries", "sf"} <= set(payload)
-        assert json.loads(lines[0])["repaired"] is False
-        assert json.loads(lines[1])["repaired"] is True
-        payload = json.loads(lines[-1])
-        n = payload.get("n_queries", len(payload["queries"]))
-        print(f"bench: {payload['value']}s over {n} queries")
+        assert len(lines) == 1, f"expected 1 contract line, got {len(lines)}"
+        payload = json.loads(lines[0])
+        assert {
+            "metric", "value", "unit", "queries", "sf", "n_queries"
+        } <= set(payload)
+        print(f"bench: {payload['value']}s over {payload['n_queries']} queries")
     except Exception as e:  # noqa: BLE001
         failures.append(f"bench output invalid: {e}")
 
