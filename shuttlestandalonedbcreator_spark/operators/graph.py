@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -135,8 +137,9 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
             comp_min[r] = node
     rows = [(node, comp_min[find(node)]) for node in parent]
     schema = sym.schema["u"].dataType
-    return sym.sparkSession.createDataFrame(
-        rows, f"id {schema.simpleString()}, component {schema.simpleString()}"
+    return local_frame(
+        sym.sparkSession, rows,
+        f"id {schema.simpleString()}, component {schema.simpleString()}",
     )
 
 

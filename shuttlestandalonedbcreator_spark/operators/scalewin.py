@@ -19,9 +19,11 @@ primitives the catalog uses — ROW_NUMBER, running SUM, NTILE — into:
    of at most ``n_blocks`` rows (constant, default 1024 — the
    "histogram buckets" bounded class); it is collected once, the
    cumulative offsets are computed driver-side in exact Python
-   integers, and the tiny offsets relation broadcast-joins back. No
-   unpartitioned window appears anywhere in the plan, and the same
-   collected rows feed the skew observation for free.
+   integers, and the tiny offsets relation broadcast-joins back as a
+   JVM local relation (``util.local_frame``: a ``LocalTableScan``, no
+   Python worker). No unpartitioned window appears anywhere in the
+   plan, and the same collected rows feed the skew observation for
+   free.
 
 The result is BIT-IDENTICAL to the single-partition form for any total
 order: global row_number = block-local row_number + (rows in earlier
@@ -59,7 +61,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import bounded_broadcast
+from .util import bounded_broadcast, local_frame
 
 OrderSpec = Sequence[tuple[str, str]]  # [(column, "asc"|"desc"), ...]
 
@@ -150,20 +152,20 @@ def _stitch(d: DataFrame, blk: str, local_col: str, bulk_agg: Column,
     The per-block aggregate (at most n_blocks+1 rows by construction)
     is collected ONCE and the cumulative offsets are computed
     driver-side in exact Python integers, then broadcast-joined back
-    as a local relation: no unpartitioned stitch window remains in the
-    plan, and the same collected rows feed the max-block-share
-    degeneration signal for free (``context``/``on_skew``) — observing
-    skew costs zero extra jobs. Multi-spec callers pass ``sizes_rows``
+    as a JVM local relation (``local_frame``): no unpartitioned stitch
+    window remains in the plan, and the same collected rows feed the
+    max-block-share degeneration signal for free
+    (``context``/``on_skew``) — observing skew costs zero extra jobs. Multi-spec callers pass ``sizes_rows``
     (rows keyed ``_b``/``_bulk``/``_cnt``, pre-collected for ALL specs
     in one job) so K specs cost one job, not K.
 
     Overflow contract: the driver-side cumulative offsets are exact
     Python integers, so a running sum whose prefix exceeds int64 range
-    raises LOUDLY in ``createDataFrame`` (the ``_off long`` schema
-    rejects the out-of-range value) instead of wrapping silently — the
-    same inputs would overflow Spark's own ``SUM(long)`` global window
-    too; this decomposition surfaces it at the stitch rather than
-    producing a wrapped result."""
+    raises ``OverflowError`` LOUDLY when ``local_frame`` builds the
+    Arrow ``_off`` column (int64 rejects the out-of-range value)
+    instead of wrapping silently — the same inputs would overflow
+    Spark's own ``SUM(long)`` global window too; this decomposition
+    surfaces it at the stitch rather than producing a wrapped result."""
     if sizes_rows is None:
         aggs = [bulk_agg.alias("_bulk"), F.count(F.lit(1)).alias("_cnt")]
         if nonnull_count_agg is not None:
@@ -195,7 +197,7 @@ def _stitch(d: DataFrame, blk: str, local_col: str, bulk_agg: Column,
         schema += ", _offn long"
     if total_col is not None:
         schema += f", {total_col} long"
-    offs = d.sparkSession.createDataFrame(off_rows, schema)
+    offs = local_frame(d.sparkSession, off_rows, schema)
 
     joined = d.join(bounded_broadcast(offs, "domain"), blk)
     if nonnull_count_agg is None:

@@ -26,7 +26,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from shuttlestandalonedbcreator_spark.operators.dedup import md5_long
-from shuttlestandalonedbcreator_spark.operators.util import bounded_broadcast
+from shuttlestandalonedbcreator_spark.operators.util import (
+    bounded_broadcast,
+    local_frame,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -218,8 +221,9 @@ def ivf_topk(
         # KMeans.fit throws on an empty dataset ("Nothing has been added
         # to this summarizer") — an empty corpus slice is routine, so
         # return the typed empty result instead
-        return vectors.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, score double, rank int"
+        return local_frame(
+            vectors.sparkSession, [],
+            "query_id long, neighbor_id long, score double, rank int",
         )
     km = KMeans(k=n_centroids, seed=seed, featuresCol="_feat", predictionCol="_cell")
     model = km.fit(base.select("_feat"))
@@ -233,8 +237,8 @@ def ivf_topk(
 
     centroids = [[float(x) for x in c] for c in model.clusterCenters()]
     spark = vectors.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "cell int, centroid array<double>"
+    cent_df = local_frame(
+        spark, list(enumerate(centroids)), "cell int, centroid array<double>"
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
@@ -327,8 +331,8 @@ def cosine_neardup_pairs(
         )
         rows = [r for r in rows if r["_v"] is not None]
         if not rows:
-            return vectors.sparkSession.createDataFrame(
-                [], "id_a long, id_b long, cosine double"
+            return local_frame(
+                vectors.sparkSession, [], "id_a long, id_b long, cosine double"
             )
         b_ids = np.array([r["_id"] for r in rows])
         bm = np.stack([np.asarray(r["_v"], dtype=np.float64) for r in rows])
@@ -567,8 +571,9 @@ def matmul_topk(
     if not qrows:
         # an empty probe set is routine (empty partition/day/tenant) and
         # np.stack([]) throws — return the typed empty result instead
-        return vectors.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, score double, rank int"
+        return local_frame(
+            vectors.sparkSession, [],
+            "query_id long, neighbor_id long, score double, rank int",
         )
     q_ids = np.array([r["qid"] for r in qrows])
     qm = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in qrows])

@@ -38,7 +38,10 @@ from shuttlestandalonedbcreator_spark.operators import dedup as D
 from shuttlestandalonedbcreator_spark.operators import joins as J
 from shuttlestandalonedbcreator_spark.operators import scalewin as SW
 from shuttlestandalonedbcreator_spark.operators import similarity as V
-from shuttlestandalonedbcreator_spark.operators.util import bounded_broadcast
+from shuttlestandalonedbcreator_spark.operators.util import (
+    bounded_broadcast,
+    local_frame,
+)
 from shuttlestandalonedbcreator_spark.operators.hierarchy import (
     hierarchy_closure,
     hierarchy_closure_doubling,
@@ -921,7 +924,8 @@ def q_range_join_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 extension: theta/range join — events classified into value bands
     via a broadcast nested-loop join against a tiny band dimension."""
     ev = _t(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 50.0), ("mid", 50.0, 150.0), ("high", 150.0, 1e9)],
         "band string, lo double, hi double",
     )
@@ -3096,9 +3100,8 @@ def q_sql_adhoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's real query path (SURVEY §3.2): ad-hoc SQL text over
     registered views — the IDENTICAL string runs on Spark and the oracle,
     demonstrating the engine's SQL surface is dialect-compatible."""
-    from shuttlestandalonedbcreator_spark.sources.registry import register_views
-
-    register_views(spark, sf_dir, only=("customer", "nation", "orders"))
+    for name in ("customer", "nation", "orders"):
+        _t(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(SQL_ADHOC)
 
 
@@ -3789,9 +3792,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup/cube. The IDENTICAL SQL string runs on both engines (dialect
     compatibility, like sql_adhoc); Catalyst expands it into a single
     Expand + one hash aggregate — one shuffle for all three sets."""
-    from shuttlestandalonedbcreator_spark.sources.registry import register_views
-
-    register_views(spark, sf_dir, only=("orders",))
+    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(SQL_GROUPING_SETS)
 
 
@@ -8456,7 +8457,8 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     merges = train_bpe_merges(docs, "text", n_merges=10, min_freq=2)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string, merged string",
     )

@@ -557,6 +557,47 @@ def test_no_raw_broadcast_hints_outside_audit_point():
     )
 
 
+def test_no_python_list_frames_outside_local_frame():
+    """Driver-side rows become a DataFrame only through
+    operators.util.local_frame, which plans a JVM LocalTableScan. A raw
+    ``createDataFrame(<python list>)`` or ``parallelize(...)`` plans a
+    Python RDD, and executing it starts Python workers only to unpickle
+    the rows (~0.4 s per warm use of a 1,025-row offsets table on a
+    4-core box, against ~0.08 s through the helper). Source-level gate:
+    the two calls may appear ONLY inside ``local_frame`` and in
+    ``sources/excel.py``, whose work list feeds ``mapInPandas`` (Python
+    workers run there anyway) and whose partition order decides ingest's
+    cross-workbook last-write-wins."""
+    import ast
+    import pathlib
+
+    import shuttlestandalonedbcreator_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for py in root.rglob("*.py"):
+        rel = py.relative_to(root).as_posix()
+        if rel == "sources/excel.py":
+            continue
+        tree = ast.parse(py.read_text())
+        helper = set()
+        if rel == "operators/util.py":
+            fn = next(n for n in tree.body if getattr(n, "name", "") == "local_frame")
+            helper = set(range(fn.lineno, fn.end_lineno + 1))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("createDataFrame", "parallelize")
+                and node.lineno not in helper
+            ):
+                offenders.append(f"{rel}:{node.lineno}: {node.func.attr}")
+    assert not offenders, (
+        "driver rows turned into a Python RDD (route through "
+        "operators.util.local_frame):\n" + "\n".join(offenders)
+    )
+
+
 def test_no_unguarded_driver_collects_in_operator_modules():
     """Every driver ``.collect()`` in the operator/query modules must be
     either (a) routed through ``operators.util.bounded_collect`` (the

@@ -309,6 +309,40 @@ def test_int64_extreme_range_no_overflow(spark):
     assert exp.select("id", "rn").exceptAll(got.select("id", "rn")).count() == 0
 
 
+def test_running_sum_prefix_overflow_raises(spark):
+    """The stitch's overflow contract: block offsets are exact Python
+    integers, so a running prefix past int64 raises while the Arrow
+    ``_off`` column is built instead of wrapping. Three 2^62 values in
+    three blocks: no single block sum overflows, the third offset
+    (2^63) does."""
+    rows = [(0, 2**62), (1000, 2**62), (2000, 2**62)]
+    df = spark.createDataFrame(rows, "id long, x long")
+    with pytest.raises(OverflowError):
+        SW.with_global_running_sum(df, [("id", "asc")], "x", "cum", n_blocks=4)
+
+
+def test_local_frame_contract(spark):
+    """operators.util.local_frame: a JVM local relation (no Python RDD
+    behind it), exact for longs past 2^53 and NULLs, typed when empty,
+    and loud on a Python int outside int64."""
+    from shuttlestandalonedbcreator_spark.operators.util import local_frame
+
+    rows = [(0, 2**53 + 1), (1, None), (2, -(2**63)), (3, 2**63 - 1)]
+    df = local_frame(spark, rows, "k int, v long")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert [tuple(r) for r in df.collect()] == rows
+
+    empty = local_frame(spark, [], "query_id long, score double, rank int")
+    assert empty.schema.simpleString() == (
+        "struct<query_id:bigint,score:double,rank:int>"
+    )
+    assert empty.count() == 0
+
+    with pytest.raises(OverflowError):
+        local_frame(spark, [(2**63,)], "v long")
+
+
 def test_running_sum_null_values_match_global_window(spark):
     """NULLs in value_col: the stitch's non-null count reproduces the
     window's exact semantics — NULL until the first non-null value in
