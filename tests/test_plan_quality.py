@@ -458,10 +458,10 @@ def test_event_type_islands_single_exchange(spark, sf_small):
 
 
 def test_metrics_report_walks_final_adaptive_plan(spark, sf_small):
-    """tools/metrics_report.py must traverse THROUGH adaptive/query-stage
+    """tools/entry_profile.py --metrics must traverse THROUGH adaptive/query-stage
     shells down to the scans, with populated row metrics (the runtime
-    complement of these static plan gates)."""
-    from tools.metrics_report import walk
+    complement of these static plan gates) and per-node timings."""
+    from tools.entry_profile import walk
 
     df = CATALOG["join_agg_revenue"].spark(spark, sf_small)
     df.collect()
@@ -470,6 +470,8 @@ def test_metrics_report_walks_final_adaptive_plan(spark, sf_small):
     assert any("Scan parquet" in n for n in names), names
     scans = [m for _, n, m in rows if "Scan parquet" in n]
     assert all(m.get("numOutputRows", 0) > 0 for m in scans)
+    codegen = [m for _, n, m in rows if n.startswith("WholeStageCodegen")]
+    assert codegen and all("pipelineTime" in m for m in codegen), codegen
 
 
 def test_q4_semi_join_with_date_residual(spark, sf_small):

@@ -1,0 +1,57 @@
+"""The developer tools: the profiling CLI's plan capture and layer split,
+README's layout listing every tool, and no tool shadowing the stdlib."""
+
+from __future__ import annotations
+
+import os
+import re
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_profile_plan_capture_and_layers(spark, sf_small, capsys):
+    """`--plan` prints the plan of every frame the build checkpoints, taken
+    before lineage truncation, and the final plan; `--layers` reports the
+    build / plan / exec spans with their job counts."""
+    from tools.entry_profile import layers, profile
+
+    profile(spark, sf_small, "gini_revenue", plan=True, metrics=False, layer=False)
+    parts = re.split(r"^== gini_revenue: (.+) ==$", capsys.readouterr().out, flags=re.M)
+    sections = list(zip(parts[1::2], parts[2::2]))
+    titles = [t for t, _ in sections]
+    assert titles[-1] == "final plan" and len(titles) >= 2, titles
+    assert all(t.startswith("pre-checkpoint plan") for t in titles[:-1]), titles
+    # the checkpointed frame shows its real scan; the final plan only the
+    # checkpoint's RDD
+    assert "Scan parquet" in sections[0][1]
+    assert "Scan ExistingRDD" in sections[-1][1]
+
+    spans = layers(spark, sf_small, "gini_revenue")
+    assert list(spans) == ["build", "plan", "exec"]
+    assert spans["build"]["jobs"] >= 1 and spans["exec"]["jobs"] >= 1, spans
+    assert all(sp["s"] > 0 for sp in spans.values())
+
+
+def test_readme_layout_names_every_tool():
+    """README's layout section lists every tools/*.py, and every tool it
+    lists exists."""
+    with open(os.path.join(REPO, "README.md")) as fh:
+        readme = fh.read()
+    layout = readme.split("## Layout", 1)[1].split("\n## ", 1)[0]
+    named = set(re.findall(r"tools/(\w+)\.py", layout))
+    present = {
+        f[:-3] for f in os.listdir(os.path.join(REPO, "tools"))
+        if f.endswith(".py") and f != "__init__.py"
+    }
+    assert present - named == set(), "tools missing from README layout"
+    assert named - present == set(), "README layout names missing tools"
+
+
+def test_no_tool_shadows_a_stdlib_module():
+    """A script run as `python tools/X.py` puts tools/ ahead of the stdlib
+    on sys.path, so a tools/profile.py would be the `profile` that cProfile
+    (imported by pyspark) loads, and every tool would fail to import
+    pyspark."""
+    stems = {f[:-3] for f in os.listdir(os.path.join(REPO, "tools")) if f.endswith(".py")}
+    assert stems & sys.stdlib_module_names == set()

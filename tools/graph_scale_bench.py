@@ -20,7 +20,7 @@ of "it ran":
 - triangles: count == base * REP exactly.
 
 Per (op, REP): wall seconds + shuffle read/write deltas from the same
-REST status API sf1_pipeline.py uses, so an op whose shuffle grows
+status-store totals sf1_pipeline.py uses, so an op whose shuffle grows
 faster than REP is visible immediately. Replication itself is a narrow
 map (one crossJoin with a REP-row range, no shuffle).
 

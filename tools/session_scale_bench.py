@@ -20,7 +20,7 @@ closed-form expectations instead of "it ran":
   the distinct count).
 
 Per (op, REP): wall seconds + shuffle read/write deltas from the same
-REST status API sf1_pipeline.py uses — the session agg is ONE shuffle
+status-store totals sf1_pipeline.py uses — the session agg is ONE shuffle
 on user_id, so shuffle volume must scale linearly with REP.
 Replication itself is a narrow map (broadcast range crossJoin).
 

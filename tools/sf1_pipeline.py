@@ -79,29 +79,12 @@ def replicate(docs, replicas: int):
 
 
 def _shuffle_totals(spark) -> tuple[int, int]:
-    """(read_bytes, write_bytes) summed over all completed stages.
-
-    Primary source: the REST status API (/api/v1/.../stages) — a stable,
-    documented surface. Fallback: the AppStatusStore via py4j, whose
-    `stageList$default$N` compiler-generated default-argument accessors
-    can break across Spark minor versions; a final fallback of (0, 0)
-    keeps the rehearsal running with shuffle columns marked absent
-    rather than crashing a measurement tool."""
-    try:
-        import json as _json
-        import urllib.request
-
-        sc = spark.sparkContext
-        base = sc.uiWebUrl
-        if base:
-            url = f"{base}/api/v1/applications/{sc.applicationId}/stages"
-            with urllib.request.urlopen(url, timeout=10) as resp:
-                stages = _json.load(resp)
-            rd = sum(s.get("shuffleReadBytes", 0) for s in stages)
-            wr = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-            return rd, wr
-    except Exception:
-        pass
+    """(read_bytes, write_bytes) summed over all completed stages, from the
+    AppStatusStore via py4j. `get_spark` disables the UI, so there is no
+    REST status API to read. The store's `stageList$default$N`
+    compiler-generated default-argument accessors can break across Spark
+    minor versions; a fallback of (0, 0) keeps the rehearsal running with
+    shuffle columns marked absent rather than crashing a measurement tool."""
     try:
         store = spark.sparkContext._jsc.sc().statusStore()
         # stageList(statuses, details, withSummaries, quantiles,
