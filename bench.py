@@ -1,4 +1,4 @@
-"""Benchmark runner: times the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark runner: times every CATALOG query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line {"metric", "value", "unit": "sec", "queries": {...}, "sf"}.
 
@@ -42,246 +42,8 @@ from shuttlestandalonedbcreator_spark.session import (  # noqa: E402
     spark_graft_cpus,
 )
 
-HEADLINE = (
-    "status_summary",
-    "pricing_summary",
-    "join_agg_revenue",
-    "orders_by_month",
-    "broadcast_lookup",
-    "dedup_last_wins",
-    "window_running_sum",
-    "window_lag_delta",
-    "sessionization",
-    "finalized_sessions",
-    "asof_join",
-    "rollup_counts",
-    "pivot_counts",
-    "count_distinct",
-    "range_join_buckets",
-    "hierarchy_closure",
-    "exact_dedup",
-    "ngram_jaccard_dedup",
-    "minhash_lsh_dedup",
-    "simhash",
-    "embedding_topk",
-    "embedding_topk_blas",
-    "embedding_cosine_neardup",
-    "embedding_cosine_neardup_lsh",
-    "text_token_stats",
-    "text_quality",
-    "train_val_test_split",
-    "stratified_sample",
-    "sequence_packing",
-    "text_repetition",
-    "neardup_clusters",
-    "json_extract_agg",
-    "gapfill_hourly",
-    "semi_join_exists",
-    "anti_join_orphans",
-    "cube_counts",
-    "histogram_price",
-    "column_profile",
-    "vocab_build",
-    "zscore_outliers",
-    "normalize_text",
-    "gapfill_locf",
-    "funnel_conversion",
-    "retention_cohorts",
-    "local_supplier_revenue",
-    "pandas_udaf_weighted",
-    "benchmark_decontamination",
-    "weighted_sample",
-    "length_percentile_gate",
-    "doc_chunking",
-    "canonical_pick",
-    "shipping_priority",
-    "grouping_sets",
-    "embedding_centroids",
-    "edit_distance_neardup",
-    "large_orders",
-    "snapshot_diff",
-    "mixture_sample",
-    "sole_late_supplier",
-    "promo_revenue_share",
-    "disjunctive_revenue",
-    "dormant_rich_customers",
-    "metrics_unpivot",
-    "forecast_revenue",
-    "nation_revenue_share",
-    "k_anonymity_audit",
-    "pii_scrub",
-    "cheapest_supplier_per_part",
-    "per_source_cap",
-    "json_variant_extract",
-    "boilerplate_ngrams",
-    "salted_join_revenue",
-    "numeric_correlations",
-    "order_priority_checks",
-    "volume_shipping",
-    "market_share",
-    "product_profit",
-    "returned_item_customers",
-    "important_parts",
-    "customer_order_distribution",
-    "top_revenue_supplier",
-    "supplier_part_variety",
-    "small_qty_avg_revenue",
-    "qualified_green_suppliers",
-    "containment_neardup",
-    "unigram_surprisal",
-    "cross_source_canonical",
-    "shuffle_shards",
-    "neardup_prune",
-    "embedding_quantization",
-    "event_type_islands",
-    "dq_audit",
-    "mad_outliers",
-    "lang_entropy_by_source",
-    "chi_square_independence",
-    "set_ops_all",
-    "null_safe_join",
-    "shipmode_priority_counts",
-    "subtree_rollup",
-    "asof_forward_tolerance",
-    "id_gap_audit",
-    "change_feed",
-    "token_id_encode",
-    "sentence_boilerplate",
-    "groupwise_minmax_norm",
-    "langid_confusion",
-    "feature_drift_psi",
-    "url_canonicalize",
-    "intra_doc_line_dedup",
-    "embedding_neardup_prune",
-    "window_frames",
-    "nearest_centroid_assign",
-    "time_weighted_avg",
-    "bpe_train_merges",
-    "bigram_perplexity",
-    "classifier_auc",
-    "dedup_cascade",
-    # coverage tail: every remaining catalog entry gets a recorded
-    # wall-time (VERDICT r3 #7 — no silent bench gaps)
-    "files_filter",
-    "folders_filter",
-    "grouped_count",
-    "global_count",
-    "distinct_values",
-    "top_k",
-    "hierarchy_closure_logn",
-    "path_functions",
-    "excel_serial",
-    "set_ops",
-    "sql_adhoc",
-    "window_rank",
-    "tumbling_window",
-    "embedding_lsh_topk",
-    "embedding_ivf_topk",
-    "embedding_ivf_contract",
-    "approx_aggregates",
-    "approx_aggregates_audit",
-    "split_contamination",
-    "curation_funnel",
-    "incremental_neardup",
-    "exact_percentiles",
-    "below_avg_qty",
-    "window_distribution",
-    "rolling_hour_count",
-    "tfidf_top_terms",
-    "multimodal_metadata",
-    "multimodal_frame_sample",
-    "winnowing_fingerprints",
-    "hard_negative_mining",
-    # round-4 widening
-    "interval_attribution",
-    "conversion_funnel",
-    "sparse_cosine_topk",
-    "classifier_calibration",
-    "frequent_tokens",
-    "cohens_kappa",
-    "pareto_frontier",
-    "mutual_information",
-    "session_concurrency",
-    "copurchase_lift",
-    "rfm_segmentation",
-    "event_transition_matrix",
-    "dup_graph_triangles",
-    "approx_topk_audit",
-    "rolling_anomaly_zscore",
-    "revenue_concentration",
-    "price_proximity_join",
-    "lexical_diversity",
-    "customer_max_drawdown",
-    "weighted_median",
-    "trend_slope_by_type",
-    "cumulative_distinct_users",
-    "benford_audit",
-    "ks_drift",
-    "scd2_dimension",
-    "proration_allocate",
-    "pmi_collocations",
-    "gini_revenue",
-    "session_paths",
-    "record_linkage",
-    "pagerank_fixed",
-    "woe_information_value",
-    "autocorr_daily",
-    "token_burstiness",
-    "stratified_split_exact",
-    "mom_growth",
-    "abc_classification",
-    "decile_lift",
-    "spearman_corr",
-    "conversion_lag_quantiles",
-    "graph_degree_distribution",
-    "compression_ratio_gate",
-    "column_entropy_profile",
-    "reciprocal_rank_fusion",
-    "scd2_point_in_time",
-    "bm25_topk",
-    "key_skew_profile",
-    "active_users_28d",
-    "decayed_rolling_sum",
-    "exact_substring_spans",
-    "dsir_importance",
-    "hashed_classifier_infer",
-    "temperature_mixture",
-    "datacard_report",
-    "paragraph_dedup_rebuild",
-    "prefix_filter_jaccard",
-    "minhash_estimate_audit",
-    "perplexity_buckets",
-    "html_strip_extract",
-    "power_iteration_topvec",
-    "kcore_decomposition",
-    "abtt_residual",
-    "tokenizer_fertility",
-    "wilson_lower_bound",
-    "cross_source_dup_matrix",
-    "hashing_tf_vectorize",
-    "lsh_tuning_audit",
-    "moment_profile",
-    "l_diversity_audit",
-    "neardup_keep_longest",
-    "epoch_mixing_plan",
-    "ngram_novelty",
-    "revenue_waterfall",
-    "simpson_diversity",
-    "trimmed_mean",
-    "ab_test_welch",
-    "cuped_adjustment",
-    "theil_index",
-    "mann_kendall_trend",
-    # round-6 widening
-    "image_dhash_neardup",
-    "image_quality_gate",
-    # round-7 widening
-    "audio_fingerprint",
-    "video_keyframes",
-)
-
 # Family assignment for the compact summary line (full per-query map goes
-# to BENCH_DETAIL.json). Every HEADLINE entry must appear exactly once.
+# to BENCH_DETAIL.json). Every CATALOG entry must appear exactly once.
 FAMILIES: dict[str, tuple[str, ...]] = {
     "reference": (
         "status_summary", "broadcast_lookup", "dedup_last_wins",
@@ -780,8 +542,7 @@ def main() -> None:
     fixtures = fixture_hashes(sf_dir, row_counts)
 
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        qd = CATALOG[name]
+    for name, qd in CATALOG.items():
         # steady-state timing: best of 2 runs (first run absorbs JIT/plan
         # warmup noise that has nothing to do with the operator)
         best = None

@@ -7,6 +7,8 @@ All pure JVM column expressions — scale-free per-row maps, no shuffle.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -21,6 +23,18 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "que", "de", "es"),
     "zh": ("de5", "shi4", "bu4", "le5", "zai4"),
 }
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    Catalyst's CollapseProject substitutes a projected expression into
+    every reference, and neither codegen CSE nor higher-order-function
+    lambda bodies recover it, so an expression ``body`` reads k times
+    runs k times. Passing it through a 1-element ``transform`` binds it
+    to the lambda variable instead: it runs once and ``body`` reads the
+    variable."""
+    return F.get(F.transform(F.array(value), body), 0)
 
 
 def word_tokens(col: Column) -> Column:
@@ -44,11 +58,16 @@ def bpe_ish_token_count(col: Column) -> Column:
 
 
 def stopword_ratio(col: Column, stopwords: tuple[str, ...] = LANG_MARKERS["en"]) -> Column:
-    toks = word_tokens(col)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return F.when(F.size(toks) > 0, hits.cast("double") / F.size(toks).cast("double")).otherwise(
-        F.lit(0.0)
-    )
+    """Share of word tokens that are ``stopwords``; 0.0 for a text with
+    no tokens. The tokenization is let-bound once."""
+
+    def ratio(toks: Column) -> Column:
+        hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
+        return F.when(
+            F.size(toks) > 0, hits.cast("double") / F.size(toks).cast("double")
+        ).otherwise(F.lit(0.0))
+
+    return let(word_tokens(col), ratio)
 
 
 def punct_ratio(col: Column) -> Column:
@@ -63,14 +82,9 @@ def quality_score(col: Column, toks: Column | None = None) -> Column:
 
     Pass a pre-materialized token-array column as ``toks`` to share one
     tokenization across several metrics; with ``toks=None`` the
-    tokenization is LET-BOUND internally (transform over a 1-element
-    array — Catalyst's collapsed projections would otherwise substitute
-    the regex split into every reference)."""
+    tokenization is let-bound once."""
     if toks is None:
-        return F.get(
-            F.transform(F.array(word_tokens(col)), lambda t: quality_score(col, t)),
-            0,
-        )
+        return let(word_tokens(col), lambda t: quality_score(col, t))
     n_tok = F.size(toks).cast("long")
     mean_wl = F.when(
         n_tok > 0,
@@ -88,12 +102,10 @@ def quality_score(col: Column, toks: Column | None = None) -> Column:
 def lang_id(col: Column, toks: Column | None = None) -> Column:
     """Marker-lexicon language guess: language with the most marker hits;
     'und' (undetermined) when nothing matches. With ``toks=None`` the
-    tokenization is let-bound once (see quality_score) instead of being
-    re-substituted into each of the five marker filters."""
+    tokenization is let-bound once instead of being re-substituted into
+    each of the five marker filters."""
     if toks is None:
-        return F.get(
-            F.transform(F.array(word_tokens(col)), lambda t: lang_id(col, t)), 0
-        )
+        return let(word_tokens(col), lambda t: lang_id(col, t))
     scores = [
         F.size(F.filter(toks, lambda t: t.isin(*markers))).alias(lang)
         for lang, markers in LANG_MARKERS.items()
@@ -123,6 +135,19 @@ def word_ngrams_all(toks: Column, n: int) -> Column:
             lambda i: F.array_join(F.slice(toks, i, n), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def word_bigrams(toks: Column) -> Column:
+    """Adjacent token pairs of a token array as ``struct(w1, w2)`` in
+    order; empty for fewer than 2 tokens. Reads ``toks`` three times, so
+    pass a column or a ``let`` variable, not a tokenizer expression."""
+    # slice rejects a negative length, which a 0-token array would give
+    n = F.greatest(F.size(toks) - 1, F.lit(0))
+    return F.zip_with(
+        F.slice(toks, 1, n),
+        F.slice(toks, 2, n),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
 
 
 def _max_run(sorted_arr: Column) -> Column:

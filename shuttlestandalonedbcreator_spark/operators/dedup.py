@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from shuttlestandalonedbcreator_spark.functions.text import let
 from shuttlestandalonedbcreator_spark.operators.util import fan_out
 
 
@@ -104,8 +105,6 @@ def word_ngrams(col: Column, n: int) -> Column:
     if n == 1:
         return F.array_distinct(tokens(col))
 
-    # let-bind the token array (one tokenizer eval per row, not per gram —
-    # no CSE across lambda boundaries, see word_ngram_hashes)
     def grams_of(t: Column) -> Column:
         counts = F.size(t) - F.lit(n - 1)
         # sequence(1, 0) would produce a DESCENDING [1, 0] — guard explicitly
@@ -114,8 +113,7 @@ def word_ngrams(col: Column, n: int) -> Column:
             lambda i: F.array_join(F.slice(t, i, n), " "),
         )).otherwise(F.array().cast("array<string>"))
 
-    bound = F.flatten(F.transform(F.array(tokens(col)), grams_of))
-    return F.array_distinct(bound)
+    return F.array_distinct(let(tokens(col), grams_of))
 
 
 def word_ngram_hashes(col: Column, n: int) -> Column:
@@ -128,10 +126,9 @@ def word_ngram_hashes(col: Column, n: int) -> Column:
     hash-keyed shuffle). NOT for minhash signatures, which the oracle
     must replay hash-for-hash (md5 family there).
 
-    The token array is LET-BOUND through a single-element-array HOF so it
-    evaluates once per row — referencing ``tokens(col)`` directly inside
-    the per-gram lambda re-evaluates the tokenizer per element reference
-    (measured ~10× slower; no CSE across lambda boundaries).
+    The token array is let-bound: referencing ``tokens(col)`` directly
+    inside the per-gram lambda re-evaluates the tokenizer per element
+    reference (measured ~10× slower).
     """
     def grams_of(t: Column) -> Column:
         counts = F.size(t) - F.lit(n - 1)
@@ -141,8 +138,7 @@ def word_ngram_hashes(col: Column, n: int) -> Column:
             lambda i: F.xxhash64(*[F.element_at(t, i + j) for j in range(n)]),
         )).otherwise(F.array().cast("array<bigint>"))
 
-    bound = F.flatten(F.transform(F.array(tokens(col)), grams_of))
-    return F.array_distinct(bound)
+    return F.array_distinct(let(tokens(col), grams_of))
 
 
 def _ngram_pair_intersections(

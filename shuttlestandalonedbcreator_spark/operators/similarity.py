@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from shuttlestandalonedbcreator_spark.functions.text import let
 from shuttlestandalonedbcreator_spark.operators.dedup import md5_long
 from shuttlestandalonedbcreator_spark.operators.util import (
     bounded_broadcast,
@@ -55,21 +56,10 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def unit_vector(v: Column) -> Column:
-    """L2-normalize with the norm LET-BOUND via a 1-element array transform.
-
-    The naive `transform(v, x -> x / norm(v))` looks linear but is
-    quadratic after CollapseProject: HOF lambda bodies get no
-    common-subexpression elimination, so the norm's 64-element fold
-    re-evaluates per ELEMENT (64×64 ops/row). Binding it as a lambda
-    variable evaluates it once per row (the dedup.py:word_ngram_hashes
-    trick)."""
-    return F.element_at(
-        F.transform(
-            F.array(norm(v)),
-            lambda nrm: F.transform(v, lambda x: x.cast("double") / nrm),
-        ),
-        1,
-    )
+    """L2-normalize with the norm let-bound: the naive
+    `transform(v, x -> x / norm(v))` re-evaluates the norm's 64-element
+    fold per ELEMENT (64×64 ops/row)."""
+    return let(norm(v), lambda nrm: F.transform(v, lambda x: x.cast("double") / nrm))
 
 
 def brute_force_topk(
@@ -398,7 +388,7 @@ def cosine_neardup_pairs(
     tagged = unit.select(
         "_id",
         "_u",
-        F.element_at(F.transform(F.array(F.col("_u")), bucket_of), 1).alias("_bucket"),
+        let(F.col("_u"), bucket_of).alias("_bucket"),
     )
     # r10: pairs meet via ONE bucket-keyed exchange into posting lists
     # (the `_ngram_pair_intersections` pattern, guide §2.4) instead of a

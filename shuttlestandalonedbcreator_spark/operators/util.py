@@ -51,6 +51,12 @@ def bounded_broadcast(df: DataFrame, kind: str) -> DataFrame:
     return F.broadcast(df)
 
 
+# Driver-memory cap of bounded_collect in estimated bytes: the schema's
+# Catalyst row width (StructType.defaultSize — fixed-width types at their
+# size, 20 B per string, an array or map at ONE element) times the rows.
+MAX_COLLECT_BYTES = 1 << 30
+
+
 def bounded_collect(df: DataFrame, kind: str, max_rows: int = 2_000_000,
                     hint: str = "") -> list:
     """The ONLY sanctioned way to ``collect()`` an UNBOUNDED-shaped frame
@@ -65,6 +71,8 @@ def bounded_collect(df: DataFrame, kind: str, max_rows: int = 2_000_000,
     with ``hint`` naming the scale-safe alternative (e.g. the
     ``exact=False`` LSH path for the exact cosine baseline). Under the
     cap ``limit`` returns every row, so callers see the full result.
+    ``MAX_COLLECT_BYTES`` tightens the row cap the same way for wide
+    rows: at most ``MAX_COLLECT_BYTES // row width`` rows come back.
     Collects that are already bounded by construction (``.limit(k)``,
     a ≤n_blocks aggregate, an explicit size gate) stay raw — the
     plan-quality source gate pins their exact census.
@@ -74,10 +82,16 @@ def bounded_collect(df: DataFrame, kind: str, max_rows: int = 2_000_000,
             f"driver collect needs a bounded-size justification, one of "
             f"{sorted(_BOUNDED_KINDS)}; got {kind!r}"
         )
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    width = max(df._jdf.schema().defaultSize(), 1)
+    cap = min(max_rows, MAX_COLLECT_BYTES // width)
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        bound = (
+            f"{max_rows} rows" if cap == max_rows
+            else f"{MAX_COLLECT_BYTES} estimated bytes ({width} B/row)"
+        )
         raise ValueError(
-            f"bounded_collect({kind!r}): side exceeded {max_rows} rows"
+            f"bounded_collect({kind!r}): side exceeded {bound}"
             + (f" — {hint}" if hint else "")
         )
     return rows

@@ -24,7 +24,7 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from shuttlestandalonedbcreator_spark.functions.dates import excel_serial_to_timestamp
@@ -43,7 +43,6 @@ from shuttlestandalonedbcreator_spark.operators.util import (
     local_frame,
 )
 from shuttlestandalonedbcreator_spark.operators.hierarchy import (
-    hierarchy_closure,
     hierarchy_closure_doubling,
     hierarchy_closure_sql,
 )
@@ -293,9 +292,9 @@ SELECT event_id, user_id, event_type, value FROM (
 """
 
 
-def q_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 (recursive CTE hierarchy :902-912) over a 3-level synthetic tree
-    region→nation→customer, walked by the iterative join-union loop."""
+def _hierarchy_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 3-level synthetic tree region→nation→customer as
+    (node_id, parent_id, name) rows; regions are the roots."""
     region = _t(spark, sf_dir, "region").select(
         F.concat(F.lit("R"), F.col("r_regionkey")).alias("node_id"),
         F.lit(None).cast("string").alias("parent_id"),
@@ -311,13 +310,15 @@ def q_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("N"), F.col("c_nationkey")).alias("parent_id"),
         F.col("c_name").alias("name"),
     )
-    nodes = region.unionByName(nation).unionByName(customer)
-    try:
-        # Spark 4 native WITH RECURSIVE (UnionLoop) — no per-level Python
-        # round-trips; fall back to the iterative loop pre-4.0
-        return hierarchy_closure_sql(spark, nodes, "node_id", "parent_id", "name")
-    except Exception:
-        return hierarchy_closure(nodes, "node_id", "parent_id", "name")
+    return region.unionByName(nation).unionByName(customer)
+
+
+def q_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J2 (recursive CTE hierarchy :902-912) over the region→nation→customer
+    tree, walked by Spark's native WITH RECURSIVE (UnionLoop) — no
+    per-level Python round-trips."""
+    nodes = _hierarchy_nodes(spark, sf_dir)
+    return hierarchy_closure_sql(spark, nodes, "node_id", "parent_id", "name")
 
 
 def q_hierarchy_closure_logn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,22 +327,7 @@ def q_hierarchy_closure_logn(spark: SparkSession, sf_dir: str) -> DataFrame:
     — measured 10k-deep path in ~90 s where the per-level frontier loop
     projects to hours). Same tree, same output contract, same oracle as
     `hierarchy_closure`."""
-    region = _t(spark, sf_dir, "region").select(
-        F.concat(F.lit("R"), F.col("r_regionkey")).alias("node_id"),
-        F.lit(None).cast("string").alias("parent_id"),
-        F.col("r_name").alias("name"),
-    )
-    nation = _t(spark, sf_dir, "nation").select(
-        F.concat(F.lit("N"), F.col("n_nationkey")).alias("node_id"),
-        F.concat(F.lit("R"), F.col("n_regionkey")).alias("parent_id"),
-        F.col("n_name").alias("name"),
-    )
-    customer = _t(spark, sf_dir, "customer").select(
-        F.concat(F.lit("C"), F.col("c_custkey")).alias("node_id"),
-        F.concat(F.lit("N"), F.col("c_nationkey")).alias("parent_id"),
-        F.col("c_name").alias("name"),
-    )
-    nodes = region.unionByName(nation).unionByName(customer)
+    nodes = _hierarchy_nodes(spark, sf_dir)
     return hierarchy_closure_doubling(nodes, "node_id", "parent_id", "name")
 
 
@@ -1434,6 +1420,57 @@ def _image_idiv(c, k):
     return F.call_function("div", c, F.lit(k).cast("long"))
 
 
+def _banded_hamming_pairs(
+    hashed: DataFrame, id_col: str, band_values: list[Column]
+) -> DataFrame:
+    """Near-duplicate pairs of 64-bit (hi, lo) hashes: Hamming distance
+    <= 6, candidates taken from 16-bit bands (``band_values``, one
+    column expression per band) and ``same_source`` when the two ids
+    halve to one source id.
+
+    Candidates and verification share ONE band-keyed exchange (the
+    posting-list pattern of _ngram_pair_intersections, guide §2.4): hi/lo
+    ride the posting lists and the exact Hamming check runs inside the
+    pair expansion, so only true near-dup pairs reach the dedup exchange
+    (guide §2.3)."""
+    bands = hashed.select(
+        id_col,
+        "hi",
+        "lo",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(k).alias("band"), v.alias("bv"))
+                    for k, v in enumerate(band_values)
+                ]
+            )
+        ).alias("b"),
+    ).select(id_col, "hi", "lo", "b.band", "b.bv")
+    grouped = (
+        bands.groupBy("band", "bv")
+        .agg(F.array_sort(F.collect_list(F.struct(id_col, "hi", "lo"))).alias("_m"))
+        .filter(F.size("_m") >= 2)
+    )
+    pairs = grouped.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(_m, (x, i) -> "
+                "filter(transform(slice(_m, i + 2, size(_m)), "
+                f"y -> struct(x.{id_col} AS id_a, y.{id_col} AS id_b, "
+                "CAST(bit_count(x.hi ^ y.hi) + bit_count(x.lo ^ y.lo) AS INT)"
+                " AS hamming)), "
+                "p -> p.hamming <= 6)))"
+            )
+        ).alias("_p")
+    ).select("_p.id_a", "_p.id_b", "_p.hamming")
+    return pairs.distinct().select(
+        "id_a", "id_b", "hamming",
+        (
+            _image_idiv(F.col("id_a"), 2) == _image_idiv(F.col("id_b"), 2)
+        ).alias("same_source"),
+    )
+
+
 def q_image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-duplicate pairs via dHash + banded LSH —
     the image member of the dedup family (exact / MinHash / SimHash /
@@ -1516,49 +1553,15 @@ def q_image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"img_id": pdf["img_id"], "hi": his, "lo": los})
 
     hashed = imgs.mapInPandas(codec, "img_id long, hi long, lo long")
-    # r10: candidates + verification in ONE band-keyed exchange (the
-    # posting-list pattern of _ngram_pair_intersections, guide §2.4),
-    # with the exact Hamming check applied INSIDE the expansion — the
-    # two-sided band self-join, its pair `.distinct()`, the two verify
-    # joins back to the hash table, and the localCheckpoint that fed
-    # them are all gone; only true near-dup pairs reach the dedup
-    # exchange (guide §2.3). hi/lo ride the posting lists, so the pairs
-    # that survive carry everything verification needs.
-    bands = hashed.select(
+    return _banded_hamming_pairs(
+        hashed,
         "img_id",
-        "hi",
-        "lo",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("band"), (F.col("hi") % 65536).alias("bv")),
-                F.struct(F.lit(1).alias("band"), _image_idiv(F.col("hi"), 65536).alias("bv")),
-                F.struct(F.lit(2).alias("band"), (F.col("lo") % 65536).alias("bv")),
-                F.struct(F.lit(3).alias("band"), _image_idiv(F.col("lo"), 65536).alias("bv")),
-            )
-        ).alias("b"),
-    ).select("img_id", "hi", "lo", "b.band", "b.bv")
-    grouped = (
-        bands.groupBy("band", "bv")
-        .agg(F.array_sort(F.collect_list(F.struct("img_id", "hi", "lo"))).alias("_m"))
-        .filter(F.size("_m") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(_m, (x, i) -> "
-                "filter(transform(slice(_m, i + 2, size(_m)), "
-                "y -> struct(x.img_id AS id_a, y.img_id AS id_b, "
-                "CAST(bit_count(x.hi ^ y.hi) + bit_count(x.lo ^ y.lo) AS INT)"
-                " AS hamming)), "
-                "p -> p.hamming <= 6)))"
-            )
-        ).alias("_p")
-    ).select("_p.id_a", "_p.id_b", "_p.hamming")
-    return pairs.distinct().select(
-        "id_a", "id_b", "hamming",
-        (
-            _image_idiv(F.col("id_a"), 2) == _image_idiv(F.col("id_b"), 2)
-        ).alias("same_source"),
+        [
+            F.col("hi") % 65536,
+            _image_idiv(F.col("hi"), 65536),
+            F.col("lo") % 65536,
+            _image_idiv(F.col("lo"), 65536),
+        ],
     )
 
 
@@ -1890,49 +1893,8 @@ def q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         fold(F.sequence(F.lit(102), F.lit(2), F.lit(-4))).alias("b2"),
         fold(F.sequence(F.lit(103), F.lit(3), F.lit(-4))).alias("b3"),
     )
-    # r10: candidates + verification in ONE band-keyed exchange (the
-    # posting-list pattern of _ngram_pair_intersections, guide §2.4),
-    # with the exact Hamming check applied INSIDE the expansion — the
-    # two-sided band self-join, its pair `.distinct()`, the two verify
-    # joins, and the localCheckpoint that fed them are all gone; only
-    # true near-dup pairs reach the dedup exchange (guide §2.3).
-    bands = hashed.select(
-        "track_id",
-        "hi",
-        "lo",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(k).alias("band"), F.col(f"b{k}").alias("bv"))
-                    for k in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("track_id", "hi", "lo", "b.band", "b.bv")
-    grouped = (
-        bands.groupBy("band", "bv")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("track_id", "hi", "lo"))).alias("_m")
-        )
-        .filter(F.size("_m") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(_m, (x, i) -> "
-                "filter(transform(slice(_m, i + 2, size(_m)), "
-                "y -> struct(x.track_id AS id_a, y.track_id AS id_b, "
-                "CAST(bit_count(x.hi ^ y.hi) + bit_count(x.lo ^ y.lo) AS INT)"
-                " AS hamming)), "
-                "p -> p.hamming <= 6)))"
-            )
-        ).alias("_p")
-    ).select("_p.id_a", "_p.id_b", "_p.hamming")
-    return pairs.distinct().select(
-        "id_a", "id_b", "hamming",
-        (
-            _image_idiv(F.col("id_a"), 2) == _image_idiv(F.col("id_b"), 2)
-        ).alias("same_source"),
+    return _banded_hamming_pairs(
+        hashed, "track_id", [F.col(f"b{k}") for k in range(4)]
     )
 
 
@@ -4517,16 +4479,11 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" "),
         F.col("text"),
     )
-    # let-bind the scrubbed string: hash + length both read it, and
-    # CollapseProject would otherwise run the 3 regexp_replace passes twice
-    red = F.element_at(
-        F.transform(
-            F.array(scrub_pii(injected)),
-            lambda s: F.struct(
-                F.md5(s).alias("h"), F.length(s).cast("long").alias("n")
-            ),
-        ),
-        1,
+    # hash + length both read the scrubbed string: let-bind its 3
+    # regexp_replace passes
+    red = T.let(
+        scrub_pii(injected),
+        lambda s: F.struct(F.md5(s).alias("h"), F.length(s).cast("long").alias("n")),
     )
     return docs.select(
         "doc_id",
@@ -5707,12 +5664,9 @@ def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = F.array_max(F.transform(dv, lambda x: F.abs(x)))
     scale = mx / F.lit(127.0)
 
-    # HOF-CSE trap (NOTES.md): referencing `scale` (an O(dim) array_max)
-    # inside a per-element lambda re-evaluates it PER ELEMENT → O(dim²)
-    # per row. Let-bind it once per row via transform(array(scale), s →
-    # struct(...)) so every per-element lambda sees the lambda VARIABLE
-    # (measured ~4× on dim=64). Value trees per element are unchanged, so
-    # the oracle still matches bit-for-bit.
+    # `scale` is an O(dim) array_max: read inside a per-element lambda it
+    # would re-run PER ELEMENT → O(dim²) per row, so it is let-bound
+    # (measured ~4× on dim=64)
     def _stats(s: F.Column) -> F.Column:
         q = F.transform(dv, lambda x: F.round(x / s).cast("long"))
         err = F.zip_with(dv, q, lambda x, qq: F.abs(x - qq.cast("double") * s))
@@ -5727,7 +5681,7 @@ def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    packed = F.get(F.transform(F.array(scale), _stats), 0)
+    packed = T.let(scale, _stats)
     return emb.select("vec_id", packed.alias("_p")).select(
         "vec_id",
         F.round(F.col("_p.s"), 6).alias("scale"),
@@ -8464,44 +8418,19 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style LM quality filter, self-trained: per-doc mean negative
-    log-likelihood under an add-one-smoothed BIGRAM model fit on the
-    corpus itself — the standard perplexity gate that drops gibberish
-    and keeps fluent text, one step up from `unigram_surprisal`.
-    p(w2|w1) = (c(w1,w2)+1) / (c(w1,·)+V), V = |distinct first words|.
-
-    Plan: bigram counts aggregate once (keyed shuffle, map-side
-    partials); the conditional's denominator rides the same table
-    re-grouped by w1 (tiny); per-instance −ln p is rounded to integer
-    micro-nats BEFORE the per-doc sum (exact accumulation both engines).
-    Docs with <2 tokens have no bigrams and drop out (documented).
-    Ships avg_nll, not exp(avg) — libm exp is not cross-engine
-    reproducible, e^x is the consumer's one-liner."""
-    from shuttlestandalonedbcreator_spark.operators.util import fan_out
-
-    # r10: fan_out — the single-split toy parquet ran the tokenizer on
-    # one core (guide §2.2)
-    docs = fan_out(_t(spark, sf_dir, "documents"))
-    # let-bind the tokenization: three references (two slices + size)
-    # would re-run the regex split per reference otherwise
-    bg_list = F.get(
-        F.transform(
-            F.array(D.tokens(F.col("text"))),
-            lambda t: F.zip_with(
-                F.slice(t, 1, F.size(t) - 1),
-                F.slice(t, 2, F.size(t) - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            ),
-        ),
-        0,
-    )
+def _bigram_nll(docs: DataFrame) -> DataFrame:
+    """Per-doc (doc_id, n_bigrams, _s) under the add-one-smoothed bigram
+    model fit on ``docs`` itself: ``_s`` is the tf-weighted sum of each
+    bigram's −ln p(w2|w1) in integer micro-nats, p(w2|w1) =
+    (c(w1,w2)+1) / (c(w1,·)+V), V = |distinct first words|. Docs with
+    <2 tokens have no bigrams and are absent."""
+    bg_list = T.let(D.tokens(F.col("text")), T.word_bigrams)
     bg = docs.select("doc_id", F.explode(bg_list).alias("g")).select(
         "doc_id", F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2")
     )
     tf = bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("tf"))
-    # r10: tf feeds the model counts AND the scored join — the executed
-    # before-plan shows THREE parquet scans (the tokenize+explode+agg
+    # tf feeds the model counts AND the scored join — without this the
+    # executed plan shows THREE parquet scans (the tokenize+explode+agg
     # subtree re-ran per branch); one materialization serves all
     # consumers (guide §5.1)
     tf = tf.localCheckpoint(eager=True)
@@ -8523,17 +8452,35 @@ def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long"),
         )
     )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_bigrams"),
-            F.sum(F.col("tf") * F.col("_nll")).alias("_s"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            (F.col("_s") / F.col("n_bigrams") / F.lit(1e6)).alias("avg_nll"),
-        )
+    return scored.groupBy("doc_id").agg(
+        F.sum("tf").alias("n_bigrams"),
+        F.sum(F.col("tf") * F.col("_nll")).alias("_s"),
+    )
+
+
+def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style LM quality filter, self-trained: per-doc mean negative
+    log-likelihood under an add-one-smoothed BIGRAM model fit on the
+    corpus itself — the standard perplexity gate that drops gibberish
+    and keeps fluent text, one step up from `unigram_surprisal`.
+    p(w2|w1) = (c(w1,w2)+1) / (c(w1,·)+V), V = |distinct first words|.
+
+    Plan: bigram counts aggregate once (keyed shuffle, map-side
+    partials); the conditional's denominator rides the same table
+    re-grouped by w1 (tiny); per-instance −ln p is rounded to integer
+    micro-nats BEFORE the per-doc sum (exact accumulation both engines).
+    Docs with <2 tokens have no bigrams and drop out (documented).
+    Ships avg_nll, not exp(avg) — libm exp is not cross-engine
+    reproducible, e^x is the consumer's one-liner."""
+    from shuttlestandalonedbcreator_spark.operators.util import fan_out
+
+    # r10: fan_out — the single-split toy parquet ran the tokenizer on
+    # one core (guide §2.2)
+    docs = fan_out(_t(spark, sf_dir, "documents"))
+    return _bigram_nll(docs).select(
+        "doc_id",
+        "n_bigrams",
+        (F.col("_s") / F.col("n_bigrams") / F.lit(1e6)).alias("avg_nll"),
     )
 
 
@@ -8588,32 +8535,8 @@ def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window; exclusive cumneg = inclusive − own (exact
     ints), bit-identical, oracle unchanged."""
     docs = _t(spark, sf_dir, "documents")
-    # r11 (guide §1.2; the classifier_calibration finding applied to its
-    # companion): stopword_ratio internally references the tokenization
-    # three times and collapsed projections re-evaluate it (measured
-    # ~2.2× one tokenization); let-bind the token array once per row
-    # through a 1-element transform — same hits/size double division,
-    # same 0.0 empty fallback, bit-identical score values. A fix inside
-    # functions/text.py would reach all 14 consumers but re-hashes them
-    # past the driver's 50-slot walk budget (see OPTIMIZATION_r11.md) —
-    # entry-local here, operator-level fix queued for a fresh round.
-    from shuttlestandalonedbcreator_spark.functions.text import LANG_MARKERS
-
-    score = F.get(
-        F.transform(
-            F.array(T.word_tokens(F.col("text"))),
-            lambda t: F.when(
-                F.size(t) > 0,
-                F.size(
-                    F.filter(t, lambda x: x.isin(*LANG_MARKERS["en"]))
-                ).cast("double")
-                / F.size(t).cast("double"),
-            ).otherwise(F.lit(0.0)),
-        ),
-        0,
-    )
     labeled = docs.select(
-        score.alias("_s"),
+        T.stopword_ratio(F.col("text")).alias("_s"),
         (F.col("lang") == "en").cast("long").alias("_pos"),
     )
     hist = labeled.groupBy("_s").agg(
@@ -8681,23 +8604,14 @@ def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     sq = F.floor(T.stopword_ratio(F.col("text")) * 1000.0 + 0.5).cast("long")
     pos = (F.col("lang") == "en").cast("long")
-    # r11 (guide §1.2 per-task work): sq was referenced twice (bin
-    # derivation + the raw value), and CollapseProject substitutes the
-    # whole stopword_ratio tokenization into BOTH references — profiled
-    # at ~2× the single-tokenization cost. Let-bind sq through a
-    # 1-element transform (the quality_score precedent: codegen CSE does
-    # not recover expressions split across collapsed projections) so the
-    # tokenization runs once per row: entry 1.088 → 0.709 s (best-of-4,
-    # sf0.1). Values unchanged — same sq feeds both fields.
-    _r = F.get(
-        F.transform(
-            F.array(sq),
-            lambda s: F.struct(
-                F.least(F.floor(s / 100), F.lit(9)).cast("int").alias("bin"),
-                s.alias("_sq"),
-            ),
+    # the bin derivation and the raw value both read sq: let-bind it
+    # (entry 1.088 → 0.709 s, best-of-4, sf0.1)
+    _r = T.let(
+        sq,
+        lambda s: F.struct(
+            F.least(F.floor(s / 100), F.lit(9)).cast("int").alias("bin"),
+            s.alias("_sq"),
         ),
-        0,
     )
     binned = docs.select(_r.alias("_b"), pos.alias("_pos")).select(
         F.col("_b.bin").alias("bin"),
@@ -9305,17 +9219,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(F.explode(D.tokens(F.col("text"))).alias("tok"))
     cnt_w = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_w"))
     n_total = cnt_w.agg(F.sum("c_w").alias("_N"))
-    bg_list = F.get(
-        F.transform(
-            F.array(D.tokens(F.col("text"))),
-            lambda t: F.zip_with(
-                F.slice(t, 1, F.size(t) - 1),
-                F.slice(t, 2, F.size(t) - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            ),
-        ),
-        0,
-    )
+    bg_list = T.let(D.tokens(F.col("text")), T.word_bigrams)
     bg = docs.select(F.explode(bg_list).alias("g")).select("g.w1", "g.w2")
     cnt_bg = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("pair_count"))
     b_total = cnt_bg.agg(F.sum("pair_count").alias("_B"))
@@ -10910,12 +10814,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("tok"),
+        F.explode(D.tokens(F.col("text"))).alias("tok"),
     ).select(
         "doc_id",
         "lang",
@@ -11022,12 +10921,7 @@ def q_hashed_classifier_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("tok"),
+        F.explode(D.tokens(F.col("text"))).alias("tok"),
     ).select(
         "doc_id",
         (
@@ -11636,47 +11530,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join below reads its own pruned scan and needs no fan_out
     docs_raw = _t(spark, sf_dir, "documents")
     docs = fan_out(docs_raw)
-    bg_list = F.get(
-        F.transform(
-            F.array(D.tokens(F.col("text"))),
-            lambda t: F.zip_with(
-                F.slice(t, 1, F.size(t) - 1),
-                F.slice(t, 2, F.size(t) - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            ),
-        ),
-        0,
-    )
-    bg = docs.select("doc_id", F.explode(bg_list).alias("g")).select(
-        "doc_id", F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2")
-    )
-    tf = bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("tf"))
-    # r10: one materialization of tf serves the model counts and the
-    # scored join (guide §5.1 — same move as bigram_perplexity)
-    tf = tf.localCheckpoint(eager=True)
-    cnt_bg = tf.groupBy("w1", "w2").agg(F.sum("tf").alias("c_bg"))
-    cnt_w1 = cnt_bg.groupBy("w1").agg(F.sum("c_bg").alias("c_w1"))
-    vsize = cnt_w1.agg(F.count(F.lit(1)).alias("_V"))
-    scored = (
-        tf.join(cnt_bg, ["w1", "w2"])
-        .join(cnt_w1, "w1")
-        .crossJoin(bounded_broadcast(vsize, "one_row"))
-        .withColumn(
-            "_nll",
-            F.round(
-                F.log(
-                    (F.col("c_w1") + F.col("_V")).cast("double")
-                    / (F.col("c_bg") + 1).cast("double")
-                )
-                * 1_000_000
-            ).cast("long"),
-        )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sum("tf").alias("n_bigrams"),
-        F.sum(F.col("tf") * F.col("_nll")).alias("_s"),
-    )
-    enriched = per_doc.join(docs_raw.select("doc_id", "lang"), "doc_id")
+    enriched = _bigram_nll(docs).join(docs_raw.select("doc_id", "lang"), "doc_id")
     ratio = F.col("_s").cast("double") / F.col("n_bigrams").cast("double")
     wb = Window.partitionBy("lang").orderBy(ratio.asc(), F.col("doc_id").asc())
     return enriched.withColumn("nt", F.ntile(3).over(wb)).select(
@@ -12093,22 +11947,17 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     token array is let-bound once — HOF CSE rule) + one 5-group
     aggregate: zero risk at any scale."""
     docs = _t(spark, sf_dir, "documents")
-    stats = F.get(
-        F.transform(
-            F.array(D.tokens(F.col("text"))),
-            lambda t: F.struct(
-                F.size(t).cast("long").alias("nw"),
-                F.aggregate(
-                    t,
-                    F.lit(0).cast("long"),
-                    lambda acc, w: acc
-                    + F.floor((F.length(w) + F.lit(3)) / F.lit(4)).cast(
-                        "long"
-                    ),
-                ).alias("nt"),
-            ),
+    stats = T.let(
+        D.tokens(F.col("text")),
+        lambda t: F.struct(
+            F.size(t).cast("long").alias("nw"),
+            F.aggregate(
+                t,
+                F.lit(0).cast("long"),
+                lambda acc, w: acc
+                + F.floor((F.length(w) + F.lit(3)) / F.lit(4)).cast("long"),
+            ).alias("nt"),
         ),
-        0,
     )
     per_doc = docs.select(
         "lang",

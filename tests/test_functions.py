@@ -147,3 +147,77 @@ def test_pii_udtf_lateral_findings(spark):
         + F.sum(pii_count(F.col("text"), PII_IPV4_RE))
     ).first()[0]
     assert len(found) == want == 4
+
+
+def test_stopword_ratio_tokenizes_once(spark, sf_small):
+    """stopword_ratio reads its token array three times (hits, the size
+    guard, the divisor); let-bound, the optimized plan carries ONE regex
+    split instead of one per reference."""
+    from shuttlestandalonedbcreator_spark.functions.text import stopword_ratio
+
+    docs = spark.read.parquet(f"{sf_small}/documents.parquet")
+    plan = (
+        docs.select(stopword_ratio(F.col("text")).alias("r"))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("split(") == 1, plan
+
+
+def test_let_and_word_bigrams_match_inline_forms(spark):
+    """``let``, ``word_bigrams`` and the let-bound ``stopword_ratio`` give
+    the rows of the hand-inlined forms they replaced, on 0-, 1-, 2- and
+    many-token texts; ``word_bigrams`` of 0 tokens is empty (the inline
+    slice raised on its negative length there)."""
+    from shuttlestandalonedbcreator_spark.functions import text as T
+    from shuttlestandalonedbcreator_spark.operators.dedup import tokens
+
+    df = spark.createDataFrame(
+        [(0, ""), (1, "The"), (2, "the cat"), (5, "A the b of c."), (9, None)],
+        "n int, text string",
+    )
+    toks = tokens(F.col("text"))
+
+    def pairs(t):
+        return F.zip_with(
+            F.slice(t, 1, F.size(t) - 1),
+            F.slice(t, 2, F.size(t) - 1),
+            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+        )
+
+    def ratio(t):
+        hits = F.size(F.filter(t, lambda x: x.isin(*T.LANG_MARKERS["en"])))
+        return F.when(
+            F.size(t) > 0, hits.cast("double") / F.size(t).cast("double")
+        ).otherwise(F.lit(0.0))
+
+    def size_sum(t):
+        return F.size(t) + F.aggregate(t, F.lit(0), lambda a, x: a + F.length(x))
+
+    got = df.select(
+        "n",
+        T.let(toks, size_sum).alias("let"),
+        T.let(toks, T.word_bigrams).alias("bigrams"),
+        T.stopword_ratio(F.col("text")).alias("ratio"),
+    )
+    inline = df.select(
+        "n",
+        F.get(F.transform(F.array(toks), size_sum), 0).alias("let"),
+        F.when(F.col("n") > 0, F.get(F.transform(F.array(toks), pairs), 0)).alias(
+            "bigrams"
+        ),
+        ratio(T.word_tokens(F.col("text"))).alias("ratio"),
+    )
+    got_rows = {r["n"]: r for r in got.collect()}
+    for r in inline.collect():
+        g = got_rows[r["n"]]
+        assert g["let"] == r["let"], r["n"]
+        assert g["ratio"] == r["ratio"], r["n"]
+        if r["n"] == 0:
+            assert g["bigrams"] == []
+        else:
+            assert g["bigrams"] == r["bigrams"], r["n"]
+    assert [tuple(p) for p in got_rows[5]["bigrams"]] == [
+        ("a", "the"), ("the", "b"), ("b", "of"), ("of", "c")
+    ]

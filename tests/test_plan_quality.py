@@ -644,6 +644,58 @@ def test_no_unguarded_driver_collects_in_operator_modules():
     )
 
 
+def test_no_hand_written_let_binds_outside_text_functions():
+    """Let-binding goes through ``functions.text.let``, whose docstring
+    carries the reason (CollapseProject re-substitutes a projected
+    expression into every reference). Source-level gate: the
+    ``transform(F.array(...))`` idiom may appear ONLY in
+    ``functions/text.py``."""
+    import pathlib
+    import re
+
+    import shuttlestandalonedbcreator_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for py in root.rglob("*.py"):
+        rel = py.relative_to(root).as_posix()
+        if rel == "functions/text.py":
+            continue
+        text = py.read_text()
+        for m in re.finditer(r"transform\(\s*F\.array\(", text):
+            line = text[: m.start()].count("\n") + 1
+            offenders.append(f"{rel}:{line}")
+    assert not offenders, (
+        "hand-written let-binds found (use functions.text.let):\n"
+        + "\n".join(offenders)
+    )
+
+
+def test_cache_and_persist_census():
+    """Every ``.cache()`` / ``.persist(`` in the package is pinned here: a
+    cached frame that is never unpersisted holds storage-pool memory for
+    the life of the session (the bench, streaming incremental dedup).
+    Census: operators/dedup.py x1 — ``minhash_lsh_pairs``'s signature
+    table, never unpersisted (a posting-list rewrite of that join drops
+    it). A new site fails this test until it is added here with the
+    ``unpersist`` that ends it."""
+    import pathlib
+    import re
+
+    import shuttlestandalonedbcreator_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    expected = {"operators/dedup.py": 1}
+    found: dict[str, int] = {}
+    for py in root.rglob("*.py"):
+        n = len(re.findall(r"\.cache\(\)|\.persist\(", py.read_text()))
+        if n:
+            found[py.relative_to(root).as_posix()] = n
+    assert found == expected, (
+        f".cache()/.persist() census changed: {found} != {expected}"
+    )
+
+
 def test_bounded_collect_contract(spark):
     """bounded_collect returns every row under the cap, never
     materializes more than max_rows+1, and raises with the caller's
@@ -660,6 +712,23 @@ def test_bounded_collect_contract(spark):
                         hint="use the LSH path")
     with _pytest.raises(ValueError, match="justification"):
         bounded_collect(df, "because_i_said_so")
+
+
+def test_bounded_collect_byte_cap(spark, monkeypatch):
+    """The byte cap (schema width × rows) refuses a wide-row side that
+    the row cap alone would let through."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from shuttlestandalonedbcreator_spark.operators import util
+
+    wide = spark.range(10).select(
+        *[F.col("id").cast("double").alias(f"c{i}") for i in range(100)]
+    )  # 100 doubles = 800 B/row
+    monkeypatch.setattr(util, "MAX_COLLECT_BYTES", 4_000)
+    assert len(util.bounded_collect(wide.limit(5), "one_row")) == 5
+    with _pytest.raises(ValueError, match="exceeded 4000 estimated bytes"):
+        util.bounded_collect(wide, "one_row", hint="shard it")
 
 
 def test_no_scratch_files_at_repo_root():
