@@ -6,19 +6,24 @@ Reference: the `hierarchy_children` recursive CTE
     step : child.parent_id = tree.id    → depth+1, path || ' > ' || name
     ORDER BY path
 
-Spark restatement: an iterative frontier join-union loop to fixpoint —
-the same evaluation strategy a recursive CTE engine uses internally.
-Each level is an equi join of the (usually shrinking) frontier against the
-child edge set; when the frontier is small it broadcasts automatically.
-`localCheckpoint` per level truncates lineage so 100-level trees don't
-build 100-deep query plans (SURVEY.md §4's one real gap).
+Spark restatement: Spark 4's native `WITH RECURSIVE` (a `UnionLoop`
+physical plan) is the one frontier walk, so Catalyst drives the per-level
+iteration. Both builders are lazy: they fire no job and leave no view in
+the caller's session (`nodes` goes in as a `spark.sql` keyword argument).
 
-Scale: the accumulated result is a union of per-level DataFrames; total
-work is O(edges × depth-of-tree) worst case but each iteration shuffles
-only the frontier, and AQE right-sizes each join. A max_depth guard
-RAISES on cycles or deeper-than-guard trees instead of silently
-truncating the closure (the reference relies on SQLite's implicit
-recursion limit).
+Two guards:
+- depth: `MAX RECURSION LEVEL MAX_DEPTH + 1`. A tree exactly `MAX_DEPTH`
+  deep completes; one level deeper (or a reachable parent-pointer cycle)
+  RAISES `RECURSION_LEVEL_LIMIT_EXCEEDED` instead of silently truncating
+  the closure (the reference relies on SQLite's implicit recursion limit).
+- rows: Spark also caps a recursive CTE at `spark.sql.cteRecursionRowLimit`
+  rows (1,000,000 by default), read at execution time, so any tree past
+  ~1M nodes would fail. `_lift_row_limit` lifts it on the session at build
+  time, the way `sources/registry.py:ensure_utc` pins the time zone; the
+  depth guard already bounds the closure at N × (MAX_DEPTH + 1) rows.
+
+`hierarchy_closure_doubling` is the deep-tree path: O(log depth) rounds
+where the recursive walk needs one round per level.
 """
 
 from __future__ import annotations
@@ -26,107 +31,92 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_DEPTH = 64  # deepest tree the recursive walks complete
+DOUBLING_MAX_DEPTH = 1 << 20  # deepest tree hierarchy_closure_doubling resolves
+SEPARATOR = " > "
+
+
+def _lift_row_limit(nodes: DataFrame) -> None:
+    nodes.sparkSession.conf.set("spark.sql.cteRecursionRowLimit", "-1")
+
 
 def hierarchy_closure(
-    nodes: DataFrame,
-    id_col: str,
-    parent_col: str,
-    name_col: str,
-    max_depth: int = 64,
-    separator: str = " > ",
-    checkpoint: bool = True,
+    nodes: DataFrame, id_col: str, parent_col: str, name_col: str
 ) -> DataFrame:
-    """Walk the adjacency-list tree; returns nodes + (depth, path).
+    """Walk the adjacency-list tree roots down; returns nodes + (depth, path).
 
     Roots are rows with NULL parent (orphans — parents missing from the
     node set — never join and are silently dropped below the roots they
     lack, matching recursive-CTE semantics; reference orphans become roots
     only because their parent_id is NULL, :906).
     """
-    base = nodes.select(
-        F.col(id_col).alias("_nid"),
-        F.col(parent_col).alias("_pid"),
-        F.col(name_col).alias("_name"),
+    _lift_row_limit(nodes)
+    return nodes.sparkSession.sql(
+        f"""
+        WITH RECURSIVE tree MAX RECURSION LEVEL {MAX_DEPTH + 1} AS (
+            SELECT `{id_col}`, `{parent_col}`, `{name_col}`,
+                   0 AS depth, CAST(`{name_col}` AS STRING) AS path
+            FROM {{nodes}} WHERE `{parent_col}` IS NULL
+            UNION ALL
+            SELECT c.`{id_col}`, c.`{parent_col}`, c.`{name_col}`,
+                   t.depth + 1, CONCAT(t.path, '{SEPARATOR}', c.`{name_col}`)
+            FROM {{nodes}} c JOIN tree t ON c.`{parent_col}` = t.`{id_col}`
+        )
+        SELECT * FROM tree ORDER BY path
+        """,
+        nodes=nodes,
     )
 
-    frontier = base.filter(F.col("_pid").isNull()).select(
-        "_nid",
-        "_pid",
-        "_name",
-        F.lit(0).alias("depth"),
-        F.col("_name").alias("path"),
+
+def ancestor_closure(nodes: DataFrame, id_col: str, parent_col: str) -> DataFrame:
+    """(node_id, ancestor_id, distance) for every ancestor INCLUDING the
+    node itself at distance 0 — the join fabric for subtree rollups
+    (aggregate a measure over every node's whole subtree in ONE grouped
+    aggregation instead of a per-node walk).
+
+    The recursion climbs one parent per level: O(N) rows per level, so
+    the closure is O(N·depth) total — linear, not quadratic, because trees
+    have one parent per node. A cycle never exhausts and hits the depth
+    guard."""
+    _lift_row_limit(nodes)
+    return nodes.sparkSession.sql(
+        f"""
+        WITH RECURSIVE anc MAX RECURSION LEVEL {MAX_DEPTH + 1} AS (
+            SELECT `{id_col}` AS node_id, `{id_col}` AS ancestor_id, 0 AS distance
+            FROM {{nodes}}
+            UNION ALL
+            SELECT a.node_id, n.`{parent_col}`, a.distance + 1
+            FROM anc a JOIN {{nodes}} n ON a.ancestor_id = n.`{id_col}`
+            WHERE n.`{parent_col}` IS NOT NULL
+        )
+        SELECT * FROM anc
+        """,
+        nodes=nodes,
     )
-    children = base  # immutable edge set, re-joined each level
-
-    result = frontier
-    for _ in range(max_depth):
-        step = (
-            children.alias("c")
-            .join(frontier.alias("f"), F.col("c._pid") == F.col("f._nid"))
-            .select(
-                F.col("c._nid").alias("_nid"),
-                F.col("c._pid").alias("_pid"),
-                F.col("c._name").alias("_name"),
-                (F.col("f.depth") + 1).alias("depth"),
-                F.concat(F.col("f.path"), F.lit(separator), F.col("c._name")).alias("path"),
-            )
-        )
-        if checkpoint:
-            step = step.localCheckpoint(eager=True)
-        if step.isEmpty():
-            break
-        result = result.unionByName(step)
-        frontier = step
-    else:
-        # loop exhausted with a live frontier: raise (documented guard)
-        # unless the tree bottoms out at EXACTLY max_depth — one extra
-        # emptiness probe distinguishes the two instead of silently
-        # returning a truncated closure
-        nxt = children.alias("c").join(
-            frontier.alias("f"), F.col("c._pid") == F.col("f._nid")
-        )
-        if not nxt.isEmpty():
-            raise RuntimeError(
-                f"hierarchy_closure exceeded max_depth={max_depth} "
-                "(cycle, or a deeper tree — raise max_depth)"
-            )
-
-    return result.select(
-        F.col("_nid").alias(id_col),
-        F.col("_pid").alias(parent_col),
-        F.col("_name").alias(name_col),
-        "depth",
-        "path",
-    ).orderBy("path")
 
 
 def hierarchy_closure_doubling(
-    nodes: DataFrame,
-    id_col: str,
-    parent_col: str,
-    name_col: str,
-    max_depth: int = 1 << 20,
-    separator: str = " > ",
-    checkpoint: bool = True,
+    nodes: DataFrame, id_col: str, parent_col: str, name_col: str
 ) -> DataFrame:
     """`hierarchy_closure` in O(log depth) rounds via pointer doubling —
     the deep-tree scale path.
 
-    The frontier loop costs one join ROUND PER LEVEL: fine for the
+    The recursive walk costs one join ROUND PER LEVEL: fine for the
     reference's shallow folder trees, but a 10k-deep path-shaped
-    hierarchy means 10k sequential Spark jobs (measured ~0.4-0.6 s/level
-    of fixed overhead ⇒ hours of wall clock regardless of cluster size).
-    Pointer doubling keeps, per node, its 2^k-th ancestor plus the name
-    path covering that span, and composes the state with ITSELF each
-    round — ceil(log2 depth) rounds total (14 for a 10k chain), each an
-    O(N) self-join keyed on the ancestor pointer.
+    hierarchy means 10k sequential iterations (~0.4-0.75 s of fixed
+    overhead each, measured ⇒ hours of wall clock regardless of cluster
+    size; SCALING.md). Pointer doubling keeps, per
+    node, its 2^k-th ancestor plus the name path covering that span, and
+    composes the state with ITSELF each round — ceil(log2 depth) rounds
+    total (14 for a 10k chain), each an O(N) self-join keyed on the
+    ancestor pointer.
 
     Output contract is identical to `hierarchy_closure` (same oracle):
     roots at depth 0, orphan subtrees dropped. Stricter on cycles: a
     parent-pointer cycle can never terminate, so it RAISES after
-    ceil(log2(max_depth)) rounds (the loop silently drops cycles because
-    they are unreachable from any root; here they are detectable for
-    free, and a loud failure beats silent row loss).
+    ceil(log2(DOUBLING_MAX_DEPTH)) rounds (the recursive walk silently
+    drops cycles because they are unreachable from any root; here they
+    are detectable for free, and a loud failure beats silent row loss).
     """
     base = nodes.select(
         F.col(id_col).alias("_nid"),
@@ -142,21 +132,22 @@ def hierarchy_closure_doubling(
     # the roots, grows as chains land. state: node → its (_dist)-th
     # ancestor `_up`, with `_seg` = the name path strictly below `_up`
     # down to the node itself.
-    resolved = root_out.select("_nid", "depth", "path")
-    state = base.filter(F.col("_pid").isNotNull()).select(
-        "_nid",
-        F.col("_pid").alias("_up"),
-        F.lit(1).alias("_dist"),
-        F.col("_name").alias("_seg"),
-        "_pid",
-        "_name",
+    resolved = root_out.select("_nid", "depth", "path").localCheckpoint(eager=True)
+    state = (
+        base.filter(F.col("_pid").isNotNull())
+        .select(
+            "_nid",
+            F.col("_pid").alias("_up"),
+            F.lit(1).alias("_dist"),
+            F.col("_name").alias("_seg"),
+            "_pid",
+            "_name",
+        )
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        resolved = resolved.localCheckpoint(eager=True)
-        state = state.localCheckpoint(eager=True)
 
     finished: list[DataFrame] = [root_out]
-    rounds = max(1, (max_depth - 1).bit_length())
+    rounds = max(1, (DOUBLING_MAX_DEPTH - 1).bit_length())
     for _ in range(rounds + 1):
         res_side = resolved.select(
             F.col("_nid").alias("_rn"),
@@ -173,38 +164,42 @@ def hierarchy_closure_doubling(
             up_side, state["_up"] == up_side["_n2"], "left"
         )
         # up already resolved → this node's absolute position is known
-        fin = j.filter(F.col("_rn").isNotNull()).select(
-            "_nid",
-            "_pid",
-            "_name",
-            (F.col("_rdepth") + F.col("_dist")).alias("depth"),
-            F.concat(F.col("_rpath"), F.lit(separator), F.col("_seg")).alias("path"),
+        fin = (
+            j.filter(F.col("_rn").isNotNull())
+            .select(
+                "_nid",
+                "_pid",
+                "_name",
+                (F.col("_rdepth") + F.col("_dist")).alias("depth"),
+                F.concat(F.col("_rpath"), F.lit(SEPARATOR), F.col("_seg")).alias("path"),
+            )
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            fin = fin.localCheckpoint(eager=True)
         finished.append(fin)
-        resolved = resolved.unionByName(fin.select("_nid", "depth", "path"))
-        if checkpoint:
-            resolved = resolved.localCheckpoint(eager=True)
+        resolved = resolved.unionByName(fin.select("_nid", "depth", "path")).localCheckpoint(
+            eager=True
+        )
         # up still mid-climb → compose the two half-paths (the doubling
         # step). up in NEITHER table → missing parent: the whole orphan
-        # chain drains out round by round, matching the loop's semantics.
-        state = j.filter(F.col("_rn").isNull() & F.col("_n2").isNotNull()).select(
-            "_nid",
-            F.col("_up2").alias("_up"),
-            (F.col("_dist") + F.col("_dist2")).alias("_dist"),
-            F.concat(F.col("_seg2"), F.lit(separator), F.col("_seg")).alias("_seg"),
-            "_pid",
-            "_name",
+        # chain drains out round by round, matching the recursive walk.
+        state = (
+            j.filter(F.col("_rn").isNull() & F.col("_n2").isNotNull())
+            .select(
+                "_nid",
+                F.col("_up2").alias("_up"),
+                (F.col("_dist") + F.col("_dist2")).alias("_dist"),
+                F.concat(F.col("_seg2"), F.lit(SEPARATOR), F.col("_seg")).alias("_seg"),
+                "_pid",
+                "_name",
+            )
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            state = state.localCheckpoint(eager=True)
         if state.isEmpty():
             break
     else:
         raise RuntimeError(
             f"hierarchy_closure_doubling did not converge within "
-            f"ceil(log2({max_depth})) rounds — cycle, or a deeper tree"
+            f"ceil(log2({DOUBLING_MAX_DEPTH})) rounds — cycle, or a deeper tree"
         )
 
     result = finished[0]
@@ -217,78 +212,3 @@ def hierarchy_closure_doubling(
         "depth",
         "path",
     ).orderBy("path")
-
-
-def hierarchy_closure_sql(
-    spark,
-    nodes: DataFrame,
-    id_col: str,
-    parent_col: str,
-    name_col: str,
-    separator: str = " > ",
-) -> DataFrame:
-    """Spark 4 `WITH RECURSIVE` variant — same result as the loop, letting
-    Catalyst drive the iteration (UnionLoop physical plan)."""
-    nodes.createOrReplaceTempView("_hier_nodes")
-    return spark.sql(
-        f"""
-        WITH RECURSIVE tree AS (
-            SELECT {id_col}, {parent_col}, {name_col},
-                   0 AS depth, CAST({name_col} AS STRING) AS path
-            FROM _hier_nodes WHERE {parent_col} IS NULL
-            UNION ALL
-            SELECT c.{id_col}, c.{parent_col}, c.{name_col},
-                   t.depth + 1, CONCAT(t.path, '{separator}', c.{name_col})
-            FROM _hier_nodes c JOIN tree t ON c.{parent_col} = t.{id_col}
-        )
-        SELECT * FROM tree ORDER BY path
-        """
-    )
-
-
-def ancestor_closure(
-    nodes: DataFrame,
-    id_col: str,
-    parent_col: str,
-    max_depth: int = 64,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """(node_id, ancestor_id, distance) for every ancestor INCLUDING the
-    node itself at distance 0 — the join fabric for subtree rollups
-    (aggregate a measure over every node's whole subtree in ONE grouped
-    aggregation instead of a per-node walk).
-
-    Iterative frontier climb: level k holds (node, k-th ancestor); each
-    step joins the frontier's current ancestor against the edge list
-    (O(N) rows per level, so the closure is O(N·depth) total — linear,
-    not quadratic, because trees have one parent per node). Same
-    lineage-truncation and cycle-guard story as hierarchy_closure."""
-    base = nodes.select(F.col(id_col).alias("_c"), F.col(parent_col).alias("_p"))
-    if checkpoint:
-        # one materialization serves BOTH the edge list (re-joined every
-        # level) and the distance-0 seed — without it the nodes subtree
-        # (often a multi-table union) evaluates twice
-        base = base.localCheckpoint(eager=True)
-    edges = base.filter(F.col("_p").isNotNull())
-    self_rows = base.select(
-        F.col("_c").alias("node_id"),
-        F.col("_c").alias("ancestor_id"),
-        F.lit(0).alias("distance"),
-    )
-    out = self_rows
-    frontier = self_rows
-    for depth in range(1, max_depth + 1):
-        frontier = (
-            frontier.join(edges, frontier["ancestor_id"] == edges["_c"])
-            .select(
-                "node_id",
-                F.col("_p").alias("ancestor_id"),
-                F.lit(depth).alias("distance"),
-            )
-        )
-        if checkpoint:
-            frontier = frontier.localCheckpoint(eager=True)
-        if frontier.isEmpty():
-            return out
-        out = out.unionByName(frontier)
-    raise RuntimeError(f"ancestor_closure exceeded max_depth={max_depth} (cycle?)")

@@ -43,8 +43,9 @@ from shuttlestandalonedbcreator_spark.operators.util import (
     local_frame,
 )
 from shuttlestandalonedbcreator_spark.operators.hierarchy import (
+    ancestor_closure,
+    hierarchy_closure,
     hierarchy_closure_doubling,
-    hierarchy_closure_sql,
 )
 from shuttlestandalonedbcreator_spark.operators.summary import (
     files_filter,
@@ -318,14 +319,14 @@ def q_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree, walked by Spark's native WITH RECURSIVE (UnionLoop) — no
     per-level Python round-trips."""
     nodes = _hierarchy_nodes(spark, sf_dir)
-    return hierarchy_closure_sql(spark, nodes, "node_id", "parent_id", "name")
+    return hierarchy_closure(nodes, "node_id", "parent_id", "name")
 
 
 def q_hierarchy_closure_logn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deep-tree scale path for J2: pointer-doubling closure in
     O(log depth) rounds (operators/hierarchy.py:hierarchy_closure_doubling
-    — measured 10k-deep path in ~90 s where the per-level frontier loop
-    projects to hours). Same tree, same output contract, same oracle as
+    — measured 10k-deep path in ~90 s where a walk of one round per
+    level projects to hours). Same tree, same output contract, same oracle as
     `hierarchy_closure`."""
     nodes = _hierarchy_nodes(spark, sf_dir)
     return hierarchy_closure_doubling(nodes, "node_id", "parent_id", "name")
@@ -4742,27 +4743,39 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the raw rows first like every other per-row-heavy text entry
     docs = fan_out(_t(spark, sf_dir, "documents"))
     k, w = 4, 5
-    expr = f"""
-      element_at(transform(array(
-        element_at(transform(array(
-          filter(split(lower(text), '[^a-z0-9]+'), x -> x <> '')
-        ), t -> CASE WHEN size(t) >= {k}
-            THEN transform(sequence(1, size(t) - {k - 1}),
-                 i -> cast(conv(substring(md5(concat_ws(' ', slice(t, i, {k}))), 1, 15), 16, 10) as bigint))
-            ELSE cast(array() as array<bigint>) END), 1)
-      ), g -> struct(
-        cast(size(g) as bigint) as n_grams,
-        array_sort(array_distinct(
-          CASE WHEN size(g) >= {w}
-               THEN transform(sequence(1, size(g) - {w - 1}),
-                    j -> array_min(slice(g, j, {w})))
-               WHEN size(g) > 0 THEN array(array_min(g))
-               ELSE cast(array() as array<bigint>) END)) as fps
-      )), 1)
-    """
+    no_hashes = F.array().cast("array<bigint>")
+
+    def gram_hashes(t: Column) -> Column:
+        return F.when(
+            F.size(t) >= k,
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - (k - 1)),
+                lambda i: F.conv(
+                    F.substring(F.md5(F.concat_ws(" ", F.slice(t, i, k))), 1, 15), 16, 10
+                ).cast("bigint"),
+            ),
+        ).otherwise(no_hashes)
+
+    def winnow(g: Column) -> Column:
+        fps = (
+            F.when(
+                F.size(g) >= w,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(g) - (w - 1)),
+                    lambda j: F.array_min(F.slice(g, j, w)),
+                ),
+            )
+            .when(F.size(g) > 0, F.array(F.array_min(g)))
+            .otherwise(no_hashes)
+        )
+        return F.struct(
+            F.size(g).cast("bigint").alias("n_grams"),
+            F.array_sort(F.array_distinct(fps)).alias("fps"),
+        )
+
     return docs.select(
         "doc_id",
-        F.expr(expr).alias("_s"),
+        T.let(T.let(D.tokens(F.col("text")), gram_hashes), winnow).alias("_s"),
     ).select(
         "doc_id",
         F.col("_s.n_grams").alias("n_grams"),
@@ -6073,8 +6086,6 @@ def q_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure (operators/hierarchy.py:ancestor_closure — O(N·depth) rows)
     then ONE grouped aggregate keyed on the ancestor; never a per-node
     walk. Balance in exact cents end-to-end."""
-    from shuttlestandalonedbcreator_spark.operators.hierarchy import ancestor_closure
-
     region = _t(spark, sf_dir, "region").select(
         F.concat(F.lit("R"), F.col("r_regionkey")).alias("node_id"),
         F.lit(None).cast("string").alias("parent_id"),
@@ -7171,30 +7182,33 @@ def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r10: fan_out the single-split per-row pass (guide §2.2)
     docs = fan_out(_t(spark, sf_dir, "documents"))
-    # let-bind the token array (HOF CSE rule): evaluate tokens() once
-    toks = D.tokens(F.col("text"))
     # r10 (guide §1.2): hapax count via sort + adjacency instead of the
     # old types×tokens nested filter (quadratic per row). A hapax is a
     # run of length 1 in the sorted array, so
     # n_hapax = n_types − |distinct values with an adjacent equal pair|
     # — exact integer counting, identical result.
-    n_hapax = F.size(F.array_distinct(F.col("_t.w"))).cast("long") - F.expr(
-        "size(element_at(transform(array(array_sort(_t.w)), s -> "
-        "array_distinct(filter(zip_with("
-        "slice(s, 1, greatest(size(s) - 1, 0)), "
-        "slice(s, 2, greatest(size(s) - 1, 0)), "
-        "(a, b) -> IF(a = b, a, CAST(NULL AS STRING))), "
-        "x -> x IS NOT NULL))), 1))"
-    ).cast("long")
+    def diversity(toks: Column) -> Column:
+        n_types = F.size(F.array_distinct(toks)).cast("long")
+        n_repeated = T.let(
+            F.array_sort(toks),
+            lambda s: F.size(
+                F.array_distinct(
+                    F.transform(
+                        F.filter(T.word_bigrams(s), lambda p: p["w1"] == p["w2"]),
+                        lambda p: p["w1"],
+                    )
+                )
+            ),
+        ).cast("long")
+        return F.struct(
+            F.size(toks).cast("long").alias("n_tokens"),
+            n_types.alias("n_types"),
+            (n_types - n_repeated).alias("n_hapax"),
+        )
+
     out = docs.select(
-        "doc_id",
-        F.explode(F.array(F.struct(toks.alias("w")))).alias("_t"),
-    ).select(
-        "doc_id",
-        F.size(F.col("_t.w")).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(F.col("_t.w"))).cast("long").alias("n_types"),
-        n_hapax.alias("n_hapax"),
-    )
+        "doc_id", T.let(D.tokens(F.col("text")), diversity).alias("_t")
+    ).select("doc_id", "_t.*")
     return out.select(
         "doc_id",
         "n_tokens",
@@ -11701,17 +11715,23 @@ def _power_iteration_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         # renormalize on the reassembled 64-element array; m (the max
         # |y|, floored at 1 so a degenerate all-zero corpus renormalizes
         # to the zero vector instead of an ANSI divide-by-zero) is
-        # let-bound through a 1-element array so the HOF body does not
-        # re-fold it per element (no CSE across lambda boundaries)
+        # let-bound so the HOF body does not re-fold it per element
         v = (
             y.agg(F.array_sort(F.collect_list(F.struct("j", "y"))).alias("ys"))
-            .select(F.expr("transform(ys, s -> s.y)").alias("ya"))
+            .select(F.transform("ys", lambda s: s["y"]).alias("ya"))
             .select(
-                F.expr(
-                    "element_at(transform("
-                    "array(greatest(array_max(transform(ya, y -> abs(y))), 1L)),"
-                    "m -> transform(ya, y -> CAST(((y + m) * 1000) div m - 1000 AS BIGINT))), 1) AS v"
-                )
+                T.let(
+                    F.greatest(
+                        F.array_max(F.transform("ya", lambda y: F.abs(y))),
+                        F.lit(1).cast("long"),
+                    ),
+                    lambda m: F.transform(
+                        "ya",
+                        lambda y: (
+                            F.call_function("div", (y + m) * 1000, m) - 1000
+                        ).cast("bigint"),
+                    ),
+                ).alias("v")
             )
         )
         v = v.localCheckpoint(eager=True)

@@ -68,8 +68,9 @@ def test_simhash_is_shuffle_free(spark, sf_small):
         assert marker not in plan
 
 
-def test_hierarchy_uses_native_recursion(spark, sf_small):
-    plan = plan_of(spark, sf_small, "hierarchy_closure")
+@pytest.mark.parametrize("name", ["hierarchy_closure", "subtree_rollup"])
+def test_hierarchy_uses_native_recursion(spark, sf_small, name):
+    plan = plan_of(spark, sf_small, name)
     assert "UnionLoop" in plan
 
 
@@ -647,13 +648,30 @@ def test_no_unguarded_driver_collects_in_operator_modules():
 def test_no_hand_written_let_binds_outside_text_functions():
     """Let-binding goes through ``functions.text.let``, whose docstring
     carries the reason (CollapseProject re-substitutes a projected
-    expression into every reference). Source-level gate: the
-    ``transform(F.array(...))`` idiom may appear ONLY in
-    ``functions/text.py``."""
+    expression into every reference). Source-level gate: the 1-element
+    ``transform`` idiom may appear ONLY in ``functions/text.py``, in
+    either spelling — the Python ``transform(F.array(...))`` and the SQL
+    ``transform(array(...))`` inside ``F.expr`` text. The SQL spelling is
+    matched on each string constant as the parser joins it, so a literal
+    split across adjacent strings (or around f-string fields) is caught."""
+    import ast
     import pathlib
     import re
 
     import shuttlestandalonedbcreator_spark as pkg
+
+    py_form = re.compile(r"transform\(\s*F\.array\(")
+    sql_form = re.compile(r"\btransform\s*\(\s*array\s*\(", re.IGNORECASE)
+
+    def sql_texts(tree):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                yield node.lineno, node.value
+            elif isinstance(node, ast.JoinedStr):
+                yield node.lineno, "".join(
+                    v.value if isinstance(v, ast.Constant) else "{}"
+                    for v in node.values
+                )
 
     root = pathlib.Path(pkg.__file__).parent
     offenders = []
@@ -662,12 +680,14 @@ def test_no_hand_written_let_binds_outside_text_functions():
         if rel == "functions/text.py":
             continue
         text = py.read_text()
-        for m in re.finditer(r"transform\(\s*F\.array\(", text):
-            line = text[: m.start()].count("\n") + 1
-            offenders.append(f"{rel}:{line}")
+        for m in py_form.finditer(text):
+            offenders.append(f"{rel}:{text[: m.start()].count(chr(10)) + 1}")
+        for line, value in sql_texts(ast.parse(text)):
+            if sql_form.search(value):
+                offenders.append(f"{rel}:{line} (SQL text)")
     assert not offenders, (
         "hand-written let-binds found (use functions.text.let):\n"
-        + "\n".join(offenders)
+        + "\n".join(sorted(set(offenders)))
     )
 
 

@@ -11,9 +11,11 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from shuttlestandalonedbcreator_spark.functions.paths import sanitize_view_name
+from shuttlestandalonedbcreator_spark.operators import hierarchy as H
 from shuttlestandalonedbcreator_spark.operators.hierarchy import (
+    ancestor_closure,
     hierarchy_closure,
-    hierarchy_closure_sql,
+    hierarchy_closure_doubling,
 )
 
 # path-ish strings: slashes, empty segments, unicode, spaces
@@ -125,36 +127,49 @@ def test_connected_components_matches_union_find(spark, edges):
 
 
 def test_hierarchy_loop_equals_native_cte(spark):
-    """The iterative fallback and Spark 4's WITH RECURSIVE must agree on a
-    ragged multi-root forest with an orphan subtree."""
-    nodes = spark.createDataFrame(
-        [
-            ("r1", None, "R1"),
-            ("r2", None, "R2"),
-            ("a", "r1", "A"),
-            ("b", "a", "B"),
-            ("c", "b", "C"),
-            ("d", "r2", "D"),
-            ("orphan", "missing", "O"),  # parent absent: unreachable
-        ],
-        "node_id string, parent_id string, name string",
-    )
-    loop = hierarchy_closure(nodes, "node_id", "parent_id", "name", checkpoint=False)
-    cte = hierarchy_closure_sql(spark, nodes, "node_id", "parent_id", "name")
-    canon = lambda df: sorted(tuple(r) for r in df.collect())
-    assert canon(loop) == canon(cte)
-    assert ("orphan", "missing", "O", 0, "O") not in canon(cte)
+    """Spark 4's WITH RECURSIVE walk must equal DuckDB's WITH RECURSIVE
+    (the house oracle) on a ragged multi-root forest with an orphan
+    subtree."""
+    import duckdb
+
+    rows = [
+        ("r1", None, "R1"),
+        ("r2", None, "R2"),
+        ("a", "r1", "A"),
+        ("b", "a", "B"),
+        ("c", "b", "C"),
+        ("d", "r2", "D"),
+        ("orphan", "missing", "O"),  # parent absent: unreachable
+        ("below_orphan", "orphan", "BO"),
+    ]
+    nodes = spark.createDataFrame(rows, "node_id string, parent_id string, name string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE nodes (node_id VARCHAR, parent_id VARCHAR, name VARCHAR)")
+    con.executemany("INSERT INTO nodes VALUES (?, ?, ?)", rows)
+    oracle = con.execute(
+        """
+        WITH RECURSIVE tree AS (
+            SELECT node_id, parent_id, name, 0 AS depth, name AS path
+            FROM nodes WHERE parent_id IS NULL
+            UNION ALL
+            SELECT c.node_id, c.parent_id, c.name, t.depth + 1,
+                   t.path || ' > ' || c.name
+            FROM nodes c JOIN tree t ON c.parent_id = t.node_id
+        )
+        SELECT * FROM tree
+        """
+    ).fetchall()
+    got = hierarchy_closure(nodes, "node_id", "parent_id", "name").collect()
+    assert sorted(tuple(r) for r in got) == sorted(oracle)
+    assert [r["path"] for r in got] == sorted(r["path"] for r in got)  # ORDER BY path
+    assert not any(r["node_id"] in ("orphan", "below_orphan") for r in got)
 
 
 def test_hierarchy_doubling_matches_loop_on_random_forest(spark):
-    """Pointer-doubling closure ≡ frontier loop on a random ragged forest
-    with multiple roots and orphan chains (nodes whose parents are
+    """Pointer-doubling closure ≡ the recursive walk on a random ragged
+    forest with multiple roots and orphan chains (nodes whose parents are
     missing — dropped by both, including their descendants)."""
     import random
-
-    from shuttlestandalonedbcreator_spark.operators.hierarchy import (
-        hierarchy_closure_doubling,
-    )
 
     random.seed(23)
     rows = []
@@ -168,73 +183,96 @@ def test_hierarchy_doubling_matches_loop_on_random_forest(spark):
     # descendants of orphans must drain out too
     rows.append(("deep_orphan", "140", "DO"))
     nodes = spark.createDataFrame(rows, "id string, parent string, name string")
-    loop = hierarchy_closure(nodes, "id", "parent", "name", max_depth=64)
+    walk = hierarchy_closure(nodes, "id", "parent", "name")
     dbl = hierarchy_closure_doubling(nodes, "id", "parent", "name")
     canon = lambda df: sorted(tuple(r) for r in df.collect())
-    a, b = canon(loop), canon(dbl)
+    a, b = canon(walk), canon(dbl)
     assert a == b
     assert not any(r[0] in ("140", "deep_orphan") for r in a)
 
 
-def test_hierarchy_deep_path_guard_raises_not_truncates(spark):
-    """A path-shaped tree one level deeper than max_depth must RAISE the
-    documented guard (never silently return a truncated closure), while
-    a tree of depth EXACTLY max_depth completes."""
-    import pytest
-
-    def chain(depth):
-        return spark.createDataFrame(
-            [
-                (str(i), str(i - 1) if i > 0 else None, f"n{i}")
-                for i in range(depth + 1)
-            ],
-            "id string, parent string, name string",
-        )
-
-    ok = hierarchy_closure(chain(12), "id", "parent", "name", max_depth=12,
-                           checkpoint=False)
-    assert ok.count() == 13 and ok.agg({"depth": "max"}).first()[0] == 12
-    with pytest.raises(RuntimeError, match="max_depth"):
-        hierarchy_closure(chain(13), "id", "parent", "name", max_depth=12,
-                          checkpoint=False).count()
-
-
-def test_hierarchy_doubling_star_and_deep_chain(spark):
-    """The two skew shapes from the scale review: a 50k-child star
-    completes in O(1) rounds; a 300-deep path completes in O(log depth)
-    rounds (the loop would need 300); a cycle raises instead of looping
-    or silently dropping rows."""
-    import pytest
-    from pyspark.sql import functions as SF
-
-    from shuttlestandalonedbcreator_spark.operators.hierarchy import (
-        hierarchy_closure_doubling,
+def _chain(spark, depth):
+    """Path-shaped tree n0 > n1 > ... > n{depth}, built JVM-side: each
+    recursion level rescans its input, and a createDataFrame list would
+    start Python workers on every scan."""
+    return spark.range(depth + 1).select(
+        F.col("id").cast("string").alias("id"),
+        F.when(F.col("id") > 0, (F.col("id") - 1).cast("string")).alias("parent"),
+        F.concat(F.lit("n"), F.col("id")).alias("name"),
     )
 
+
+def test_hierarchy_deep_path_guard_raises_not_truncates(spark, monkeypatch):
+    """A path-shaped tree one level deeper than MAX_DEPTH must RAISE
+    (never silently return a truncated closure), while a tree of depth
+    EXACTLY MAX_DEPTH completes — for both recursive walks."""
+    monkeypatch.setattr(H, "MAX_DEPTH", 12)
+    ok = hierarchy_closure(_chain(spark, 12), "id", "parent", "name")
+    assert ok.count() == 13 and ok.agg({"depth": "max"}).first()[0] == 12
+    anc = ancestor_closure(_chain(spark, 12), "id", "parent")
+    assert anc.count() == 13 * 14 // 2 and anc.agg({"distance": "max"}).first()[0] == 12
+    with pytest.raises(Exception, match="RECURSION_LEVEL_LIMIT_EXCEEDED"):
+        hierarchy_closure(_chain(spark, 13), "id", "parent", "name").count()
+    with pytest.raises(Exception, match="RECURSION_LEVEL_LIMIT_EXCEEDED"):
+        ancestor_closure(_chain(spark, 13), "id", "parent").count()
+
+
+def test_hierarchy_walks_ignore_lowered_cte_row_limit(spark, sf_small):
+    """Spark caps a recursive CTE at spark.sql.cteRecursionRowLimit rows
+    (1,000,000 by default, read at execution), so an unpinned walk fails
+    on any tree past ~1M nodes. With the limit lowered to 100, both walks
+    on a 500-child star and both catalog entries built on them must still
+    return every row."""
+    from shuttlestandalonedbcreator_spark.queries import CATALOG
+
+    key = "spark.sql.cteRecursionRowLimit"
+    before = spark.conf.get(key, None)
+    star = spark.range(501).select(
+        F.col("id").cast("string").alias("id"),
+        F.when(F.col("id") == 0, F.lit(None)).otherwise(F.lit("0")).alias("parent"),
+        F.concat(F.lit("n"), F.col("id")).alias("name"),
+    )
+    try:
+        spark.conf.set(key, "100")
+        assert hierarchy_closure(star, "id", "parent", "name").count() == 501
+        spark.conf.set(key, "100")
+        assert ancestor_closure(star, "id", "parent").count() == 501 + 500
+        for entry in ("hierarchy_closure", "subtree_rollup"):
+            spark.conf.set(key, "100")
+            assert CATALOG[entry].spark(spark, sf_small).count() > 100
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+def test_hierarchy_doubling_star_and_deep_chain(spark, monkeypatch):
+    """The two skew shapes from the scale review: a 50k-child star
+    completes in O(1) rounds; a 300-deep path completes in O(log depth)
+    rounds (the recursive walk would need 300); a cycle raises instead of
+    looping or silently dropping rows."""
     star = spark.range(50_001).select(
-        SF.col("id").cast("string").alias("id"),
-        SF.when(SF.col("id") == 0, SF.lit(None)).otherwise(SF.lit("0")).alias("parent"),
-        SF.concat(SF.lit("n"), SF.col("id")).alias("name"),
+        F.col("id").cast("string").alias("id"),
+        F.when(F.col("id") == 0, F.lit(None)).otherwise(F.lit("0")).alias("parent"),
+        F.concat(F.lit("n"), F.col("id")).alias("name"),
     )
     out = hierarchy_closure_doubling(star, "id", "parent", "name")
     assert out.count() == 50_001
     assert out.agg({"depth": "max"}).first()[0] == 1
 
-    chain = spark.createDataFrame(
-        [(str(i), str(i - 1) if i > 0 else None, f"n{i}") for i in range(301)],
-        "id string, parent string, name string",
-    )
-    deep = hierarchy_closure_doubling(chain, "id", "parent", "name")
+    deep = hierarchy_closure_doubling(_chain(spark, 300), "id", "parent", "name")
     assert deep.count() == 301
-    last = deep.filter(SF.col("depth") == 300).first()
+    last = deep.filter(F.col("depth") == 300).first()
     assert last["path"].startswith("n0 > n1 > ") and last["path"].endswith("> n300")
 
     cyc = spark.createDataFrame(
         [("a", "b", "A"), ("b", "a", "B"), ("r", None, "R")],
         "id string, parent string, name string",
     )
+    monkeypatch.setattr(H, "DOUBLING_MAX_DEPTH", 16)
     with pytest.raises(RuntimeError, match="converge"):
-        hierarchy_closure_doubling(cyc, "id", "parent", "name", max_depth=16).count()
+        hierarchy_closure_doubling(cyc, "id", "parent", "name").count()
 
 
 @settings(max_examples=8, deadline=None)

@@ -15,7 +15,11 @@ from shuttlestandalonedbcreator_spark.plans.transfer_pipeline import (
     with_derived_columns,
 )
 from shuttlestandalonedbcreator_spark.plans.views import create_views
-from shuttlestandalonedbcreator_spark.operators.hierarchy import hierarchy_closure
+from shuttlestandalonedbcreator_spark.operators import hierarchy
+from shuttlestandalonedbcreator_spark.operators.hierarchy import (
+    ancestor_closure,
+    hierarchy_closure,
+)
 
 
 def _raw_row(file_name="", size="", tgt_size="", tgt_id="", status="", job="JobA.xlsx", **over):
@@ -127,14 +131,18 @@ def test_views_and_hierarchy(spark, ingested):
     assert tree["/A/B/f1.pdf"]["path"] == "/A > /A/B > /A/B/f1.pdf"
 
 
-def test_hierarchy_max_depth_guard(spark):
-    # 2-node cycle must terminate at max_depth, not loop forever
+def test_hierarchy_max_depth_guard(spark, monkeypatch):
+    # 2-node cycle must terminate, not loop forever
+    monkeypatch.setattr(hierarchy, "MAX_DEPTH", 5)
     nodes = spark.createDataFrame(
         [("a", "b", "a"), ("b", "a", "b"), ("r", None, "r")],
         schema="id string, parent string, name string",
     )
-    out = hierarchy_closure(nodes, "id", "parent", "name", max_depth=5, checkpoint=False)
+    out = hierarchy_closure(nodes, "id", "parent", "name")
     assert out.count() == 1  # only the root: cycle nodes never reach a root
+    # climbing from the cycle never exhausts: the depth guard raises
+    with pytest.raises(Exception, match="RECURSION_LEVEL_LIMIT_EXCEEDED"):
+        ancestor_closure(nodes, "id", "parent").count()
 
 
 def test_idempotent_reingest(spark, ingested):

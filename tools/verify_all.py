@@ -43,9 +43,21 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+# steps 5-9b (module docstring), each a fixed seed block at sf0.001:
+# (printed label, failure label, script, seed count, first seed, extra argv)
+FUZZ_STEPS = (
+    ("fuzz sweep", "differential fuzz", "fuzz_sweep.py", 50, 80000, ()),
+    ("scalewin fuzz", "scalewin fuzz", "scalewin_fuzz.py", 10, 81000, ()),
+    ("av fuzz", "av fuzz", "av_fuzz.py", 4, 82000, ()),
+    ("text fuzz", "text fuzz", "text_fuzz.py", 4, 83000, ()),
+    ("stream fuzz", "stream fuzz", "stream_fuzz.py", 4, 84000, ()),
+    ("late-drop fuzz", "late-drop fuzz", "stream_fuzz.py", 4, 85000, ("--late",)),
+)
 
 
 def main() -> int:
@@ -100,114 +112,25 @@ def main() -> int:
     except Exception as e:  # noqa: BLE001
         failures.append(f"bench output invalid: {e}")
 
-    # 5: fixed-seed differential fuzz sweep (sf0.001 keeps it <2 min)
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "fuzz_sweep.py"),
-            "/root/testdata/sf0.001",
-            "50",
-            "80000",
-        ],
-        capture_output=True, text=True, timeout=1800,
-    )
-    last = (r.stdout.strip().splitlines() or ["<no output>"])[-1]
-    print(f"fuzz sweep (seeds 80000-80049): {last}")
-    if r.returncode != 0:
-        failures.append(f"differential fuzz divergence: {last}")
-
-    # 6: blocked-window fuzz (operators/scalewin.py vs Spark's own
-    # single-partition window — the SQL fuzzer cannot reach this
-    # Python-side operator). Fixed 10-seed block, ~20 s.
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "scalewin_fuzz.py"),
-            "/root/testdata/sf0.001",
-            "10",
-            "81000",
-        ],
-        capture_output=True, text=True, timeout=1800,
-    )
-    last = (r.stdout.strip().splitlines() or ["<no output>"])[-1]
-    print(f"scalewin fuzz (seeds 81000-81009): {last}")
-    if r.returncode != 0:
-        failures.append(f"scalewin fuzz divergence: {last}")
-
-    # 7: multimodal codec fuzz (audio/video pipelines vs DuckDB
-    # recompute — Python-side codec paths, unreachable from SQL fuzz).
-    # Fixed 4-seed block, ~40 s.
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "av_fuzz.py"),
-            "/root/testdata/sf0.001",
-            "4",
-            "82000",
-        ],
-        capture_output=True, text=True, timeout=1800,
-    )
-    last = (r.stdout.strip().splitlines() or ["<no output>"])[-1]
-    print(f"av fuzz (seeds 82000-82003): {last}")
-    if r.returncode != 0:
-        failures.append(f"av fuzz divergence: {last}")
-
-    # 8: text near-dup fuzz (jaccard/containment/prefix-filter operators
-    # at random ngram width / threshold / corpus perturbation vs DuckDB
-    # all-pairs oracles). Fixed 4-seed block, ~30 s.
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "text_fuzz.py"),
-            "/root/testdata/sf0.001",
-            "4",
-            "83000",
-        ],
-        capture_output=True, text=True, timeout=1800,
-    )
-    last = (r.stdout.strip().splitlines() or ["<no output>"])[-1]
-    print(f"text fuzz (seeds 83000-83003): {last}")
-    if r.returncode != 0:
-        failures.append(f"text fuzz divergence: {last}")
-
-    # 9: streaming-vs-batch fuzz (windowed/stateful operators under
-    # random micro-batch arrival orders). Fixed 4-seed block — the
-    # fuzzer picks the case family by seed % 4, so 4 consecutive seeds
-    # round-robin all four families (tumbling/sliding/session/dedup).
-    # ~30 s.
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "stream_fuzz.py"),
-            "/root/testdata/sf0.001",
-            "4",
-            "84000",
-        ],
-        capture_output=True, text=True, timeout=1800,
-    )
-    last = (r.stdout.strip().splitlines() or ["<no output>"])[-1]
-    print(f"stream fuzz (seeds 84000-84003): {last}")
-    if r.returncode != 0:
-        failures.append(f"stream fuzz divergence: {last}")
-
-    # 9b: deterministic late-drop block (narrow watermark, the axis the
-    # full-span sweep above deliberately excludes). Fixed 4-seed block —
-    # seed % 4 round-robins tumbling/sliding/dedup/session. ~60 s.
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(REPO, "tools", "stream_fuzz.py"),
-            "/root/testdata/sf0.001",
-            "4",
-            "85000",
-            "--late",
-        ],
-        capture_output=True, text=True, timeout=1800,
-    )
-    last = (r.stdout.strip().splitlines() or ["<no output>"])[-1]
-    print(f"late-drop fuzz (seeds 85000-85003): {last}")
-    if r.returncode != 0:
-        failures.append(f"late-drop fuzz divergence: {last}")
+    # 5-9b: one subprocess per fuzz block
+    for label, fail_label, script, n, base, extra in FUZZ_STEPS:
+        t0 = time.perf_counter()
+        r = subprocess.run(
+            [
+                sys.executable,
+                os.path.join(REPO, "tools", script),
+                "/root/testdata/sf0.001",
+                str(n),
+                str(base),
+                *extra,
+            ],
+            capture_output=True, text=True, timeout=1800,
+        )
+        last = (r.stdout.strip().splitlines() or ["<no output>"])[-1]
+        wall = time.perf_counter() - t0
+        print(f"{label} (seeds {base}-{base + n - 1}): {last} [{wall:.1f}s]")
+        if r.returncode != 0:
+            failures.append(f"{fail_label} divergence: {last}")
 
     print("SHIPPABLE" if not failures else f"FAILURES: {failures}")
     return 1 if failures else 0
