@@ -112,8 +112,7 @@ def local_frame(spark, rows, ddl: str) -> DataFrame:
 
     Callers keep their own size bound: every row crosses the driver. A
     plan-quality test scans the package for raw ``createDataFrame(`` and
-    ``parallelize(`` calls outside this helper; only ``sources/excel.py``
-    keeps its list path (its work list feeds ``mapInPandas``).
+    ``parallelize(`` calls outside this helper.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema

@@ -4,9 +4,9 @@ Reference parity: S3 — the reference's `processXLSTraditional` loads the
 whole HSSF workbook and walks rows/cells with `DataFormatter`
 (SQLiteDirectImporter.java:384-426, 588-662, 948-952). Here the same scan
 is re-expressed as a pure-Python parser over the workbook bytes so it can
-run INSIDE executors (via `sources/excel.py:read_workbook_rows`'s
-binaryFile + mapInPandas path) — parallel across workbooks, no driver
-bottleneck, no native dependency.
+run INSIDE executors (one .xls file is one unit of
+`sources/excel.py:read_workbook_rows`'s work list) — parallel across
+workbooks, no driver bottleneck, no native dependency.
 
 Format subset implemented (public [MS-CFB] / [MS-XLS] specs):
 - CFB compound file: v3/v4 sector sizes, DIFAT (header + chained), FAT

@@ -1,12 +1,15 @@
 """Excel (.xlsx) source + sink, dependency-free and Spark-distributed.
 
 Reference parity (file:line into /root/reference):
+- S1 discovery: `*.xls*` in the drop folder, lock files skipped
+  (SQLiteDirectImporter.java:226-248).
 - S2 XLSX scan: SAX streaming per sheet (SQLiteDirectImporter.java:330-379,
-  431-583). Here: each workbook's bytes arrive via Spark's `binaryFile`
-  source and are parsed inside `mapInPandas` executors with stdlib
-  zipfile+ElementTree — the engine parallelizes ACROSS workbooks (the
-  100 TB shape: many files), and the iterparse is streaming per sheet so
-  executor memory stays O(row), not O(sheet).
+  431-583). Here: the driver plans a work list of (workbook, sheet) units
+  from each file's central directory and workbook.xml (ranged reads
+  through `pyarrow.fs`), and one `mapInPandas` parses the units with
+  stdlib zipfile+ElementTree — parallel across workbooks AND across the
+  sheets of one huge workbook, streaming per sheet so executor memory
+  stays O(shared strings + row), never O(workbook).
 - S4 sheet filter: name-prefix predicate (:349, :401).
 - S5 header skip: row 0 dropped per sheet (:469-473).
 - S9 sheet-projection sink: the `Overview` extraction re-expressed as a
@@ -17,8 +20,8 @@ Reference parity (file:line into /root/reference):
   .java:99-168).
 
 - S3 XLS (binary BIFF) scan: `sources/biff.py` — a stdlib CFB+BIFF8
-  parser (SQLiteDirectImporter.java:384-426, 588-662); dispatched here by
-  file extension so .xls and .xlsx flow through one distributed scan.
+  parser (SQLiteDirectImporter.java:384-426, 588-662); an .xls file is one
+  stream, so it is one unit of the same work list, read whole.
 
 Writer notes: minimal OOXML with inline strings — round-trips through this
 reader and opens in Excel/LibreOffice; used by tests to generate fixtures
@@ -27,17 +30,21 @@ reader and opens in Excel/LibreOffice; used by tests to generate fixtures
 
 from __future__ import annotations
 
+import fnmatch
 import io
+import itertools
 import os
 import zipfile
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 from xml.sax.saxutils import escape
 
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shuttlestandalonedbcreator_spark.sources import numfmt
+from shuttlestandalonedbcreator_spark.sources.biff import parse_xls_rows
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL_NS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -57,15 +64,16 @@ def _col_index(cell_ref: str) -> int:
 
 def _shared_strings(zf: zipfile.ZipFile) -> list[str]:
     try:
-        data = zf.read("xl/sharedStrings.xml")
+        fh = zf.open("xl/sharedStrings.xml")
     except KeyError:
         return []
     out: list[str] = []
-    for _, si in ET.iterparse(io.BytesIO(data)):
-        if si.tag == f"{_NS}si":
-            # plain <t> or rich-text runs <r><t>
-            out.append("".join(t.text or "" for t in si.iter(f"{_NS}t")))
-            si.clear()
+    with fh:
+        for _, si in ET.iterparse(fh):
+            if si.tag == f"{_NS}si":
+                # plain <t> or rich-text runs <r><t>
+                out.append("".join(t.text or "" for t in si.iter(f"{_NS}t")))
+                si.clear()
     return out
 
 
@@ -119,6 +127,37 @@ def _load_styles(zf: zipfile.ZipFile) -> list[str]:
         return []
 
 
+def _sheet_rows(
+    zf: zipfile.ZipFile,
+    name: str,
+    part: str,
+    shared: list[str],
+    styles: list[str] | None,
+) -> Iterator[tuple[str, int, list[str]]]:
+    """Stream (name, row_index, cells) of ONE sheet part — the row loop of
+    every workbook scan. Sparse rows are padded positionally from cell
+    refs (P2, :457-465)."""
+    row_idx = 0
+    with zf.open(part) as fh:
+        for _, row in ET.iterparse(fh):
+            if row.tag != f"{_NS}row":
+                continue
+            cells: list[str] = []
+            for cell in row.iter(f"{_NS}c"):
+                ref = cell.get("r")
+                pos = _col_index(ref) if ref else len(cells)
+                while len(cells) < pos:
+                    cells.append("")
+                value = _cell_value(cell, shared, styles)
+                if pos < len(cells):
+                    cells[pos] = value
+                else:
+                    cells.append(value)
+            yield name, row_idx, cells
+            row_idx += 1
+            row.clear()
+
+
 def parse_xlsx_rows(
     data: bytes, sheet_prefix: str | None = None, formatted: bool = False
 ) -> Iterator[tuple[str, int, list[str]]]:
@@ -132,78 +171,138 @@ def parse_xlsx_rows(
     identical to the default for the plain text/serial/integer cells
     transfer reports contain, and diverging exactly where the reference
     would (percent/currency/date masks).
-    Sparse rows are padded positionally from cell refs (P2, :457-465).
     """
     with zipfile.ZipFile(io.BytesIO(data)) as zf:
         shared = _shared_strings(zf)
         styles = _load_styles(zf) if formatted else None
-        for sheet_name, part in _sheet_parts(zf):
-            if sheet_prefix is not None and not sheet_name.startswith(sheet_prefix):
-                continue
-            row_idx = 0
-            with zf.open(part) as fh:
-                for _, row in ET.iterparse(fh):
-                    if row.tag != f"{_NS}row":
-                        continue
-                    cells: list[str] = []
-                    for cell in row.iter(f"{_NS}c"):
-                        ref = cell.get("r")
-                        pos = _col_index(ref) if ref else len(cells)
-                        while len(cells) < pos:
-                            cells.append("")
-                        value = _cell_value(cell, shared, styles)
-                        if pos < len(cells):
-                            cells[pos] = value
-                        else:
-                            cells.append(value)
-                    yield sheet_name, row_idx, cells
-                    row_idx += 1
-                    row.clear()
+        for name, part in _sheet_parts(zf):
+            if sheet_prefix is None or name.startswith(sheet_prefix):
+                yield from _sheet_rows(zf, name, part, shared, styles)
+
+
+# S1 discovery: the reference's findExcelFiles filter (:226-248)
+WORKBOOK_GLOB = "*.xls*"
+# rows per Arrow batch leaving a scan task: bounds task memory mid-sheet
+CHUNK_ROWS = 50_000
+RAW_SCHEMA = "_source_file string, _sheet string, _row_index int, _cells array<string>"
+# one work unit: an .xlsx sheet (file, sheet name, zip part), or a whole
+# .xls file (file, NULL, NULL) — a BIFF workbook is one stream
+_UNIT_SCHEMA = "file string, sheet string, part string"
+
+
+def _is_xls(file: str) -> bool:
+    return file.lower().endswith(".xls")
+
+
+def _filesystem(path: str) -> tuple[pafs.FileSystem, str]:
+    """(filesystem, path on it) for a local path or any URI ``pyarrow.fs``
+    resolves (file:, hdfs://, s3://, gs:// where the runtime has them)."""
+    if "://" not in path and not path.startswith("file:"):
+        path = os.path.abspath(path)
+    return pafs.FileSystem.from_uri(path)
+
+
+def plan_units(
+    path: str, sheet_prefix: str | None = None
+) -> list[tuple[str, str | None, str | None]]:
+    """The scan's work list, in arrival order: sorted file path, then
+    workbook sheet order. ``path`` is one workbook or a directory, listed
+    non-recursively: names matching ``WORKBOOK_GLOB`` and not starting
+    with ``.``, ``_`` or ``~`` (lock and temp files such as
+    ``~$Job.xlsx`` or LibreOffice's ``.~lock.Job.xlsx#``). Each .xlsx is
+    read only at its central directory and workbook.xml, never whole."""
+    fs, root = _filesystem(path)
+    info = fs.get_file_info(root)
+    if info.type == pafs.FileType.NotFound:
+        raise FileNotFoundError(path)
+    if info.type == pafs.FileType.Directory:
+        files = sorted(
+            f.path
+            for f in fs.get_file_info(pafs.FileSelector(root))
+            if f.type == pafs.FileType.File
+            and fnmatch.fnmatchcase(f.base_name, WORKBOOK_GLOB)
+            and not f.base_name.startswith((".", "_", "~"))
+        )
+    else:
+        files = [root]
+    units: list[tuple[str, str | None, str | None]] = []
+    for file in files:
+        if _is_xls(file):
+            units.append((file, None, None))
+            continue
+        with fs.open_input_file(file) as fh, zipfile.ZipFile(fh) as zf:
+            units.extend(
+                (file, name, part)
+                for name, part in _sheet_parts(zf)
+                if sheet_prefix is None or name.startswith(sheet_prefix)
+            )
+    return units
+
+
+def _xlsx_unit_rows(
+    fh, units, formatted: bool
+) -> Iterator[tuple[str, int, list[str]]]:
+    with zipfile.ZipFile(fh) as zf:
+        shared = _shared_strings(zf)
+        styles = _load_styles(zf) if formatted else None
+        for _, name, part in units:
+            yield from _sheet_rows(zf, name, part, shared, styles)
+
+
+def read_units(
+    path: str, units, sheet_prefix: str | None = None, formatted: bool = False
+) -> Iterator[tuple[str, str, int, list[str]]]:
+    """Stream (_source_file, _sheet, _row_index, _cells) for work-list
+    units from ``plan_units(path, ...)``, in unit order. Runs on
+    executors. Consecutive units of one workbook share its open file and
+    its shared-strings table."""
+    fs, _ = _filesystem(path)
+    for file, group in itertools.groupby(units, key=lambda u: u[0]):
+        fname = file.rsplit("/", 1)[-1]
+        with fs.open_input_file(file) as fh:
+            if _is_xls(file):
+                rows = parse_xls_rows(fh.read(), sheet_prefix, formatted=formatted)
+            else:
+                rows = _xlsx_unit_rows(fh, group, formatted)
+            for row in rows:
+                yield (fname, *row)
+
+
+def register_by_value() -> None:
+    """Ship the scan's modules inside pickled closures, so executors need
+    no repo checkout on sys.path (the driver may import this package by
+    file path from any cwd)."""
+    from pyspark.cloudpickle import register_pickle_by_value
+
+    from shuttlestandalonedbcreator_spark.sources import biff, excel
+
+    for mod in (biff, excel, numfmt):
+        register_pickle_by_value(mod)
 
 
 def read_workbook_rows(
     spark: SparkSession,
     path: str,
     sheet_prefix: str | None = None,
-    glob: str = "*.xls*",
-    chunk_rows: int = 50_000,
     formatted: bool = False,
 ) -> DataFrame:
     """Distributed raw scan: every row of every matching sheet of every
     workbook under ``path`` → (_source_file, _sheet, _row_index,
     _cells array<string>).
 
-    Parallelism is per-workbook (binaryFile splits files across tasks);
-    within a file the sheet XML streams through iterparse AND the parsed
-    rows leave the task in ``chunk_rows``-sized Arrow batches — task
-    memory is O(chunk + workbook bytes), NOT O(workbook rows), matching
-    the reference's bounded-memory streaming-scan claim for 700 MB+
-    workbooks (SQLiteDirectImporter.java:330-379). S1 discovery (glob,
-    temp-file exclusion) rides on pathGlobFilter; `~*` lock files are
-    excluded like the reference's findExcelFiles (:226-248).
+    The ``plan_units`` work list becomes a JVM local relation
+    (``operators/util.py:local_frame``), which Spark slices into
+    min(units, defaultParallelism) contiguous partitions, so rows arrive
+    in unit order and a huge multi-sheet workbook parses its sheets in
+    parallel. Each task streams its sheets through iterparse and flushes
+    ``CHUNK_ROWS``-row Arrow batches: task memory is O(chunk + shared
+    strings), NOT O(workbook), the reference's bounded-memory claim for
+    700 MB+ workbooks (SQLiteDirectImporter.java:330-379).
     """
-    # Executors may not have the repo on sys.path (the driver harness can
-    # import this module by file path) — serialize this module BY VALUE so
-    # the mapInPandas closure carries its own code.
-    import shuttlestandalonedbcreator_spark.sources.biff as _biff_module
-    import shuttlestandalonedbcreator_spark.sources.excel as _self_module
-    import shuttlestandalonedbcreator_spark.sources.numfmt as _numfmt_module
-    from pyspark.cloudpickle import register_pickle_by_value
+    from shuttlestandalonedbcreator_spark.operators.util import local_frame
 
-    register_pickle_by_value(_self_module)
-    register_pickle_by_value(_biff_module)
-    register_pickle_by_value(_numfmt_module)
-    # closure variable (not an executor-side import — the repo package may
-    # not be on executor sys.path; by-value pickling carries the code)
-    parse_xls = _biff_module.parse_xls_rows
-
-    binary = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-        .filter(~F.element_at(F.split(F.col("path"), "/"), -1).startswith("~"))
-    )
+    register_by_value()
+    units = plan_units(path, sheet_prefix)
 
     def parse_partition(batches):
         import pandas as pd
@@ -211,248 +310,32 @@ def read_workbook_rows(
         cols = ["_source_file", "_sheet", "_row_index", "_cells"]
         for pdf in batches:
             rows = []
-            for path_value, content in zip(pdf["path"], pdf["content"]):
-                if str(path_value).lower().endswith(".xls"):
-                    gen = parse_xls(
-                        bytes(content), sheet_prefix, formatted=formatted
-                    )
-                else:
-                    gen = parse_xlsx_rows(
-                        bytes(content), sheet_prefix, formatted=formatted
-                    )
-                fname = str(path_value).rsplit("/", 1)[-1]
-                for sheet, row_idx, cells in gen:
-                    rows.append((fname, sheet, row_idx, cells))
-                    if len(rows) >= chunk_rows:
-                        # bound task memory: flush a chunk mid-workbook
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
+            batch = zip(pdf["file"], pdf["sheet"], pdf["part"])
+            for row in read_units(path, batch, sheet_prefix, formatted):
+                rows.append(row)
+                if len(rows) >= CHUNK_ROWS:
+                    yield pd.DataFrame(rows, columns=cols)
+                    rows = []
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
 
-    schema = "_source_file string, _sheet string, _row_index int, _cells array<string>"
-    return binary.mapInPandas(parse_partition, schema=schema)
-
-
-def parse_one_sheet(
-    data: bytes, sheet_name: str, part: str
-) -> Iterator[tuple[str, int, list[str]]]:
-    """Stream (sheet_name, row_index, cells) for a SINGLE sheet part —
-    the unit of work for the sheet-parallel scan."""
-    with zipfile.ZipFile(io.BytesIO(data)) as zf:
-        shared = _shared_strings(zf)
-        row_idx = 0
-        with zf.open(part) as fh:
-            for _, row in ET.iterparse(fh):
-                if row.tag != f"{_NS}row":
-                    continue
-                cells: list[str] = []
-                for cell in row.iter(f"{_NS}c"):
-                    ref = cell.get("r")
-                    pos = _col_index(ref) if ref else len(cells)
-                    while len(cells) < pos:
-                        cells.append("")
-                    value = _cell_value(cell, shared)
-                    if pos < len(cells):
-                        cells[pos] = value
-                    else:
-                        cells.append(value)
-                yield sheet_name, row_idx, cells
-                row_idx += 1
-                row.clear()
-
-
-class _HadoopRangedFile(io.RawIOBase):
-    """Read-only seekable file over the Hadoop FS API (py4j), so stdlib
-    ``zipfile`` can do RANGED reads — central directory, workbook.xml —
-    against ANY configured filesystem (file://, hdfs://, s3a://, ...)
-    without downloading the workbook. Driver-side metadata path only;
-    bulk sheet bytes are read executor-side."""
-
-    def __init__(self, jvm, jfs, jpath, size: int):
-        self._jvm = jvm
-        self._in = jfs.open(jpath)
-        self._size = size
-        self._pos = 0
-
-    def readable(self) -> bool:
-        return True
-
-    def seekable(self) -> bool:
-        return True
-
-    def seek(self, offset: int, whence: int = 0) -> int:
-        if whence == 0:
-            pos = offset
-        elif whence == 1:
-            pos = self._pos + offset
-        else:
-            pos = self._size + offset
-        self._pos = max(0, min(pos, self._size))
-        self._in.seek(self._pos)
-        return self._pos
-
-    def tell(self) -> int:
-        return self._pos
-
-    def read(self, n: int = -1) -> bytes:
-        if n < 0 or self._pos + n > self._size:
-            n = self._size - self._pos
-        if n <= 0:
-            return b""
-        data = bytes(
-            self._jvm.org.apache.commons.io.IOUtils.toByteArray(self._in, n)
-        )
-        self._pos += len(data)
-        return data
-
-    def readinto(self, b) -> int:  # BufferedReader's actual entry point
-        data = self.read(len(b))
-        b[: len(data)] = data
-        return len(data)
-
-    def close(self) -> None:
-        try:
-            self._in.close()
-        finally:
-            super().close()
-
-
-def _hadoop_glob_files(spark: SparkSession, path: str, glob: str):
-    """(jvm, jfs, [(jpath, uri_str, length), ...]) for the workbooks under
-    ``path`` via the Hadoop FS API — same visibility as binaryFile."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    hconf = sc._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    jfs = jpath.getFileSystem(hconf)
-    status = jfs.getFileStatus(jpath)
-    if status.isDirectory():
-        pattern = jvm.org.apache.hadoop.fs.Path(jpath, glob)
-        listing = jfs.globStatus(pattern) or []
-    else:
-        listing = [status]
-    out = []
-    for st in sorted(listing, key=lambda s: str(s.getPath())):
-        p = st.getPath()
-        if p.getName().startswith("~"):
-            continue  # S1 temp-lock exclusion, same as the per-file scan
-        out.append((p, str(p.toUri()), st.getLen()))
-    return jvm, jfs, out
-
-
-def _read_bytes_any(path: str) -> bytes:
-    """Executor-side whole-file read for local paths AND object-store
-    URIs (pyarrow.fs resolves s3://, hdfs://, gs:// where the runtime
-    supports them; file: URIs and bare paths stay stdlib)."""
-    if path.startswith("file:"):
-        local = path[5:]
-        while local.startswith("//"):
-            local = local[1:]
-        with open(local, "rb") as fh:
-            return fh.read()
-    if "://" in path:
-        import pyarrow.fs as pafs
-
-        fs, p = pafs.FileSystem.from_uri(path)
-        with fs.open_input_stream(p) as fh:
-            return fh.read()
-    with open(path, "rb") as fh:
-        return fh.read()
-
-
-def read_workbook_rows_sheet_parallel(
-    spark: SparkSession,
-    path: str,
-    sheet_prefix: str | None = None,
-    glob: str = "*.xlsx",
-    chunk_rows: int = 50_000,
-) -> DataFrame:
-    """`read_workbook_rows` with per-SHEET task granularity — the scan
-    for the reference's headline case: ONE huge multi-sheet workbook
-    (SQLiteDirectImporter.java:330-379 processes it on a single thread;
-    the per-FILE scan caps parallelism at the file count). The driver
-    reads only each workbook's central directory + workbook.xml (KBs of
-    RANGED reads through the Hadoop FS API — object-store visible, same
-    filesystems as binaryFile), builds the (file, sheet, part) work
-    list, and repartitions it so every SHEET parses in its own task.
-
-    Trade-off vs the per-file scan: each task re-opens the workbook from
-    its URI (the sharedStrings table is re-parsed per sheet), so this
-    wins when sheets are large and few files dominate; the per-file scan
-    wins on many small workbooks. XLSX only (a BIFF .xls is one stream —
-    it cannot split by sheet without a full scan).
-
-    Output contract is identical to read_workbook_rows.
-    """
-    import shuttlestandalonedbcreator_spark.sources.excel as _self_module
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self_module)
-
-    jvm, jfs, files = _hadoop_glob_files(spark, path, glob)
-    work: list[tuple[str, str, str]] = []
-    for jp, uri, size in files:
-        ranged = io.BufferedReader(_HadoopRangedFile(jvm, jfs, jp, size))
-        with zipfile.ZipFile(ranged) as zf:
-            for sheet_name, part in _sheet_parts(zf):
-                if sheet_prefix is not None and not sheet_name.startswith(
-                    sheet_prefix
-                ):
-                    continue
-                work.append((uri, sheet_name, part))
-    if not work:
-        return spark.createDataFrame(
-            [], "_source_file string, _sheet string, _row_index int, _cells array<string>"
-        )
-    work_df = spark.createDataFrame(
-        work, "_path string, _sheet_name string, _part string"
-    ).repartition(len(work))
-
-    def parse_sheets(batches):
-        import pandas as pd
-
-        cols = ["_source_file", "_sheet", "_row_index", "_cells"]
-        for pdf in batches:
-            rows = []
-            for p, sheet_name, part in zip(
-                pdf["_path"], pdf["_sheet_name"], pdf["_part"]
-            ):
-                data = _read_bytes_any(str(p))
-                fname = str(p).rsplit("/", 1)[-1]
-                for sheet, row_idx, cells in parse_one_sheet(
-                    data, str(sheet_name), str(part)
-                ):
-                    rows.append((fname, sheet, row_idx, cells))
-                    if len(rows) >= chunk_rows:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    schema = "_source_file string, _sheet string, _row_index int, _cells array<string>"
-    return work_df.mapInPandas(parse_sheets, schema=schema)
+    return local_frame(spark, units, _UNIT_SCHEMA).mapInPandas(
+        parse_partition, schema=RAW_SCHEMA
+    )
 
 
 def read_transfer_reports(
     spark: SparkSession,
     path: str,
     sheet_prefix: str = "Transfer Report",
-    parallel: bool = False,
 ) -> DataFrame:
     """The reference's ingest scan (S1-S5): matching sheets, header row
     dropped, cells mapped POSITIONALLY onto the 19 RAW_COLUMNS (headers
     captured but never validated, :469-472, :511-513), short rows padded
-    with '' (:512). Feed the result to plans.transfer_pipeline.ingest.
-
-    ``parallel=True`` scans per SHEET instead of per file
-    (`read_workbook_rows_sheet_parallel`) — the shape for ONE huge
-    multi-sheet workbook (xlsx only); projection rules are identical, so
-    capacity rehearsals measure exactly the production mapping."""
+    with '' (:512). Feed the result to plans.transfer_pipeline.ingest."""
     from shuttlestandalonedbcreator_spark.plans.transfer_pipeline import RAW_COLUMNS
 
-    scan = read_workbook_rows_sheet_parallel if parallel else read_workbook_rows
-    raw = scan(spark, path, sheet_prefix=sheet_prefix)
+    raw = read_workbook_rows(spark, path, sheet_prefix=sheet_prefix)
     no_header = raw.filter(F.col("_row_index") > 0)  # S5 per sheet
     cols = [
         # F.get (not getItem) → NULL past the end under ANSI; '' via coalesce
@@ -462,8 +345,10 @@ def read_transfer_reports(
     return no_header.select(
         *cols,
         F.col("_source_file"),
-        # global arrival order: workbook, then sheet, then row — the
-        # reference processes files sequentially (:170-200)
+        # global arrival order = work-list order: workbook by sorted path,
+        # then sheet, then row — the reference processes files
+        # sequentially (:170-200); the workbook that sorts last wins
+        # last-write-wins
         F.monotonically_increasing_id().alias("_ingest_seq"),
     )
 

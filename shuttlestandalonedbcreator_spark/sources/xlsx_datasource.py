@@ -2,9 +2,9 @@
 scan AND sink as a first-class Spark 4 Python DataSource
 (pyspark.sql.datasource API).
 
-Same parse core as `excel.read_workbook_rows` (S2/S3 scans, stdlib-only),
-re-exposed through the catalog-level source interface so the reference's
-ingest source composes like any built-in format:
+An adapter over the one workbook scan in `sources/excel.py`, exposed
+through the catalog-level source interface so the reference's ingest
+source composes like any built-in format:
 
     register_xlsx_source(spark)
     df = (spark.read.format("xlsx")
@@ -12,12 +12,10 @@ ingest source composes like any built-in format:
           .load("/data/source"))
     df.write.format("xlsx").mode("overwrite").save("/data/out")
 
-Read partitioning: one input partition PER WORKBOOK (the natural
-parallel unit — sheet XML inside a file must stream sequentially, files
-are independent). The driver lists files; executors each open and parse
-only their own workbook, so memory is bounded by one sheet's row
-regardless of corpus size. Discovery mirrors S1 (glob + `~*` temp-file
-exclusion, SQLiteDirectImporter.java:226-248).
+Read partitioning: `partitions()` calls the same planner as
+`excel.read_workbook_rows` (`plan_units`: S1 discovery, one unit per
+matching .xlsx sheet and per .xls file) and returns one partition per
+unit; `read()` parses its unit with the same `excel.read_units`.
 
 Write partitioning: the standard Spark sink shape — one
 `part-<n>-<uuid>.xlsx` workbook per task into the target directory
@@ -26,16 +24,10 @@ is what scales), every column rendered as its string form with a header
 row, via `excel.write_workbook`. `mode("overwrite")` clears prior
 part files on commit through a staged `_temporary` rename, so a failed
 job never half-replaces the old data.
-
-Scope: file listing uses the local/posix filesystem (the reference's
-drop-folder contract is a local directory). For object stores, the
-binaryFile-based `read_workbook_rows` path covers the same scan with
-Hadoop FS discovery.
 """
 
 from __future__ import annotations
 
-import fnmatch
 import os
 import shutil
 import uuid
@@ -54,15 +46,18 @@ from pyspark.sql.datasource import (
 # re-enter the import machinery with no repo on sys.path (NOTES.md fact
 # #4). As module-level globals of a by-value-registered module, these
 # function objects travel inside the pickled class instead.
-from shuttlestandalonedbcreator_spark.sources.biff import parse_xls_rows
-from shuttlestandalonedbcreator_spark.sources.excel import parse_xlsx_rows, write_workbook
+from shuttlestandalonedbcreator_spark.sources.excel import (
+    RAW_SCHEMA,
+    plan_units,
+    read_units,
+    register_by_value,
+    write_workbook,
+)
 
-RAW_SCHEMA = "_source_file string, _sheet string, _row_index int, _cells array<string>"
 
-
-class _WorkbookPartition(InputPartition):
-    def __init__(self, path: str) -> None:
-        self.path = path
+class _UnitPartition(InputPartition):
+    def __init__(self, unit: tuple[str, str | None, str | None]) -> None:
+        self.unit = unit
 
 
 class XlsxReader(DataSourceReader):
@@ -71,30 +66,14 @@ class XlsxReader(DataSourceReader):
         if not self.path:
             raise ValueError("xlsx source requires a path: .load('<dir-or-file>')")
         self.sheet_prefix = options.get("sheetprefix")
-        self.glob = options.get("glob", "*.xls*")
 
     def partitions(self):
-        if os.path.isdir(self.path):
-            files = sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if fnmatch.fnmatch(f, self.glob) and not f.startswith("~")
-            )
-        else:
-            files = [self.path]
-        return [_WorkbookPartition(p) for p in files]
+        return [_UnitPartition(u) for u in plan_units(self.path, self.sheet_prefix)]
 
-    def read(self, partition: _WorkbookPartition):
-        with open(partition.path, "rb") as fh:
-            data = fh.read()
-        parse = (
-            parse_xls_rows
-            if partition.path.lower().endswith(".xls")
-            else parse_xlsx_rows
-        )
-        fname = os.path.basename(partition.path)
-        for sheet, row_idx, cells in parse(data, self.sheet_prefix):
-            yield (fname, sheet, row_idx, cells)
+    def read(self, partition: _UnitPartition | None):
+        # zero units: Spark still runs one task, with partition None
+        if partition is not None:
+            yield from read_units(self.path, [partition.unit], self.sheet_prefix)
 
 
 class _PartMessage(WriterCommitMessage):
@@ -163,17 +142,12 @@ class XlsxDataSource(DataSource):
 
 
 def register_xlsx_source(spark: SparkSession) -> None:
-    """Register the format (idempotent). Ships the parse modules by value
-    so executor pythons need no repo checkout (NOTES.md fact #4)."""
-    import shuttlestandalonedbcreator_spark.sources.biff as _biff
-    import shuttlestandalonedbcreator_spark.sources.excel as _excel
-    import shuttlestandalonedbcreator_spark.sources.numfmt as _numfmt
+    """Register the format (idempotent). Ships the scan modules and this
+    one by value so executor pythons need no repo checkout (NOTES.md
+    fact #4)."""
     import shuttlestandalonedbcreator_spark.sources.xlsx_datasource as _self
     from pyspark.cloudpickle import register_pickle_by_value
 
-    # numfmt too: excel.py references it at module level, so the pickled
-    # class graph reaches it — by reference (ModuleNotFoundError on a
-    # worker with no repo checkout) unless registered by value here
-    for mod in (_biff, _excel, _numfmt, _self):
-        register_pickle_by_value(mod)
+    register_by_value()
+    register_pickle_by_value(_self)
     spark.dataSource.register(XlsxDataSource)

@@ -58,20 +58,20 @@ def test_raw_scan_sheets_and_rows(spark, workbook_dir):
     }
 
 
-def test_raw_scan_chunked_flush_preserves_rows(spark, workbook_dir):
-    """Bounded-memory scan: with chunk_rows=2 every workbook flushes
-    multiple mid-file Arrow batches (task memory is O(chunk), not
+def test_raw_scan_chunked_flush_preserves_rows(spark, workbook_dir, monkeypatch):
+    """Bounded-memory scan: with CHUNK_ROWS=2 every sheet flushes
+    multiple mid-sheet Arrow batches (task memory is O(chunk), not
     O(workbook rows) — the reference's 700 MB+ workbook claim). Results
     must be IDENTICAL to the unchunked scan, including row indexes
     across chunk boundaries."""
+    from shuttlestandalonedbcreator_spark.sources import excel
+
+    key = ["_source_file", "_sheet", "_row_index", "_cells"]
     base = read_workbook_rows(spark, workbook_dir, sheet_prefix="Transfer Report")
-    chunked = read_workbook_rows(
-        spark, workbook_dir, sheet_prefix="Transfer Report", chunk_rows=2
-    )
-    key = ["_source_file", "_sheet", "_row_index"]
-    assert sorted(map(tuple, base.select(*key, "_cells").collect())) == sorted(
-        map(tuple, chunked.select(*key, "_cells").collect())
-    )
+    base_rows = sorted(map(tuple, base.select(*key).collect()))
+    monkeypatch.setattr(excel, "CHUNK_ROWS", 2)
+    chunked = read_workbook_rows(spark, workbook_dir, sheet_prefix="Transfer Report")
+    assert sorted(map(tuple, chunked.select(*key).collect())) == base_rows
 
 
 def test_transfer_scan_positional_and_padding(spark, workbook_dir):
@@ -273,8 +273,8 @@ def test_xls_end_to_end_pipeline(spark, tmp_path):
 
 def test_xlsx_python_datasource_matches_mapinpandas_scan(spark, workbook_dir):
     """spark.read.format('xlsx') (Spark 4 Python DataSource) returns the
-    exact rows of the binaryFile+mapInPandas scan, partitioned one task
-    per workbook, with S1 discovery semantics (glob + ~lock exclusion)."""
+    exact rows of the mapInPandas scan, partitioned one task per work
+    unit, with S1 discovery semantics (glob + ~lock exclusion)."""
     from shuttlestandalonedbcreator_spark.sources.xlsx_datasource import (
         register_xlsx_source,
     )
@@ -294,8 +294,8 @@ def test_xlsx_python_datasource_matches_mapinpandas_scan(spark, workbook_dir):
         )
 
     assert canon(ds) == canon(ref)
-    # one partition per (non-temp) workbook
-    assert ds.rdd.getNumPartitions() == 2
+    # one partition per work unit: 3 matching sheets across 2 workbooks
+    assert ds.rdd.getNumPartitions() == 3
 
 
 def _zip_replace(path, replacements):
@@ -461,29 +461,96 @@ def test_extract_sheet_preserving_handles_paired_sheet_elements(tmp_path):
     ]
 
 
-def test_sheet_parallel_scan_matches_per_file_scan(spark, workbook_dir):
-    """The per-SHEET scan (one task per sheet — the 700 MB single-
-    workbook case) must produce EXACTLY the per-file scan's rows, honor
-    the sheet prefix and ~lock exclusion, and actually split tasks at
-    sheet granularity."""
-    from shuttlestandalonedbcreator_spark.sources.excel import (
-        read_workbook_rows_sheet_parallel,
+def test_scan_partitions_one_unit_per_sheet(spark, workbook_dir):
+    """The work list has one unit per matching sheet (3 across 2
+    workbooks here), and the scan slices it into min(units,
+    defaultParallelism) tasks, so the sheets of one huge workbook parse
+    in parallel. Rows equal parse_xlsx_rows over each workbook."""
+    import os
+
+    from shuttlestandalonedbcreator_spark.sources.excel import parse_xlsx_rows
+
+    df = read_workbook_rows(spark, workbook_dir, sheet_prefix="Transfer Report")
+    assert df.rdd.getNumPartitions() == min(3, spark.sparkContext.defaultParallelism)
+    expected = []
+    for name in ("JobA.xlsx", "JobB.xlsx"):
+        with open(os.path.join(workbook_dir, name), "rb") as fh:
+            expected += [
+                (name, sheet, i, cells)
+                for sheet, i, cells in parse_xlsx_rows(fh.read(), "Transfer Report")
+            ]
+    got = [(r[0], r[1], r[2], list(r[3])) for r in df.collect()]
+    assert got == expected  # unit order: sorted path, then sheet, then row
+
+
+def _both_scans(spark, path, sheet_prefix=None):
+    from shuttlestandalonedbcreator_spark.sources.xlsx_datasource import (
+        register_xlsx_source,
     )
 
-    per_file = read_workbook_rows(spark, workbook_dir, sheet_prefix="Transfer Report")
-    per_sheet = read_workbook_rows_sheet_parallel(
-        spark, workbook_dir, sheet_prefix="Transfer Report"
-    )
-    key = ["_source_file", "_sheet", "_row_index"]
-    assert sorted(map(tuple, per_file.select(*key, "_cells").collect())) == sorted(
-        map(tuple, per_sheet.select(*key, "_cells").collect())
-    )
-    # 3 matching sheets across 2 workbooks → 3 input partitions
-    assert per_sheet.rdd.getNumPartitions() == 3
+    register_xlsx_source(spark)
+    reader = spark.read.format("xlsx")
+    if sheet_prefix is not None:
+        reader = reader.option("sheetPrefix", sheet_prefix)
+    return {
+        "read_workbook_rows": read_workbook_rows(spark, path, sheet_prefix),
+        "format(xlsx)": reader.load(path),
+    }
 
-    # no matching sheets → empty frame with the same schema, no job blowup
-    none = read_workbook_rows_sheet_parallel(spark, workbook_dir, sheet_prefix="Nope")
-    assert none.count() == 0 and none.columns == per_file.columns
+
+def test_scan_skips_hidden_and_lock_files(spark, tmp_path):
+    """S1 discovery on both entry points: names starting with '.', '_'
+    or '~' are skipped even when they match *.xls* (LibreOffice's
+    .~lock.<name># lock file is plain text, not a zip)."""
+    write_workbook({"Transfer Report": _report_rows([["/A", "1"]])}, str(tmp_path / "JobA.xlsx"))
+    (tmp_path / ".~lock.JobA.xlsx#").write_text(",someone,host,01.01.2026 10:00,user;")
+    write_workbook({"Transfer Report": [["x"]]}, str(tmp_path / "~$JobA.xlsx"))
+    write_workbook({"Transfer Report": [["x"]]}, str(tmp_path / "_staging.xlsx"))
+    for entry, df in _both_scans(spark, str(tmp_path)).items():
+        got = {(r["_source_file"], r["_row_index"]) for r in df.collect()}
+        assert got == {("JobA.xlsx", 0), ("JobA.xlsx", 1)}, entry
+
+
+def test_scan_empty_input_gives_typed_empty_frame(spark, tmp_path):
+    """An empty directory and a prefix no sheet matches both give zero
+    rows with RAW_SCHEMA, on both entry points (zero units: the
+    DataSource's read is called with partition None)."""
+    from pyspark.sql.types import DataType
+
+    from shuttlestandalonedbcreator_spark.sources.xlsx_datasource import RAW_SCHEMA
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    write_workbook({"Transfer Report": [["h"], ["x"]]}, str(tmp_path / "JobA.xlsx"))
+    cases = [(str(empty), None), (str(tmp_path), "Nope")]
+    for path, prefix in cases:
+        for entry, df in _both_scans(spark, path, prefix).items():
+            assert df.collect() == [], (entry, path, prefix)
+            assert df.schema == DataType.fromDDL(RAW_SCHEMA), entry
+
+
+def test_cross_workbook_last_write_wins_follows_workbook_name(spark, tmp_path):
+    """Arrival order is the work-list order (sorted path, then sheet,
+    then row), so when two workbooks re-report one (file_name,
+    target_file_id) the workbook that sorts last wins — here also the
+    larger one, which Spark's size-ordered file splits would read first."""
+    row = ["/A/f1.pdf", "100", "90", "11"] + [""] * 11
+    filler = [
+        [f"/B/g{i}.pdf", "1", "1", str(1000 + i)] + [""] * 11 + ["success", "", "", ""]
+        for i in range(3000)
+    ]
+    write_workbook(
+        {"Transfer Report": _report_rows([row + ["failed", "", "", ""]])},
+        str(tmp_path / "Job1.xlsx"),
+    )
+    write_workbook(
+        {"Transfer Report": _report_rows([*filler, row + ["success", "", "", ""]])},
+        str(tmp_path / "Job2.xlsx"),
+    )
+    assert (tmp_path / "Job2.xlsx").stat().st_size > (tmp_path / "Job1.xlsx").stat().st_size
+    out = ingest(read_transfer_reports(spark, str(tmp_path)))
+    got = out.filter(F.col("file_name") == "/A/f1.pdf").collect()
+    assert [(r["file_status"], r["job_name"]) for r in got] == [("success", "Job2")]
 
 
 def test_xlsx_python_datasource_write_roundtrip(spark, tmp_path):

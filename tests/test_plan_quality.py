@@ -567,10 +567,7 @@ def test_no_python_list_frames_outside_local_frame():
     Python RDD, and executing it starts Python workers only to unpickle
     the rows (~0.4 s per warm use of a 1,025-row offsets table on a
     4-core box, against ~0.08 s through the helper). Source-level gate:
-    the two calls may appear ONLY inside ``local_frame`` and in
-    ``sources/excel.py``, whose work list feeds ``mapInPandas`` (Python
-    workers run there anyway) and whose partition order decides ingest's
-    cross-workbook last-write-wins."""
+    the two calls may appear ONLY inside ``local_frame``."""
     import ast
     import pathlib
 
@@ -580,8 +577,6 @@ def test_no_python_list_frames_outside_local_frame():
     offenders = []
     for py in root.rglob("*.py"):
         rel = py.relative_to(root).as_posix()
-        if rel == "sources/excel.py":
-            continue
         tree = ast.parse(py.read_text())
         helper = set()
         if rel == "operators/util.py":

@@ -4,8 +4,8 @@ write_workbook emits inline strings, so without these tests the sst
 branch of sources/excel.py would be covered only by the manual 700 MB
 rehearsal).
 
-Covers: sst index resolution across both scan granularities (per-file
-binaryFile and per-sheet ranged), rich-text runs (<r><t> fragments
+Covers: sst index resolution in the distributed scan (each task opens
+the workbook and parses its sst) and in parse_xlsx_rows, rich-text runs (<r><t> fragments
 joined), xml:space-preserved whitespace, and the empty-<v> cell edge.
 """
 
@@ -19,32 +19,31 @@ import pytest
 from shuttlestandalonedbcreator_spark.sources.excel import (
     parse_xlsx_rows,
     read_workbook_rows,
-    read_workbook_rows_sheet_parallel,
 )
 from tools.workbook700_bench import _unique_strings, generate
 
 _NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 
 
-def test_sst_workbook_scan_matches_on_both_granularities(spark, tmp_path):
+def test_sst_workbook_scan_matches_parse_xlsx_rows(spark, tmp_path):
     """The sst-referenced fixture from the capacity-rehearsal generator,
-    at toy size: the per-file and per-sheet scans must agree row for
-    row, and sst indices must resolve to the synthesized strings."""
+    at toy size: the distributed scan (one unit per sheet) must equal
+    parse_xlsx_rows over the whole workbook row for row, and sst indices
+    must resolve to the synthesized strings."""
     src = tmp_path / "src"
     src.mkdir()
     generate(str(src / "r.xlsx"), rows_per_sheet=40, n_sheets=2)
 
-    per_file = read_workbook_rows(spark, str(src)).orderBy(
+    scanned = read_workbook_rows(spark, str(src)).orderBy(
         "_sheet", "_row_index"
     ).collect()
-    per_sheet = read_workbook_rows_sheet_parallel(spark, str(src)).orderBy(
-        "_sheet", "_row_index"
-    ).collect()
-    assert len(per_file) == 2 * 41  # 40 rows + header per sheet
-    assert [tuple(r) for r in per_file] == [tuple(r) for r in per_sheet]
+    assert len(scanned) == 2 * 41  # 40 rows + header per sheet
+    with open(src / "r.xlsx", "rb") as fh:
+        parsed = [("r.xlsx", s, i, c) for s, i, c in parse_xlsx_rows(fh.read())]
+    assert [(r[0], r[1], r[2], list(r[3])) for r in scanned] == parsed
 
     # sst references resolved: row g of sheet s carries _unique_strings(g)
-    by_key = {(r["_sheet"], r["_row_index"]): r["_cells"] for r in per_file}
+    by_key = {(r["_sheet"], r["_row_index"]): r["_cells"] for r in scanned}
     cells = by_key[("Transfer Report 2", 5)]  # g = 40 + 4
     path, checksum, name = _unique_strings(44)
     assert cells[0] == path

@@ -11,11 +11,11 @@ partitioned parquet sink (S6/S7). Prints one JSON line:
     {"metric": "ingest_rows_per_sec", "value": ..., "rows": ...,
      "files": ..., "gen_sec": ..., "ingest_sec": ...}
 
-Parallelism note: the scan parallelizes per WORKBOOK (sheet XML is
-sequential within a file — same constraint the reference has, which it
-serves with one thread for the whole corpus). Throughput therefore
-scales with file count up to the core count; run with several files to
-measure the parallel path.
+Parallelism note: the scan parallelizes per SHEET (sheet XML is
+sequential — the reference serves the whole corpus with one thread).
+These workbooks hold one report sheet each, so throughput scales with
+file count up to the core count; run with several files to measure the
+parallel path.
 
 Usage: python tools/ingest_bench.py [rows_per_file] [n_files]
 """
