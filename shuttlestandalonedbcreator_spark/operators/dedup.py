@@ -12,7 +12,8 @@ Scale extensions (training-data pipeline surface, BASELINE.json north star):
   cross join.
 - ``minhash_lsh_pairs``  — MinHash signatures + LSH banding; candidate
   pairs only from shared buckets. The scale path for 100 TB: cost is
-  O(docs × shingles) + a join keyed on (band, bucket-hash).
+  O(docs × shingles) + one exchange keyed on (band, bucket-hash) into
+  signature-carrying posting lists, verified inside the pair expansion.
 - ``simhash``            — 64-bit SimHash fingerprints per doc;
   near-dup = small Hamming distance, candidates from band equality.
 
@@ -27,7 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from shuttlestandalonedbcreator_spark.functions.text import let
-from shuttlestandalonedbcreator_spark.operators.util import fan_out
+from shuttlestandalonedbcreator_spark.operators.util import fan_out, ordered_pairs
 
 
 # ---------------------------------------------------------------------------
@@ -180,19 +181,19 @@ def _ngram_pair_intersections(
         .agg(F.array_sort(F.collect_list(F.struct("_id", "_sz"))).alias("_ids"))
         .filter(F.size("_ids") >= 2)
     )
-    inner = (
-        "transform(slice(_ids, i + 2, size(_ids)), "
-        "y -> struct(x._id AS a, x._sz AS sza, y._id AS b, y._sz AS szb))"
-    )
-    if jaccard_floor is not None:
-        inner = (
-            f"filter({inner}, p -> "
-            "CAST(least(p.sza, p.szb) AS DOUBLE) / "
-            f"CAST(greatest(p.sza, p.szb) AS DOUBLE) >= {jaccard_floor!r})"
-        )
+    def floor(p: Column) -> Column:
+        return F.least(p["sza"], p["szb"]).cast("double") / F.greatest(
+            p["sza"], p["szb"]
+        ).cast("double") >= F.lit(jaccard_floor)
+
     pairs = postings.select(
-        F.explode(
-            F.expr(f"flatten(transform(_ids, (x, i) -> {inner}))")
+        ordered_pairs(
+            F.col("_ids"),
+            lambda x, y: F.struct(
+                x["_id"].alias("a"), x["_sz"].alias("sza"),
+                y["_id"].alias("b"), y["_sz"].alias("szb"),
+            ),
+            None if jaccard_floor is None else floor,
         ).alias("_p")
     )
     return pairs.groupBy(F.col("_p.a").alias("id_a"), F.col("_p.b").alias("id_b")).agg(
@@ -357,6 +358,17 @@ def minhash_index(
     )
 
 
+def _agree(a: Column, b: Column) -> Column:
+    """Number of positions at which two minhash signatures agree."""
+    return F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq))
+
+
+def _est_jaccard(agree: Column, num_hashes: int) -> Column:
+    """Estimated Jaccard: the share of agreeing minhashes, rounded to 6
+    places so every engine compares the same value with a threshold."""
+    return F.round(agree.cast("double") / F.lit(num_hashes), 6)
+
+
 def incremental_neardup_pairs(
     new_docs: DataFrame,
     index: DataFrame,
@@ -395,17 +407,45 @@ def incremental_neardup_pairs(
         )
         .dropDuplicates(["new_id", "match_id"])
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("_siga"), F.col("_sigb"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
     return (
-        cand.withColumn("est_jaccard", F.round(agree.cast("double") / F.lit(num_hashes), 6))
+        cand.withColumn(
+            "est_jaccard",
+            _est_jaccard(_agree(F.col("_siga"), F.col("_sigb")), num_hashes),
+        )
         .filter(F.col("est_jaccard") >= threshold)
         .select("new_id", "match_id", "est_jaccard")
     )
+
+
+def _lsh_agreements(
+    sig: DataFrame, num_hashes: int, bands: int, threshold: float
+) -> DataFrame:
+    """Distinct (id_a, id_b, agree) for every id_a < id_b pair that shares
+    a whole LSH band and whose estimated Jaccard is >= ``threshold``.
+
+    One (band, bucket)-keyed exchange into posting lists that carry the
+    signatures, so the agreement count runs inside the pair expansion and
+    needs no join back (the shape of ``_banded_hamming_pairs``). Pairs
+    below ``threshold`` drop inside the expansion, before the dedup
+    exchange, through the same ``_est_jaccard`` expression a final filter
+    would evaluate, so the prune is lossless."""
+    lists = (
+        _banded(sig, num_hashes, bands)
+        .groupBy("_band", "_bucket")
+        .agg(F.array_sort(F.collect_list(F.struct("_id", "_sig"))).alias("_m"))
+        .filter(F.size("_m") >= 2)
+    )
+    return lists.select(
+        ordered_pairs(
+            F.col("_m"),
+            lambda x, y: F.struct(
+                x["_id"].alias("id_a"),
+                y["_id"].alias("id_b"),
+                _agree(x["_sig"], y["_sig"]).alias("agree"),
+            ),
+            lambda p: _est_jaccard(p["agree"], num_hashes) >= threshold,
+        ).alias("_p")
+    ).select("_p.*").distinct()
 
 
 def minhash_lsh_pairs(
@@ -421,37 +461,12 @@ def minhash_lsh_pairs(
     Jaccard (fraction of agreeing minhashes) >= threshold.
 
     Scale path: docs never meet unless a whole band of minhashes collides,
-    so the join is keyed on (band_index, band_hash) — output-bounded, no
-    quadratic blowup. rows=(id_a, id_b, est_jaccard)."""
-    sig = minhash_signature(df, id_col, text_col, n, num_hashes).cache()
-    banded = _banded(sig, num_hashes, bands)
-
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._bucket") == F.col("b._bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._sig").alias("_siga"),
-            F.col("b._sig").alias("_sigb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("_siga"), F.col("_sigb"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    return (
-        cand.withColumn("est_jaccard", F.round(agree.cast("double") / F.lit(num_hashes), 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
+    so pairs expand only inside (band, bucket-hash) posting lists —
+    output-bounded, no quadratic blowup, no self-join and nothing cached.
+    rows=(id_a, id_b, est_jaccard)."""
+    sig = minhash_signature(df, id_col, text_col, n, num_hashes)
+    return _lsh_agreements(sig, num_hashes, bands, threshold).select(
+        "id_a", "id_b", _est_jaccard(F.col("agree"), num_hashes).alias("est_jaccard")
     )
 
 

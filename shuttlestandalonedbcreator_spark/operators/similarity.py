@@ -30,6 +30,7 @@ from shuttlestandalonedbcreator_spark.operators.dedup import md5_long
 from shuttlestandalonedbcreator_spark.operators.util import (
     bounded_broadcast,
     local_frame,
+    ordered_pairs,
 )
 
 
@@ -390,27 +391,24 @@ def cosine_neardup_pairs(
         "_u",
         let(F.col("_u"), bucket_of).alias("_bucket"),
     )
-    # r10: pairs meet via ONE bucket-keyed exchange into posting lists
-    # (the `_ngram_pair_intersections` pattern, guide §2.4) instead of a
-    # two-sided self-join that computed the normalization + 8-fold
-    # signature twice per row and shuffled both sides. The in-bucket dot
-    # is the same zip_with/aggregate double fold — bit-identical scores.
+    # pairs meet via ONE bucket-keyed exchange into posting lists, not a
+    # two-sided self-join, which computed the normalization and the
+    # signature twice per row and shuffled both sides. Sorting a list by
+    # _id makes ordered_pairs emit id_a < id_b.
     grouped = (
         tagged.groupBy("_bucket")
-        .agg(F.collect_list(F.struct("_id", "_u")).alias("_m"))
+        .agg(F.array_sort(F.collect_list(F.struct("_id", "_u"))).alias("_m"))
         .filter(F.size("_m") >= 2)
     )
     return (
         grouped.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(_m, x -> "
-                    "transform(filter(_m, y -> x._id < y._id), y -> "
-                    "struct(x._id AS id_a, y._id AS id_b, "
-                    "round(aggregate(zip_with(x._u, y._u, "
-                    "(p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)), "
-                    "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v), 6) AS cosine))))"
-                )
+            ordered_pairs(
+                F.col("_m"),
+                lambda x, y: F.struct(
+                    x["_id"].alias("id_a"),
+                    y["_id"].alias("id_b"),
+                    F.round(dot(x["_u"], y["_u"]), 6).alias("cosine"),
+                ),
             ).alias("_c")
         )
         .select("_c.id_a", "_c.id_b", "_c.cosine")

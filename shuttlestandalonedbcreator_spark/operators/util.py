@@ -2,9 +2,10 @@
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # The only justifications under which an EXPLICIT broadcast hint is
@@ -187,3 +188,25 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def ordered_pairs(
+    arr: Column,
+    pair: Callable[[Column, Column], Column],
+    keep: Callable[[Column], Column] | None = None,
+) -> Column:
+    """One row per ``pair(x, y)`` over the elements of ``arr`` with ``x``
+    before ``y`` — the posting-list expansion behind every pair detector.
+
+    Group rows into a sorted list per key, then expand pairs INSIDE each
+    list: one keyed exchange instead of a two-sided self-join, and a key
+    held by one row produces nothing. With an ascending list, ``x``
+    sorts before ``y``, so no ``x < y`` predicate is needed. ``keep``
+    drops pairs inside the expansion, before anything downstream (the
+    pair exchange) sees them. The work per list is quadratic in its
+    length; a hot key is the caller's to bound."""
+    def tail(x: Column, i: Column) -> Column:
+        ys = F.transform(F.slice(arr, i + 2, F.size(arr)), lambda y: pair(x, y))
+        return ys if keep is None else F.filter(ys, keep)
+
+    return F.explode(F.flatten(F.transform(arr, tail)))

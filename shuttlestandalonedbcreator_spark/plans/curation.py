@@ -6,7 +6,7 @@ training-pipeline operator families into one declarative plan.
     → deterministic split assignment             — narrow hash map
     → write partitioned by split
 
-Scale shape: the only shuffles are the LSH banding join and the
+Scale shape: the only shuffles are the LSH band posting lists and the
 components propagation (both output-bounded, keyed); every filter is a
 per-row map computed in the same scan; the split label is a pure hash of
 the id (re-derivable anywhere, no assignment table). The partitioned

@@ -41,6 +41,7 @@ from shuttlestandalonedbcreator_spark.operators import similarity as V
 from shuttlestandalonedbcreator_spark.operators.util import (
     bounded_broadcast,
     local_frame,
+    ordered_pairs,
 )
 from shuttlestandalonedbcreator_spark.operators.hierarchy import (
     ancestor_closure,
@@ -1429,10 +1430,10 @@ def _banded_hamming_pairs(
     column expression per band) and ``same_source`` when the two ids
     halve to one source id.
 
-    Candidates and verification share ONE band-keyed exchange (the
-    posting-list pattern of _ngram_pair_intersections, guide §2.4): hi/lo
-    ride the posting lists and the exact Hamming check runs inside the
-    pair expansion, so only true near-dup pairs reach the dedup exchange
+    Candidates and verification share ONE band-keyed exchange into
+    posting lists expanded by ``ordered_pairs`` (guide §2.4): hi/lo ride
+    the posting lists and the exact Hamming check is the expansion's
+    ``keep``, so only true near-dup pairs reach the dedup exchange
     (guide §2.3)."""
     bands = hashed.select(
         id_col,
@@ -1453,15 +1454,17 @@ def _banded_hamming_pairs(
         .filter(F.size("_m") >= 2)
     )
     pairs = grouped.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(_m, (x, i) -> "
-                "filter(transform(slice(_m, i + 2, size(_m)), "
-                f"y -> struct(x.{id_col} AS id_a, y.{id_col} AS id_b, "
-                "CAST(bit_count(x.hi ^ y.hi) + bit_count(x.lo ^ y.lo) AS INT)"
-                " AS hamming)), "
-                "p -> p.hamming <= 6)))"
-            )
+        ordered_pairs(
+            F.col("_m"),
+            lambda x, y: F.struct(
+                x[id_col].alias("id_a"),
+                y[id_col].alias("id_b"),
+                (
+                    F.bit_count(x["hi"].bitwiseXOR(y["hi"]))
+                    + F.bit_count(x["lo"].bitwiseXOR(y["lo"]))
+                ).cast("int").alias("hamming"),
+            ),
+            lambda p: p["hamming"] <= 6,
         ).alias("_p")
     ).select("_p.id_a", "_p.id_b", "_p.hamming")
     return pairs.distinct().select(
@@ -1475,7 +1478,8 @@ def _banded_hamming_pairs(
 def q_image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-duplicate pairs via dHash + banded LSH —
     the image member of the dedup family (exact / MinHash / SimHash /
-    embedding-cosine / **dHash**), same banded-join shape as MinHash-LSH.
+    embedding-cosine / **dHash**), same banded posting-list shape as
+    MinHash-LSH.
 
     Pipeline (all real multimodal plumbing): synthesize two 16x16 gray
     variants per embedding (base + a clamped +3-brightness copy — dHash
@@ -1493,8 +1497,8 @@ def q_image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the hash pass is a narrow map (one Python hop per
     image, PNG lossless so the oracle recomputes pixels from the
     formula); the posting lists are keyed on (band, value) exactly
-    like minhash_lsh_candidates and carry the packed hash, so
-    verification needs no join back."""
+    like minhash_lsh_pairs' (band, bucket) lists and carry the packed
+    hash, so verification needs no join back."""
     from shuttlestandalonedbcreator_spark.operators.util import fan_out
     from shuttlestandalonedbcreator_spark.streaming import imagecodec as IC
 
@@ -7657,8 +7661,8 @@ def _basket_items(li: DataFrame) -> DataFrame:
     r10 shared core for the co-purchase graph family (copurchase_lift,
     pagerank_fixed, kcore_decomposition, graph_degree_distribution).
     One l_orderkey exchange builds the basket arrays; pair expansion
-    then runs INSIDE each array (same posting-list HOF pattern as
-    _ngram_pair_intersections) — replacing the old
+    then runs INSIDE each array (``ordered_pairs``, the posting-list
+    kernel every pair detector shares) — replacing the old
     items.distinct() + self-join on l_orderkey, which shuffled the
     item table three times (distinct, join left, join right) and paid
     two sort-merge sorts, with ONE shuffle (guide §2.4). Fan-out per
@@ -7675,12 +7679,8 @@ def _basket_pairs(baskets: DataFrame) -> DataFrame:
     the old `a.l_partkey < b.l_partkey` self-join predicate did."""
     return (
         baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(_ps, (x, i) -> "
-                    "transform(slice(_ps, i + 2, size(_ps)), "
-                    "y -> struct(x AS p1, y AS p2))))"
-                )
+            ordered_pairs(
+                F.col("_ps"), lambda x, y: F.struct(x.alias("p1"), y.alias("p2"))
             ).alias("_p")
         )
         .select("_p.p1", "_p.p2")
@@ -11290,14 +11290,15 @@ def q_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the verify join re-attaches full gram arrays to, so it is the
     # quantity that survives at 100 TB.
     occ = plists.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) -> "
-                "filter(transform(slice(ids, i + 2, size(ids)), "
-                "y -> struct(x.doc_id AS id_a, y.doc_id AS id_b, "
-                "x.n AS nx, y.n AS ny, x.rk AS rkx, y.rk AS rky)), "
-                "p -> 8 * least(p.nx, p.ny) >= 3 * (p.nx + p.ny))))"
-            )
+        ordered_pairs(
+            F.col("ids"),
+            lambda x, y: F.struct(
+                x["doc_id"].alias("id_a"), y["doc_id"].alias("id_b"),
+                x["n"].alias("nx"), y["n"].alias("ny"),
+                x["rk"].alias("rkx"), y["rk"].alias("rky"),
+            ),
+            lambda p: F.lit(8) * F.least(p["nx"], p["ny"])
+            >= F.lit(3) * (p["nx"] + p["ny"]),
         ).alias("p")
     ).select("p.*")
     pairs = (
@@ -11385,56 +11386,17 @@ def q_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup run commits to it. All three metrics are integer milli-units
     (div floors), so the comparison is engine-exact.
 
-    Plan: signatures build once and are eagerly localCheckpoint-ed —
-    they feed the band bucketing AND both sides of the pair join, and
-    Spark materializes no CTEs, so without the checkpoint the whole
-    shingle+minhash pipeline would re-run three times. Candidates expand
-    inside (band, bucket) posting lists (never a corpus self-join);
-    exact verification touches only candidate pairs. The oracle rebuilds
-    the same md5-derived hash family in SQL (same pattern as
-    minhash_lsh_dedup's oracle), so even the 32 permutations are
-    value-checked, not trusted."""
+    Plan: candidates and their agreement counts come from one
+    (band, bucket)-keyed exchange into signature-carrying posting lists
+    (dedup._lsh_agreements, the minhash_lsh_dedup pipeline with no
+    threshold) — never a corpus self-join and no join back to the
+    signatures; exact verification touches only candidate pairs. The
+    oracle rebuilds the same md5-derived hash family in SQL (same
+    pattern as minhash_lsh_dedup's oracle), so even the 32 permutations
+    are value-checked, not trusted."""
     docs = _t(spark, sf_dir, "documents")
     sig = D.minhash_signature(docs, "doc_id", "text", n=3, num_hashes=32)
-    sig = sig.localCheckpoint(eager=True)
-    banded = D._banded(sig, num_hashes=32, bands=8)
-    plists = banded.groupBy("_band", "_bucket").agg(
-        F.array_sort(F.collect_set("_id")).alias("ids")
-    )
-    pairs = (
-        plists.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ids"),
-                                i + F.lit(2),
-                                F.size(F.col("ids")) - i - 1,
-                            ),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
-    siga = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("siga"))
-    sigb = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sigb"))
-    est = pairs.join(siga, "id_a").join(sigb, "id_b").withColumn(
-        "matches",
-        F.size(
-            F.filter(
-                F.zip_with("siga", "sigb", lambda a, b: a == b),
-                lambda m: m,
-            )
-        ).cast("long"),
-    )
+    est = D._lsh_agreements(sig, num_hashes=32, bands=8, threshold=0.0)
     # exact side (r10, guide §2.3/§4.1): per-doc shingle sets as
     # xxhash64 arrays computed in one narrow pass — the hash never
     # reaches the output (only |A∩B| does), so no md5, no explode +
@@ -11459,7 +11421,7 @@ def q_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "inter_cnt",
             F.size(F.array_intersect("sa", "sb")).cast("long"),
         )
-        .withColumn("est_milli", F.expr("(matches * 1000) div 32"))
+        .withColumn("est_milli", F.expr("(agree * 1000) div 32"))
         .withColumn(
             "exact_milli",
             F.expr("(inter_cnt * 1000) div (na + nb - inter_cnt)"),
@@ -12271,12 +12233,8 @@ def q_lsh_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         banded.groupBy("_band", "_bucket")
         .agg(F.array_sort(F.collect_set("_id")).alias("ids"))
         .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), "
-                    "y -> struct(x AS id_a, y AS id_b))))"
-                )
+            ordered_pairs(
+                F.col("ids"), lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b"))
             ).alias("p")
         )
         .select("p.id_a", "p.id_b")

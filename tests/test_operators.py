@@ -52,6 +52,28 @@ def test_minhash_identical_docs(spark):
     assert len(pairs) == 1 and pairs[0]["est_jaccard"] == 1.0
 
 
+def test_ordered_pairs_emits_each_pair_once_in_list_order(spark):
+    from shuttlestandalonedbcreator_spark.operators.util import ordered_pairs
+
+    df = spark.createDataFrame(
+        [(0, []), (1, [7]), (2, [1, 2, 3, 4])], "k int, arr array<int>"
+    )
+
+    def pairs(keep=None):
+        out = df.select(
+            "k",
+            ordered_pairs(
+                F.col("arr"), lambda x, y: F.struct(x.alias("a"), y.alias("b")), keep
+            ).alias("p"),
+        )
+        return sorted((r["k"], r["p"]["a"], r["p"]["b"]) for r in out.collect())
+
+    assert pairs() == [
+        (2, 1, 2), (2, 1, 3), (2, 1, 4), (2, 2, 3), (2, 2, 4), (2, 3, 4)
+    ]
+    assert pairs(lambda p: p["b"] - p["a"] >= 2) == [(2, 1, 3), (2, 1, 4), (2, 2, 4)]
+
+
 def test_simhash_similar_docs_close(spark):
     df = spark.createDataFrame(
         [

@@ -640,67 +640,113 @@ def test_no_unguarded_driver_collects_in_operator_modules():
     )
 
 
+def _kernel_copies(files, base, py_form, sql_form) -> list[str]:
+    """``file:line`` of every ``py_form`` match in the source of ``files``
+    and every ``sql_form`` match in a string constant as the parser joins
+    it, so a literal split across adjacent strings (or around f-string
+    fields, read as ``{}``) is caught."""
+    import ast
+
+    offenders = []
+    for py in files:
+        rel = py.relative_to(base).as_posix()
+        text = py.read_text()
+        for m in py_form.finditer(text):
+            offenders.append(f"{rel}:{text[: m.start()].count(chr(10)) + 1}")
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                value = node.value
+            elif isinstance(node, ast.JoinedStr):
+                value = "".join(
+                    v.value if isinstance(v, ast.Constant) else "{}"
+                    for v in node.values
+                )
+            else:
+                continue
+            if sql_form.search(value):
+                offenders.append(f"{rel}:{node.lineno} (SQL text)")
+    return sorted(set(offenders))
+
+
 def test_no_hand_written_let_binds_outside_text_functions():
     """Let-binding goes through ``functions.text.let``, whose docstring
     carries the reason (CollapseProject re-substitutes a projected
     expression into every reference). Source-level gate: the 1-element
     ``transform`` idiom may appear ONLY in ``functions/text.py``, in
     either spelling — the Python ``transform(F.array(...))`` and the SQL
-    ``transform(array(...))`` inside ``F.expr`` text. The SQL spelling is
-    matched on each string constant as the parser joins it, so a literal
-    split across adjacent strings (or around f-string fields) is caught."""
-    import ast
+    ``transform(array(...))`` inside ``F.expr`` text."""
     import pathlib
     import re
 
     import shuttlestandalonedbcreator_spark as pkg
 
-    py_form = re.compile(r"transform\(\s*F\.array\(")
-    sql_form = re.compile(r"\btransform\s*\(\s*array\s*\(", re.IGNORECASE)
-
-    def sql_texts(tree):
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Constant) and isinstance(node.value, str):
-                yield node.lineno, node.value
-            elif isinstance(node, ast.JoinedStr):
-                yield node.lineno, "".join(
-                    v.value if isinstance(v, ast.Constant) else "{}"
-                    for v in node.values
-                )
-
     root = pathlib.Path(pkg.__file__).parent
-    offenders = []
-    for py in root.rglob("*.py"):
-        rel = py.relative_to(root).as_posix()
-        if rel == "functions/text.py":
-            continue
-        text = py.read_text()
-        for m in py_form.finditer(text):
-            offenders.append(f"{rel}:{text[: m.start()].count(chr(10)) + 1}")
-        for line, value in sql_texts(ast.parse(text)):
-            if sql_form.search(value):
-                offenders.append(f"{rel}:{line} (SQL text)")
+    offenders = _kernel_copies(
+        [py for py in root.rglob("*.py") if py != root / "functions" / "text.py"],
+        root,
+        re.compile(r"transform\(\s*F\.array\("),
+        re.compile(r"\btransform\s*\(\s*array\s*\(", re.IGNORECASE),
+    )
     assert not offenders, (
         "hand-written let-binds found (use functions.text.let):\n"
-        + "\n".join(sorted(set(offenders)))
+        + "\n".join(offenders)
     )
+
+
+def test_no_hand_written_pair_expansions():
+    """Posting-list pair expansion goes through
+    ``operators.util.ordered_pairs``. Source-level gate over the package
+    and ``tools/``: ``F.flatten(`` in code and ``flatten(transform(`` in
+    SQL string constants may appear ONLY in ``operators/util.py``."""
+    import pathlib
+    import re
+
+    import shuttlestandalonedbcreator_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = [*root.rglob("*.py"), *(root.parent / "tools").glob("*.py")]
+    offenders = _kernel_copies(
+        [py for py in files if py != root / "operators" / "util.py"],
+        root.parent,
+        re.compile(r"\bF\.flatten\("),
+        re.compile(r"\bflatten\s*\(\s*transform\s*\(", re.IGNORECASE),
+    )
+    assert not offenders, (
+        "hand-written pair expansions found (use operators.util.ordered_pairs):\n"
+        + "\n".join(offenders)
+    )
+
+
+def test_minhash_lsh_dedup_is_one_posting_list_pipeline(spark, sf_small):
+    """MinHash-LSH pairs come from ONE (band, bucket)-keyed exchange into
+    signature-carrying posting lists: no self-join of the banded
+    signatures (neither a broadcast nor a sort-merge join), no cached
+    signature table, and the documents are scanned once."""
+    df = CATALOG["minhash_lsh_dedup"].spark(spark, sf_small)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("BroadcastHashJoin", "SortMergeJoin", "BroadcastExchange",
+                 "InMemoryTableScan"):
+        assert node not in plan, node
+    final = plan.split("== Initial Plan ==")[0]
+    scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 1 and "documents" in scans[0], scans
 
 
 def test_cache_and_persist_census():
     """Every ``.cache()`` / ``.persist(`` in the package is pinned here: a
     cached frame that is never unpersisted holds storage-pool memory for
     the life of the session (the bench, streaming incremental dedup).
-    Census: operators/dedup.py x1 — ``minhash_lsh_pairs``'s signature
-    table, never unpersisted (a posting-list rewrite of that join drops
-    it). A new site fails this test until it is added here with the
-    ``unpersist`` that ends it."""
+    The census is empty: the engine caches nothing. A new site fails
+    this test until it is added here with the ``unpersist`` that ends
+    it."""
     import pathlib
     import re
 
     import shuttlestandalonedbcreator_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    expected = {"operators/dedup.py": 1}
+    expected: dict[str, int] = {}
     found: dict[str, int] = {}
     for py in root.rglob("*.py"):
         n = len(re.findall(r"\.cache\(\)|\.persist\(", py.read_text()))

@@ -276,6 +276,35 @@ def test_incremental_dedup_stream_two_polls(spark, tmp_path):
     ) == [1, 3, 11]
 
 
+def test_dedupe_batch_leaves_no_cached_relation(spark):
+    """A streaming poll runs the batch dedup core once per micro-batch
+    for the life of the session, so the core must leave nothing in the
+    session's cache: a relation cached per call and never unpersisted
+    holds storage memory until the session ends."""
+    from shuttlestandalonedbcreator_spark.operators.dedup import minhash_index
+    from shuttlestandalonedbcreator_spark.streaming.incremental_dedup import (
+        dedupe_batch_against_index,
+    )
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    t_dup = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    first = spark.createDataFrame(
+        [(1, t_dup), (2, t_dup), (3, "one two three four five six")],
+        "doc_id long, text string",
+    )
+    kept = dedupe_batch_against_index(first, None, "doc_id", "text")
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
+    second = spark.createDataFrame(
+        [(10, t_dup), (11, "red orange yellow green blue indigo violet")],
+        "doc_id long, text string",
+    )
+    index = minhash_index(kept, "doc_id", "text")
+    kept = dedupe_batch_against_index(second, index, "doc_id", "text")
+    assert [r["doc_id"] for r in kept.collect()] == [11]
+    assert cache.numCachedEntries() - before == 0
+
+
 def test_hourly_rollup_incremental_maintenance(spark, sf_small, tmp_path):
     """Two polls of the continuous hourly rollup: results equal a batch
     aggregate over everything seen, and the second poll only rewrites the
