@@ -24,6 +24,16 @@ Two guards:
 
 `hierarchy_closure_doubling` is the deep-tree path: O(log depth) rounds
 where the recursive walk needs one round per level.
+
+Input contract of the recursive walks:
+- pass a cheap-to-rescan `nodes`, such as a parquet scan. The `UnionLoop`
+  re-runs `nodes`' whole lineage at every level and never reads a cached
+  input from the cache, so an expensive lineage (a Python-list
+  `createDataFrame`, joins, aggregates) is paid once per level;
+- each level costs ~5 Spark jobs and ~0.45-0.75 s of fixed overhead on 4
+  cores, however few rows it holds;
+- trees deeper than a few dozen levels belong on
+  `hierarchy_closure_doubling`. Nothing routes there automatically.
 """
 
 from __future__ import annotations

@@ -15,6 +15,15 @@ Scale notes (100 TB target):
   across driver/oracle/cluster (the reference renders dates in the system
   default zone — ``SQLiteDirectImporter.java:1000`` — which we deliberately
   normalize to UTC).
+- ``spark.python.sql.dataFrameDebugging.enabled`` off: PySpark's default
+  wraps every ``Column``/``functions`` call to capture its Python call site,
+  about five extra py4j round trips per call plus a stack walk (and an
+  IPython import on the first call). Off, a build makes half to a third of
+  the round trips; a DataFrame error keeps its SQL and plan context but no
+  longer names the Python line that built the failing expression. Pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to get that line back. It is a static conf: only a session's first
+  build sets it, and PySpark reads it once per process.
 """
 
 from __future__ import annotations
@@ -59,6 +68,9 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # no per-call call-site capture on Column/functions calls (module
+        # docstring); a static conf, so it is set here at build
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # driver testdata stores some timestamps as parquet TIMESTAMP(NANOS),
         # which Spark's reader rejects natively; read as long and convert

@@ -13,6 +13,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -42,28 +43,69 @@ def ensure_utc(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def footer_schema(arrow_schema, ns_cols: list[str]) -> StructType | None:
+    """The schema Spark infers for a single parquet file, built from its
+    footer instead of by a schema-merge job: all columns nullable, timestamps
+    without a zone as TIMESTAMP_NTZ, and ``ns_cols`` as the longs that
+    `nanosAsLong` reads. None when a column's type has no Spark type or
+    Spark reads it otherwise (unsigned ints, time of day, durations, nested
+    nanosecond timestamps): the caller lets Spark infer."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    def mapped(t, nested: bool) -> bool:
+        ns = pa.types.is_timestamp(t) and t.unit == "ns"
+        if pa.types.is_time(t) or pa.types.is_duration(t) or (nested and ns):
+            return False
+        return all(mapped(t.field(i).type, True) for i in range(t.num_fields))
+
+    if not all(mapped(field.type, False) for field in arrow_schema):
+        return None
+    try:
+        return StructType([
+            StructField(
+                field.name,
+                LongType() if field.name in ns_cols
+                else from_arrow_type(field.type, prefer_timestamp_ntz=True),
+                True,
+            )
+            for field in arrow_schema
+        ])
+    except TypeError:
+        return None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table, normalizing parquet TIMESTAMP(NANOS) columns (which
     Spark reads as long under `nanosAsLong`) back to TimestampType via
-    exact integer division — semantics identical to DuckDB's truncation."""
+    exact integer division — semantics identical to DuckDB's truncation.
+
+    A single-file table is read with the schema its footer declares, so the
+    load fires no schema-inference job; a directory (a partitioned or
+    Spark-written table) or an unmapped type falls back to inference."""
     import pyarrow as pa
 
     ensure_utc(spark)
 
     path = os.path.join(sf_dir, f"{name}.parquet")
+    ns_cols, schema = [], None
     try:
+        arrow_schema = pq.read_schema(path)
+    except (OSError, pa.ArrowException):
+        pass  # a directory or a scheme pyarrow cannot open: Spark infers
+    else:
         ns_cols = [
             field.name
-            for field in pq.read_schema(path)
+            for field in arrow_schema
             if pa.types.is_timestamp(field.type) and field.type.unit == "ns"
         ]
-    except Exception:
-        ns_cols = []
+        schema = footer_schema(arrow_schema, ns_cols)
     if ns_cols:
         # runtime-set so it works on ANY caller-provided session (the
         # driver builds its own); conf only affects nanos columns
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for col_name in ns_cols:
         # integer div keeps full precision (ns values overflow double)
         df = df.withColumn(col_name, F.expr(f"timestamp_micros({col_name} div 1000)"))
@@ -71,8 +113,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # time functions (unix_micros, range frames) need TIMESTAMP. The session
     # is pinned UTC (ensure_utc above), so the NTZ->LTZ cast is the identity
     # on the wall clock (matches DuckDB's naive-timestamp reading bit-for-bit).
-    from pyspark.sql.types import TimestampNTZType
-
     for field in df.schema.fields:
         if isinstance(field.dataType, TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))

@@ -140,6 +140,88 @@ def test_load_table_normalizes_all_timestamps(spark, sf_small):
             assert mx.year < 2100
 
 
+def test_load_table_fires_no_schema_job(spark, sf_small):
+    """A single-file table is read with the schema its footer declares, so
+    the load fires no Spark job (inference would run a schema merge)."""
+    import uuid
+
+    from shuttlestandalonedbcreator_spark.sources.registry import load_table
+
+    sc = spark.sparkContext
+    group = f"load-{uuid.uuid4().hex[:12]}"
+    sc.setJobGroup(group, group, False)
+    try:
+        load_table(spark, sf_small, "lineitem")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_load_table_footer_schema_matches_inference(spark, sf_small, monkeypatch):
+    """The footer-built schema is the one `spark.read.parquet` infers, and
+    every table loads with the schema of the inferring fallback."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from shuttlestandalonedbcreator_spark.sources import registry
+
+    for t in registry.TABLES:
+        path = os.path.join(sf_small, f"{t}.parquet")
+        declared = registry.footer_schema(pq.read_schema(path), [])
+        assert declared == spark.read.parquet(path).schema, t
+        loaded = registry.load_table(spark, sf_small, t)
+        with monkeypatch.context() as m:
+            m.setattr(registry, "footer_schema", lambda *args: None)
+            inferred = registry.load_table(spark, sf_small, t)
+        assert loaded.schema == inferred.schema, t
+
+
+def test_footer_schema_leaves_unmapped_types_to_inference():
+    """Types Spark's parquet reader maps differently from Arrow, or not at
+    all, get no footer schema, so `load_table` lets Spark infer."""
+    import pyarrow as pa
+
+    from shuttlestandalonedbcreator_spark.sources.registry import footer_schema
+
+    for t in (pa.time64("us"), pa.duration("us"), pa.uint32(), pa.list_(pa.timestamp("ns"))):
+        assert footer_schema(pa.schema([("c", t)]), []) is None, t
+    assert footer_schema(pa.schema([("c", pa.timestamp("ns"))]), ["c"]) is not None
+
+
+def test_load_table_reads_nanosecond_timestamps_exactly(spark, tmp_path):
+    """A pyarrow-written TIMESTAMP(NANOS) column comes back as TimestampType
+    truncated to the exact microsecond, beyond a double's precision."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    from shuttlestandalonedbcreator_spark.sources.registry import load_table
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_000_123_456_001, None]
+    table = pa.table({"id": [1, 2, 3], "ts": pa.array(ns, pa.timestamp("ns"))})
+    pq.write_table(table, str(tmp_path / "ticks.parquet"))
+    df = load_table(spark, str(tmp_path), "ticks")
+    assert isinstance(df.schema["ts"].dataType, TimestampType)
+    got = {r["id"]: r["us"] for r in df.select("id", F.unix_micros("ts").alias("us")).collect()}
+    assert got == {1: 1_700_000_000_123_456, 2: 1_700_000_000_123_456, 3: None}
+
+
+def test_load_table_reads_spark_written_directory(spark, tmp_path):
+    """A directory table (Spark's own output) has no single footer; the
+    load falls back to schema inference."""
+    from pyspark.sql.types import TimestampType
+
+    from shuttlestandalonedbcreator_spark.sources.registry import load_table
+
+    spark.range(5).select(
+        F.col("id"), F.timestamp_seconds("id").alias("ts")
+    ).write.parquet(str(tmp_path / "written.parquet"))
+    df = load_table(spark, str(tmp_path), "written")
+    assert isinstance(df.schema["ts"].dataType, TimestampType)
+    assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3, 4]
+
+
 def test_word_ngram_hashes_cardinality_matches_string_grams(spark):
     """Hashed grams must agree with string grams on the distinct-set
     cardinality (that's all downstream counts use), incl. the short-doc

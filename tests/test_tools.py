@@ -13,8 +13,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_profile_plan_capture_and_layers(spark, sf_small, capsys):
     """`--plan` prints the plan of every frame the build checkpoints, taken
     before lineage truncation, and the final plan; `--layers` reports the
-    build / plan / exec spans with their job counts."""
-    from tools.entry_profile import layers, profile
+    build / plan / exec spans with their job counts, then the py4j round
+    trips of one more build."""
+    from tools.entry_profile import profile
 
     profile(spark, sf_small, "gini_revenue", plan=True, metrics=False, layer=False)
     parts = re.split(r"^== gini_revenue: (.+) ==$", capsys.readouterr().out, flags=re.M)
@@ -27,10 +28,19 @@ def test_profile_plan_capture_and_layers(spark, sf_small, capsys):
     assert "Scan parquet" in sections[0][1]
     assert "Scan ExistingRDD" in sections[-1][1]
 
-    spans = layers(spark, sf_small, "gini_revenue")
-    assert list(spans) == ["build", "plan", "exec"]
+    profile(spark, sf_small, "gini_revenue", plan=False, metrics=False, layer=True)
+    out = capsys.readouterr().out
+    spans = {
+        m[1]: {"s": float(m[2]), **{k: float(v) for k, v in re.findall(r"(\w+)=(\S+)", m[3])}}
+        for m in re.finditer(r"^(build|plan|exec) +([\d.]+) s(.*)$", out, flags=re.M)
+    }
+    assert list(spans) == ["build", "plan", "exec"], out
     assert spans["build"]["jobs"] >= 1 and spans["exec"]["jobs"] >= 1, spans
     assert all(sp["s"] > 0 for sp in spans.values())
+    # after the span table, the py4j round trips of one more build
+    trips = re.findall(r"^py4j round trips in one more build: (\d+)$", out, flags=re.M)
+    assert len(trips) == 1 and int(trips[0]) > 0, out
+    assert out.rstrip().endswith(trips[0])
 
 
 def test_readme_layout_names_every_tool():

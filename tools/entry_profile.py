@@ -16,7 +16,8 @@ Usage: python tools/entry_profile.py [entry ...] [--sf DIR] [--plan] [--metrics]
   task and stage-metric totals, from the second of two runs of the
   benchmark's own op (``perfbench.workloads.run_entry`` under a
   ``perfbench.trace.Tracer``), so the numbers compare directly with a
-  ``perfbench/run.py --trace 1`` run.
+  ``perfbench/run.py --trace 1`` run; then the py4j round trips of one
+  more build (each ``ClientServerConnection.send_command`` counts one).
 
 ``--sf`` defaults to the sf0.01 fixture set.
 """
@@ -79,6 +80,26 @@ def capture_checkpoints():
         yield plans
     finally:
         DataFrame.localCheckpoint = real
+
+
+@contextmanager
+def count_round_trips():
+    """Count the py4j round trips made inside the block: every driver call
+    into the JVM is one ``ClientServerConnection.send_command``."""
+    from py4j.clientserver import ClientServerConnection
+
+    count = [0]
+    real = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        count[0] += 1
+        return real(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield count
+    finally:
+        ClientServerConnection.send_command = real
 
 
 def _metrics(node) -> dict:
@@ -219,6 +240,9 @@ def profile(spark, sf_dir: str, name: str, plan: bool, metrics: bool, layer: boo
         for span, counts in layers(spark, sf_dir, name).items():
             totals = " ".join(f"{k}={v:.4g}" for k, v in counts.items() if k != "s")
             print(f"{span:<6} {counts['s']:8.3f} s  {totals}".rstrip())
+        with count_round_trips() as trips:
+            CATALOG[name].spark(spark, sf_dir)
+        print(f"py4j round trips in one more build: {trips[0]}")
 
 
 def main(argv: list[str] | None = None) -> None:
