@@ -17,8 +17,20 @@ Layout
 - ``plans``      — end-to-end pipelines (transfer-report ingest) and the
                    view surface (static + dynamic status views).
 - ``streaming``  — Structured Streaming: file-drop protocol, windowed aggs.
+
+Python workers cannot import this package (the driver may load it by file
+path from any cwd), so the package registers itself with cloudpickle at
+import: functions, classes and modules of every submodule travel by value
+inside pickled closures, UDTFs and DataSources. Worker-executed bodies
+must still not ``import`` a package module; bind it at module level.
 """
+
+import sys
+
+from pyspark.cloudpickle import register_pickle_by_value
+
+from shuttlestandalonedbcreator_spark.session import get_spark  # noqa: F401
 
 __version__ = "0.1.0"
 
-from shuttlestandalonedbcreator_spark.session import get_spark  # noqa: F401
+register_pickle_by_value(sys.modules[__name__])

@@ -53,10 +53,5 @@ class PiiFindings:
 
 
 def register_pii_udtf(spark: SparkSession, name: str = "pii_findings") -> None:
-    """Register for SQL lateral joins (idempotent). Ships this module by
-    value so executor pythons need no repo checkout (NOTES.md fact #4)."""
-    import shuttlestandalonedbcreator_spark.functions.udtf_pii as _self
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self)
+    """Register for SQL lateral joins (idempotent)."""
     spark.udtf.register(name, PiiFindings)

@@ -146,11 +146,6 @@ def train_bpe_merges(
     round even if it would have outranked a later member. Driver and
     distributed paths implement identical batched selection, so output
     is path-independent at every ``batch_size``."""
-    import shuttlestandalonedbcreator_spark.operators.bpe as _self
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self)
-
     vocab = _word_counts(docs, text_col).localCheckpoint(eager=True)
     if vocab.count() <= driver_threshold:
         return _driver_bpe(
@@ -241,10 +236,6 @@ def encode_bpe(
     (id, tokens array<string>, n_tokens) with the id column keeping the
     INPUT's type (string doc ids pass through unchanged). Arrow-batched;
     the rank table ships inside the closure (bounded by n_merges)."""
-    import shuttlestandalonedbcreator_spark.operators.bpe as _self
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self)
     ranks = {tuple(m): i for i, m in enumerate(merges)}
 
     def encode_word(word: str) -> list[str]:

@@ -37,11 +37,6 @@ from shuttlestandalonedbcreator_spark.operators.util import bounded_broadcast, f
 
 def _mg_candidates(df: DataFrame, item_col: str, k: int) -> DataFrame:
     """Per-partition Misra-Gries survivors (≤ k items per partition)."""
-    import shuttlestandalonedbcreator_spark.operators.heavy_hitters as _self_module
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self_module)
-
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 

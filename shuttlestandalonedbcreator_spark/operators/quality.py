@@ -106,11 +106,6 @@ def compression_ratio(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     No SQL oracle exists for deflate, so correctness is pinned by
     driver-vs-executor byte equality and monotonicity tests instead
     (tests/test_operators.py)."""
-    import sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(sys.modules[__name__])
     id_type = df.schema[id_col].dataType.simpleString()
 
     def run(batches):

@@ -301,13 +301,7 @@ def cosine_neardup_pairs(
     if exact:
         import numpy as np
 
-        import shuttlestandalonedbcreator_spark.operators.similarity as _self_module
-        from pyspark.cloudpickle import register_pickle_by_value
-        from shuttlestandalonedbcreator_spark.operators.util import fan_out
-
-        register_pickle_by_value(_self_module)
-
-        from shuttlestandalonedbcreator_spark.operators.util import bounded_collect
+        from shuttlestandalonedbcreator_spark.operators.util import bounded_collect, fan_out
 
         # the full matrix ships driver→executors, the same distribution
         # strategy as the BNLJ broadcast this path replaced — but now
@@ -540,11 +534,6 @@ def matmul_topk(
     score[round 6], rank), ties broken by neighbor_id.
     """
     import numpy as np
-
-    import shuttlestandalonedbcreator_spark.operators.similarity as _self_module
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self_module)
 
     from shuttlestandalonedbcreator_spark.operators.util import bounded_collect
 

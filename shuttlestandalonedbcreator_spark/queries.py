@@ -1459,10 +1459,8 @@ def _banded_hamming_pairs(
             lambda x, y: F.struct(
                 x[id_col].alias("id_a"),
                 y[id_col].alias("id_b"),
-                (
-                    F.bit_count(x["hi"].bitwiseXOR(y["hi"]))
-                    + F.bit_count(x["lo"].bitwiseXOR(y["lo"]))
-                ).cast("int").alias("hamming"),
+                (D.hamming64(x["hi"], y["hi"]) + D.hamming64(x["lo"], y["lo"]))
+                .cast("int").alias("hamming"),
             ),
             lambda p: p["hamming"] <= 6,
         ).alias("_p")
@@ -1523,12 +1521,6 @@ def q_image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(_image_px(F.col("embedding"), i)).cast("int"),
         ).alias("px"),
     )
-
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[IC.__name__])
 
     def codec(batches):
         # r10 FUSED codec hop (guide §4.1): encode→decode→resize→bit-pack
@@ -1658,12 +1650,6 @@ def q_image_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: _image_px(F.col("embedding"), i),
         ).alias("px"),
     )
-
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[IC.__name__])
 
     def enc(batches):
         import numpy as np
@@ -1833,12 +1819,6 @@ def q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: _audio_sample(F.col("embedding"), i, F.col("v")),
         ).alias("s"),
     )
-
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[AC.__name__])
 
     def codec(batches):
         # r10 FUSED codec hop (guide §4.1): encode→decode→band-energies
@@ -2022,13 +2002,6 @@ def q_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("frames"),
     )
-
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[IC.__name__])
-    register_pickle_by_value(_sys.modules[VC.__name__])
 
     def enc(batches):
         import numpy as np

@@ -268,18 +268,6 @@ def read_units(
                 yield (fname, *row)
 
 
-def register_by_value() -> None:
-    """Ship the scan's modules inside pickled closures, so executors need
-    no repo checkout on sys.path (the driver may import this package by
-    file path from any cwd)."""
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    from shuttlestandalonedbcreator_spark.sources import biff, excel
-
-    for mod in (biff, excel, numfmt):
-        register_pickle_by_value(mod)
-
-
 def read_workbook_rows(
     spark: SparkSession,
     path: str,
@@ -301,7 +289,6 @@ def read_workbook_rows(
     """
     from shuttlestandalonedbcreator_spark.operators.util import local_frame
 
-    register_by_value()
     units = plan_units(path, sheet_prefix)
 
     def parse_partition(batches):

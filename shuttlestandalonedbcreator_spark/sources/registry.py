@@ -82,7 +82,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     A single-file table is read with the schema its footer declares, so the
     load fires no schema-inference job; a directory (a partitioned or
-    Spark-written table) or an unmapped type falls back to inference."""
+    Spark-written table) or an unmapped type falls back to inference.
+
+    Legacy INT96 timestamps also surface in pyarrow as ``timestamp[ns]``,
+    but Spark reads them as TIMESTAMP, not as nanosecond longs: they stay
+    out of the nanos columns, and a file holding one is left to inference
+    (which types it TIMESTAMP)."""
     import pyarrow as pa
 
     ensure_utc(spark)
@@ -90,16 +95,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     ns_cols, schema = [], None
     try:
-        arrow_schema = pq.read_schema(path)
+        parquet_schema = pq.read_metadata(path).schema
     except (OSError, pa.ArrowException):
         pass  # a directory or a scheme pyarrow cannot open: Spark infers
     else:
+        arrow_schema = parquet_schema.to_arrow_schema()
+        int96 = {
+            parquet_schema.column(i).path.split(".")[0]
+            for i in range(len(parquet_schema))
+            if parquet_schema.column(i).physical_type == "INT96"
+        }
         ns_cols = [
             field.name
             for field in arrow_schema
-            if pa.types.is_timestamp(field.type) and field.type.unit == "ns"
+            if pa.types.is_timestamp(field.type)
+            and field.type.unit == "ns"
+            and field.name not in int96
         ]
-        schema = footer_schema(arrow_schema, ns_cols)
+        if not int96:
+            schema = footer_schema(arrow_schema, ns_cols)
     if ns_cols:
         # runtime-set so it works on ANY caller-provided session (the
         # driver builds its own); conf only affects nanos columns

@@ -182,10 +182,5 @@ class SqliteDataSource(DataSource):
 
 
 def register_sqlite_source(spark: SparkSession) -> None:
-    """Register the format (idempotent). Ships this module by value so
-    executor pythons need no repo checkout (NOTES.md fact #4)."""
-    import shuttlestandalonedbcreator_spark.sources.sqlite_datasource as _self
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self)
+    """Register the format (idempotent)."""
     spark.dataSource.register(SqliteDataSource)

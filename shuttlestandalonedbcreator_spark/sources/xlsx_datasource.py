@@ -43,14 +43,13 @@ from pyspark.sql.datasource import (
 
 # module-level binding, NOT an import inside read()/__init__: the reader
 # class is instantiated ON THE EXECUTOR, where an import statement would
-# re-enter the import machinery with no repo on sys.path (NOTES.md fact
-# #4). As module-level globals of a by-value-registered module, these
-# function objects travel inside the pickled class instead.
+# re-enter the import machinery with no repo on sys.path (NOTES.md
+# standing fact 4). As module-level globals of the by-value package,
+# these function objects travel inside the pickled class instead.
 from shuttlestandalonedbcreator_spark.sources.excel import (
     RAW_SCHEMA,
     plan_units,
     read_units,
-    register_by_value,
     write_workbook,
 )
 
@@ -142,12 +141,5 @@ class XlsxDataSource(DataSource):
 
 
 def register_xlsx_source(spark: SparkSession) -> None:
-    """Register the format (idempotent). Ships the scan modules and this
-    one by value so executor pythons need no repo checkout (NOTES.md
-    fact #4)."""
-    import shuttlestandalonedbcreator_spark.sources.xlsx_datasource as _self
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_by_value()
-    register_pickle_by_value(_self)
+    """Register the format (idempotent)."""
     spark.dataSource.register(XlsxDataSource)

@@ -1,14 +1,14 @@
 """Real image codec for the multimodal pipeline — no native libs needed.
 
-A deployment normally registers PIL here (preferred automatically when
-importable). This container has no image libraries, so the default
-`image` codec is a self-contained PNG decoder/encoder written from the
-public PNG specification (RFC 2083 / W3C PNG): PNG's pixel stream is
-just zlib-compressed, per-row-filtered scanlines, and `zlib` + `struct`
-are stdlib — which makes PNG the one mainstream raster format decodable
-end-to-end with zero dependencies. Formats that genuinely need codec
+The default `image` codec is a self-contained PNG decoder/encoder
+written from the public PNG specification (RFC 2083 / W3C PNG): PNG's
+pixel stream is just zlib-compressed, per-row-filtered scanlines, and
+`zlib` + `struct` are stdlib — which makes PNG the one mainstream raster
+format decodable end-to-end with zero dependencies. Formats that genuinely need codec
 libraries (JPEG's DCT, WebP) still fail loudly with a register-a-codec
-message, preserving the loud-fail contract for unsupported bytes.
+message, preserving the loud-fail contract for unsupported bytes. A
+deployment with PIL registers it through `multimodal.register_decoder`
+and `register_resizer`.
 
 Supported PNG subset (covers everything our encoder or a typical
 ``PIL.Image.save(..., "PNG")`` of RGB/RGBA/L/LA/P images emits):
@@ -260,34 +260,3 @@ def stdlib_image_resizer(data: bytes, target_w: int, target_h: int) -> bytes:
     w, h, ch, px = decode_png(bytes(data))
     return encode_png(target_w, target_h, ch,
                       resize_nearest(w, h, ch, px, target_w, target_h))
-
-
-def pil_image_decoder(data: bytes) -> dict:  # pragma: no cover - no PIL here
-    from io import BytesIO
-
-    from PIL import Image
-
-    with Image.open(BytesIO(bytes(data))) as im:
-        return {"width": im.width, "height": im.height, "duration_ms": None}
-
-
-def pil_image_resizer(data: bytes, target_w: int, target_h: int) -> bytes:  # pragma: no cover
-    from io import BytesIO
-
-    from PIL import Image
-
-    with Image.open(BytesIO(bytes(data))) as im:
-        out = BytesIO()
-        im.resize((target_w, target_h)).save(out, format=im.format or "PNG")
-        return out.getvalue()
-
-
-def default_image_codec() -> tuple:
-    """(decoder, resizer) — PIL when importable (full format coverage),
-    else the stdlib PNG codec. Both satisfy the registry signatures."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return pil_image_decoder, pil_image_resizer
-    except ImportError:
-        return stdlib_image_decoder, stdlib_image_resizer

@@ -6,9 +6,9 @@ Design: content is a `binary` column + a `modality` tag + typed metadata
 struct. Decode / feature-extract / resize / frame-sample run as
 Arrow-batched `mapInPandas` stages. All three modalities ship with a
 REAL default codec, registered at import below: `image` (imagecodec.py:
-PIL when importable, else the stdlib-zlib PNG decoder/encoder), `audio`
-(audiocodec.py: stdlib PCM-WAV), `video` (videocodec.py: SSVF PNG-frame
-container, incl. a real frame sampler) — so extract_features /
+stdlib-zlib PNG decoder/encoder), `audio` (audiocodec.py: stdlib
+PCM-WAV), `video` (videocodec.py: SSVF PNG-frame container, incl. a
+real frame sampler) — so extract_features /
 resize_images / sample_frames run on actual codec bytes end-to-end with
 no extra libraries. Formats that genuinely need codec libraries
 (JPEG/WebP, MP3/AAC, H.264/MP4) keep the loud per-row failure that
@@ -124,21 +124,17 @@ def stub_decoder(modality: str) -> Callable[[bytes], dict]:
 
 
 def register_default_image_codecs(overwrite: bool = False) -> None:
-    """Install the default `image` decoder/resizer (PIL when importable,
-    else the stdlib PNG codec). Called once at import; call again with
-    ``overwrite=True`` to restore the defaults after a test or caller
+    """Install the default `image` decoder/resizer: the stdlib PNG codec
+    (imagecodec.py). A deployment with PIL registers its own through
+    register_decoder/register_resizer. Called once at import; call again
+    with ``overwrite=True`` to restore the defaults after a test or caller
     registered its own codec."""
-    import shuttlestandalonedbcreator_spark.streaming.imagecodec as _codec_module
-    from pyspark.cloudpickle import register_pickle_by_value
+    import shuttlestandalonedbcreator_spark.streaming.imagecodec as _image_module
 
-    # the registered functions live in imagecodec, so that module must
-    # ship by value too — executors may not have the repo importable
-    register_pickle_by_value(_codec_module)
-    decoder, resizer = _codec_module.default_image_codec()
     if overwrite or "image" not in _DECODERS:
-        _DECODERS["image"] = decoder
+        _DECODERS["image"] = _image_module.stdlib_image_decoder
     if overwrite or "image" not in _RESIZERS:
-        _RESIZERS["image"] = resizer
+        _RESIZERS["image"] = _image_module.stdlib_image_resizer
 
 
 def register_default_av_codecs(overwrite: bool = False) -> None:
@@ -151,13 +147,8 @@ def register_default_av_codecs(overwrite: bool = False) -> None:
     audio frame sampler is installed — resampling genuinely needs a DSP
     library, so those stay loud-fail until a deployment registers one."""
     import shuttlestandalonedbcreator_spark.streaming.audiocodec as _audio_module
-    import shuttlestandalonedbcreator_spark.streaming.imagecodec as _image_module
     import shuttlestandalonedbcreator_spark.streaming.videocodec as _video_module
-    from pyspark.cloudpickle import register_pickle_by_value
 
-    register_pickle_by_value(_audio_module)
-    register_pickle_by_value(_image_module)  # video frames decode as PNG
-    register_pickle_by_value(_video_module)
     if overwrite or "audio" not in _DECODERS:
         _DECODERS["audio"] = _audio_module.default_audio_decoder()
     if overwrite or "video" not in _DECODERS:
@@ -189,13 +180,6 @@ def extract_features(
     """Arrow-batched decode/feature stage over (content_id, modality,
     n_bytes, sha, content). Per-row errors are captured, not thrown —
     operator E1's skip-and-count semantics applied to codecs."""
-
-    # ship this module (incl. the registered-decoder snapshot) by value —
-    # executors may not have the repo importable
-    import shuttlestandalonedbcreator_spark.streaming.multimodal as _self_module
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self_module)
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -241,11 +225,6 @@ def resize_images(
     registered resizer (or whose resizer throws) come back with
     ``resize_ok=False`` + the error — E1 semantics, never a job abort.
     Narrow map over fan_out partitions: scales linearly with executors."""
-    import shuttlestandalonedbcreator_spark.streaming.multimodal as _self_module
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self_module)
-
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
@@ -287,11 +266,6 @@ def sample_frames(
     Expansion happens inside mapInPandas — partition-parallel, no
     explode-shuffle; downstream per-frame stages (decode, embed) chain
     onto the same partitioning."""
-    import shuttlestandalonedbcreator_spark.streaming.multimodal as _self_module
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self_module)
-
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 

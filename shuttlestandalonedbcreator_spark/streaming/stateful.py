@@ -1,17 +1,14 @@
-"""Custom stateful streaming operators (applyInPandasWithState) and
-stream-stream joins — the deep end of the extension surface (SURVEY.md
-§2.9: absent in the reference; provided as first-class engine operators).
+"""Custom stateful streaming operator (applyInPandasWithState) — the
+deep end of the extension surface (SURVEY.md §2.9: absent in the
+reference; provided as a first-class engine operator).
 
 `running_user_totals` is the canonical custom-state shape: per-key state
 (count, sum, last-seen) carried across micro-batches in an Arrow-backed
 GroupState, emitting the updated aggregate each batch. The same function
 applied to a batch frame degrades to a plain groupBy — tests pin the
-equivalence.
-
-`interval_join_streams` is a watermarked stream-stream join: each left
-event pairs with right events of the same key within a bounded time
-interval — state on both sides is pruned by the watermark, so memory is
-bounded by (rate × interval), not history.
+equivalence. Watermarked stream-stream interval joins live in
+`streaming/joins.py:interval_join`; a look-back join is that join with
+the sides swapped.
 """
 
 from __future__ import annotations
@@ -56,12 +53,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     groupBy path (same result in one shot).
     """
     if events.isStreaming:
-        # ship this module by value — executor workers may not have the
-        # repo on sys.path (see NOTES.md fact #4)
-        import shuttlestandalonedbcreator_spark.streaming.stateful as _self_module
-        from pyspark.cloudpickle import register_pickle_by_value
-
-        register_pickle_by_value(_self_module)
         return (
             events.groupBy("user_id")
             .applyInPandasWithState(
@@ -76,98 +67,4 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum(F.coalesce(F.col("value"), F.lit(0.0))), 6).alias("total_value"),
         F.max("event_id").alias("last_event_id"),
-    )
-
-
-def interval_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    lookback: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Left events joined to same-key right events that happened within
-    [left_ts - lookback, left_ts]. Works on streams (watermarked state,
-    bounded by the interval) and on batch frames (plain range join)."""
-    lw = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rw = right.withWatermark(right_ts, watermark) if right.isStreaming else right
-    l, r = lw.alias("l"), rw.alias("r")
-    cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}"))
-        & (F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}") - F.expr(f"INTERVAL {lookback}"))
-    )
-    return l.join(r, cond, "inner")
-
-
-class _RunningTotalsProcessor:
-    """StatefulProcessor for transformWithStateInPandas (Spark 4's
-    successor to applyInPandasWithState): same per-user running totals,
-    but state lives in a named ValueState handle backed by the RocksDB
-    state store — checkpointable, TTL-capable, and queryable via the
-    state data source. Declared lazily (class body imports nothing from
-    pyspark.sql.streaming.stateful_processor at module import time is
-    fine in 4.x)."""
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self._totals.exists():
-            n, total, last_id = self._totals.get()
-        else:
-            n, total, last_id = 0, 0.0, -1
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-            if len(pdf):
-                last_id = max(last_id, int(pdf["event_id"].max()))
-        self._totals.update((n, float(round(total, 6)), last_id))
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": key[0],
-                    "n_events": n,
-                    "total_value": float(round(total, 6)),
-                    "last_event_id": last_id,
-                }
-            ]
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """`running_user_totals` on the transformWithStateInPandas API —
-    requires the RocksDB state store provider (set on the session at call
-    time; the conf is runtime-settable) and the `protobuf` package (the
-    TWS python runner's wire protocol — absent in this container, so the
-    convergence test skips; the operator is exercised wherever protobuf
-    exists). Batch frames degrade to the same plain groupBy as the v1
-    operator."""
-    if not events.isStreaming:
-        return running_user_totals(events)
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    import shuttlestandalonedbcreator_spark.streaming.stateful as _self_module
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_self_module)
-
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    class _Proc(_RunningTotalsProcessor, StatefulProcessor):
-        pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Proc(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

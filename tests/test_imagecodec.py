@@ -161,13 +161,12 @@ def test_registry_adapters():
 
 
 def test_default_codec_is_stdlib_without_pil():
-    dec, res = IC.default_image_codec()
-    try:
-        import PIL  # noqa: F401
-        assert dec is IC.pil_image_decoder
-    except ImportError:
-        assert dec is IC.stdlib_image_decoder
-        assert res is IC.stdlib_image_resizer
+    from shuttlestandalonedbcreator_spark.streaming import multimodal as M
+
+    M.register_decoder("image", lambda data: {})
+    M.register_default_image_codecs(overwrite=True)
+    assert M._DECODERS["image"] is IC.stdlib_image_decoder
+    assert M._RESIZERS["image"] is IC.stdlib_image_resizer
 
 
 def test_real_png_end_to_end_through_spark(spark):

@@ -207,6 +207,27 @@ def test_load_table_reads_nanosecond_timestamps_exactly(spark, tmp_path):
     assert got == {1: 1_700_000_000_123_456, 2: 1_700_000_000_123_456, 3: None}
 
 
+def test_load_table_reads_int96_timestamps(spark, tmp_path):
+    """A legacy INT96 timestamp column (pyarrow reports it as
+    ``timestamp[ns]``) loads as TimestampType with exact microseconds and
+    its NULL intact, not as a nanosecond long."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    from shuttlestandalonedbcreator_spark.sources.registry import load_table
+
+    us = [1_700_000_000_123_456, 1_600_000_000_000_001, None]
+    table = pa.table({"id": [1, 2, 3], "ts": pa.array(us, pa.timestamp("us"))})
+    path = str(tmp_path / "legacy.parquet")
+    pq.write_table(table, path, use_deprecated_int96_timestamps=True)
+    assert pq.read_metadata(path).schema.column(1).physical_type == "INT96"
+    df = load_table(spark, str(tmp_path), "legacy")
+    assert isinstance(df.schema["ts"].dataType, TimestampType)
+    got = {r["id"]: r["us"] for r in df.select("id", F.unix_micros("ts").alias("us")).collect()}
+    assert got == dict(zip([1, 2, 3], us))
+
+
 def test_load_table_reads_spark_written_directory(spark, tmp_path):
     """A directory table (Spark's own output) has no single footer; the
     load falls back to schema inference."""

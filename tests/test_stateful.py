@@ -1,5 +1,5 @@
-"""Custom stateful streaming (applyInPandasWithState) and stream-stream
-interval joins: streaming results must converge to the batch computation."""
+"""Custom stateful streaming (applyInPandasWithState): streaming results
+must converge to the batch computation."""
 
 from __future__ import annotations
 
@@ -7,10 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from shuttlestandalonedbcreator_spark.sources.registry import load_table
-from shuttlestandalonedbcreator_spark.streaming.stateful import (
-    interval_join_streams,
-    running_user_totals,
-)
+from shuttlestandalonedbcreator_spark.streaming.stateful import running_user_totals
 
 
 @pytest.fixture(scope="module")
@@ -46,72 +43,6 @@ def test_stateful_running_totals_converge(spark, event_source):
         .select("user_id", "s.n_events", "s.total_value", "s.last_event_id")
     )
     want = running_user_totals(ev)  # batch path
-    canon = lambda df: sorted(
-        (r["user_id"], r["n_events"], round(r["total_value"], 4), r["last_event_id"])
-        for r in df.collect()
-    )
-    assert canon(got) == canon(want)
-
-
-def test_interval_join_stream_matches_batch(spark, event_source):
-    ev, src = event_source
-    purchases_b = ev.filter(F.col("event_type") == "purchase")
-    clicks_b = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
-    )
-    want = interval_join_streams(purchases_b, clicks_b, "user_id").count()
-
-    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "2").parquet(src)
-    purchases_s = stream.filter(F.col("event_type") == "purchase")
-    clicks_s = stream.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
-    )
-    q = (
-        interval_join_streams(purchases_s, clicks_s, "user_id", watermark="365 days")
-        .writeStream.format("memory")
-        .queryName("ivj_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.table("ivj_mem").count()
-    assert got == want
-    assert want > 0  # the join actually matched something
-
-
-def test_tws_running_totals_converge(spark, event_source, tmp_path):
-    """transformWithStateInPandas (Spark 4 stateful API, RocksDB store)
-    converges to the same per-user totals as the batch path."""
-    # the TWS python runner speaks protobuf to the JVM; without the
-    # protobuf package the driver worker crashes at init
-    pytest.importorskip("google.protobuf.descriptor")
-    from shuttlestandalonedbcreator_spark.streaming.stateful import (
-        running_user_totals_tws,
-    )
-
-    ev, src = event_source
-    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(src)
-    q = (
-        running_user_totals_tws(stream)
-        .writeStream.format("memory")
-        .queryName("tws_mem")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    terminated = q.awaitTermination(180)
-    if q.exception() is not None:
-        raise q.exception()
-    assert terminated
-    got = (
-        spark.table("tws_mem")
-        .groupBy("user_id")
-        .agg(F.max(F.struct("n_events", "total_value", "last_event_id")).alias("s"))
-        .select("user_id", "s.n_events", "s.total_value", "s.last_event_id")
-    )
-    want = running_user_totals_tws(ev)  # batch path
     canon = lambda df: sorted(
         (r["user_id"], r["n_events"], round(r["total_value"], 4), r["last_event_id"])
         for r in df.collect()

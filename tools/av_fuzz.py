@@ -76,12 +76,6 @@ def audio_case(spark, con, sf_dir, rng):
         ).alias("s"),
     )
 
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[AC.__name__])
-
     def enc(batches):
         import numpy as np
         import pandas as pd
@@ -262,13 +256,6 @@ def video_case(spark, con, sf_dir, rng):
         ).alias("frames"),
     )
 
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[IC.__name__])
-    register_pickle_by_value(_sys.modules[VC.__name__])
-
     def enc(batches):
         import numpy as np
         import pandas as pd
@@ -380,12 +367,6 @@ def image_case(spark, con, sf_dir, rng):
             ).otherwise(_image_px(F.col("embedding"), i)).cast("int"),
         ).alias("px"),
     )
-
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[IC.__name__])
 
     def enc(batches):
         import numpy as np
@@ -546,12 +527,6 @@ def hist_case(spark, con, sf_dir, rng):
             lambda i: _image_px(F.col("embedding"), i),
         ).alias("px"),
     )
-
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[IC.__name__])
 
     def enc(batches):
         import numpy as np

@@ -88,12 +88,6 @@ def build_hashed(spark, sf_dir: str, rep: int):
         )
     )
 
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[AC.__name__])
-
     def enc(batches):
         import numpy as np
         import pandas as pd
@@ -257,13 +251,6 @@ def run_video_rep(spark, sf_dir: str, rep: int) -> dict:
         ).alias("frames"),
     )
 
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[IC.__name__])
-    register_pickle_by_value(_sys.modules[VC.__name__])
-
     def enc(batches):
         import numpy as np
         import pandas as pd
@@ -377,12 +364,6 @@ def run_image_rep(spark, sf_dir: str, rep: int) -> dict:
             lambda i: pixel(F.col("embedding"), i, F.col("v"), F.col("r")),
         ).alias("px"),
     )
-
-    import sys as _sys
-
-    from pyspark.cloudpickle import register_pickle_by_value
-
-    register_pickle_by_value(_sys.modules[IC.__name__])
 
     def enc(batches):
         import numpy as np
