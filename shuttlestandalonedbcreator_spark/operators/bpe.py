@@ -19,6 +19,10 @@ method):
 3. Encoding applies the learned merge ranks greedily per word (lowest
    rank first — the standard BPE tokenize), again Arrow-batched.
 
+Size gate: a vocab of at most ``DRIVER_WORDS`` distinct words (a module
+constant) runs step 2 on the driver over one collected dict; both paths
+take the single argmax pair per round.
+
 Determinism: ties on pair frequency break lexicographically, so the
 merge sequence is a pure function of the corpus. End-of-word is the
 dedicated sentinel symbol `</w>`.
@@ -32,6 +36,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EOW = "</w>"
+# Distinct words at or under which the merge loop runs driver-side over
+# one collected vocab dict; a larger vocab takes the distributed rounds.
+# Read at call time, so tests patch it.
+DRIVER_WORDS = 200_000
 
 
 def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
@@ -71,49 +79,17 @@ def _merge_syms(s: list, a: str, b: str, merged: str) -> list:
     return res
 
 
-def _apply_merges_rows(pairs: list[tuple[str, str]]):
-    """mapInPandas body applying ``pairs`` SEQUENTIALLY in rank order —
-    one Spark job for the whole batch of merges."""
+def _apply_merge_rows(a: str, b: str):
+    """mapInPandas body applying the merge (a, b) to every symbol
+    array — one Spark job per learned merge."""
 
     def run(batches: Iterator) -> Iterator:
         for pdf in batches:
-            out = []
-            for syms in pdf["syms"]:
-                s = list(syms)
-                for a, b in pairs:
-                    s = _merge_syms(s, a, b, a + b)
-                out.append(s)
             pdf = pdf.copy()
-            pdf["syms"] = out
+            pdf["syms"] = [_merge_syms(list(s), a, b, a + b) for s in pdf["syms"]]
             yield pdf
 
     return run
-
-
-def _select_batch(
-    ranked: list[tuple[tuple[str, str], int]],
-    batch_size: int,
-    min_freq: int,
-) -> list[tuple[str, str]]:
-    """Greedy top-K pairwise-DISJOINT pair selection in (count desc,
-    lex) order. Disjoint pairs' counts are unaffected by each other's
-    application (a merge only destroys/creates pairs sharing one of its
-    symbols), so within the batch each selected pair's count is exact;
-    the approximation vs strict sequential BPE is only that a pair
-    NEWLY CREATED by an earlier batch member cannot be selected until
-    the next round."""
-    chosen: list[tuple[str, str]] = []
-    used: set[str] = set()
-    for (a, b), n in ranked:
-        if n < min_freq:
-            break
-        if a in used or b in used:
-            continue
-        chosen.append((a, b))
-        used.update((a, b, a + b))
-        if len(chosen) >= batch_size:
-            break
-    return chosen
 
 
 def train_bpe_merges(
@@ -121,44 +97,26 @@ def train_bpe_merges(
     text_col: str = "text",
     n_merges: int = 50,
     min_freq: int = 2,
-    driver_threshold: int = 200_000,
-    batch_size: int = 1,
 ) -> list[tuple[str, str]]:
     """Learn up to ``n_merges`` merges; stops early when no adjacent pair
     reaches ``min_freq``. Returns the ordered merge list.
 
     Size-adaptive like connected_components: the word-frequency vocab
     must be materialized anyway, and when it holds at most
-    ``driver_threshold`` words the merge loop runs driver-side
+    ``DRIVER_WORDS`` words the merge loop runs driver-side
     (each distributed round costs ~2 s of job overhead vs microseconds
     of counting on a small dict). A 100 TB corpus's vocab blows past the
     gate and takes the distributed rounds automatically — identical
-    output either way (same argmax + lexicographic tie-break).
-
-    ``batch_size`` > 1 applies up to that many pairwise-DISJOINT merges
-    per round (selected from one pair-count job in count-desc/lex
-    order, applied sequentially in one mapInPandas pass), cutting the
-    Spark-job count ~batch_size× — the difference between 2×32k jobs
-    and ~2×2k for a real 32k-vocab tokenizer. Within a batch every
-    selected pair's count is exact (disjoint merges can't change each
-    other's counts); the only deviation from strict sequential BPE is
-    that a pair CREATED by an earlier batch member waits for the next
-    round even if it would have outranked a later member. Driver and
-    distributed paths implement identical batched selection, so output
-    is path-independent at every ``batch_size``."""
+    output either way (same argmax + lexicographic tie-break)."""
     vocab = _word_counts(docs, text_col).localCheckpoint(eager=True)
-    if vocab.count() <= driver_threshold:
+    if vocab.count() <= DRIVER_WORDS:
         return _driver_bpe(
-            {r["word"]: r["freq"] for r in vocab.collect()},
-            n_merges,
-            min_freq,
-            batch_size,
+            {r["word"]: r["freq"] for r in vocab.collect()}, n_merges, min_freq
         )
 
     state = _initial_symbols(vocab).localCheckpoint(eager=True)
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:
-        k = min(batch_size, n_merges - len(merges))
         pairs = state.select(
             "freq",
             F.explode(
@@ -169,37 +127,32 @@ def train_bpe_merges(
                 )
             ).alias("p"),
         ).filter(F.col("p.a") != EOW)
-        # 4k candidates cover the k disjoint picks with headroom; the
-        # selection consumes at most 2 symbols + 1 product per pick
         top = (
             pairs.groupBy("p")
             .agg(F.sum("freq").alias("n"))
             .orderBy(F.desc("n"), F.asc("p.a"), F.asc("p.b"))
-            .limit(max(4 * k, 8))
+            .limit(1)
             .collect()
         )
-        batch = _select_batch(
-            [((r["p"]["a"], r["p"]["b"]), r["n"]) for r in top], k, min_freq
-        )
-        if not batch:
+        if not top or top[0]["n"] < min_freq:
             break
-        merges.extend(batch)
+        a, b = top[0]["p"]["a"], top[0]["p"]["b"]
+        merges.append((a, b))
         state = state.mapInPandas(
-            _apply_merges_rows(batch), schema=state.schema
+            _apply_merge_rows(a, b), schema=state.schema
         ).localCheckpoint(eager=True)
     return merges
 
 
 def _driver_bpe(
-    vocab: dict[str, int], n_merges: int, min_freq: int, batch_size: int = 1
+    vocab: dict[str, int], n_merges: int, min_freq: int
 ) -> list[tuple[str, str]]:
     """The merge loop over a SMALL (size-gated) word-frequency dict —
-    same argmax + lexicographic tie-break AND same batched disjoint
-    selection as the distributed rounds (path-independent output)."""
+    same argmax + lexicographic tie-break as the distributed rounds
+    (path-independent output)."""
     symtab = {w: list(w) + [EOW] for w in vocab}
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:
-        k = min(batch_size, n_merges - len(merges))
         pairs: dict[tuple[str, str], int] = {}
         for w, freq in vocab.items():
             s = symtab[w]
@@ -209,19 +162,14 @@ def _driver_bpe(
                     pairs[p] = pairs.get(p, 0) + freq
         if not pairs:
             break
-        ranked = sorted(
+        (a, b), n = min(
             pairs.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
         )
-        # same candidate horizon as the distributed path's LIMIT, so the
-        # two paths select identically by construction
-        batch = _select_batch(ranked[: max(4 * k, 8)], k, min_freq)
-        if not batch:
+        if n < min_freq:
             break
-        merges.extend(batch)
+        merges.append((a, b))
         for w, s in symtab.items():
-            for a, b in batch:
-                s = _merge_syms(s, a, b, a + b)
-            symtab[w] = s
+            symtab[w] = _merge_syms(s, a, b, a + b)
     return merges
 
 

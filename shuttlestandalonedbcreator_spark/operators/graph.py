@@ -19,9 +19,13 @@ is why plain propagation is the right scale choice here over the
 O(log² n)-round large-star/small-star contraction (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14), which pays ~2×
 per-round cost to win only on high-diameter graphs (paths/meshes) that
-near-dup workloads never produce. A `max_iterations` guard bounds the
+near-dup workloads never produce. The ``MAX_ROUNDS`` guard bounds the
 worst case; hitting it raises rather than returning a half-converged
 clustering.
+
+Both caps are module constants, read at call time (tests patch them):
+``DRIVER_EDGES`` sizes the driver union-find gate and ``MAX_ROUNDS`` the
+propagation budget.
 """
 
 from __future__ import annotations
@@ -31,15 +35,14 @@ from pyspark.sql import functions as F
 
 from .util import local_frame
 
+# Directed edges at or under which the labels come from a driver-side
+# union-find over one collect; a larger graph takes the propagation.
+DRIVER_EDGES = 100_000
+# Propagation rounds before the distributed path gives up and raises.
+MAX_ROUNDS = 50
 
-def connected_components(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int = 50,
-    checkpoint: bool = True,
-    driver_threshold: int = 200_000,
-) -> DataFrame:
+
+def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Cluster an undirected edge list; returns (id, component) where
     ``component`` is the smallest node id in the node's component —
     deterministic canonical representative, no randomness.
@@ -48,27 +51,28 @@ def connected_components(
     documents are trivially their own component; callers left-join this
     result and coalesce to the doc's own id).
 
-    Size-adaptive execution: the edge list must be materialized anyway
-    (it is re-joined every round), and its count is then free — when it
-    is at most ``driver_threshold`` edges the component labels come from
-    a driver-side union-find instead of iterative label propagation.
-    Near-dup graphs hold only the documents that HAVE a duplicate, so at
-    every tested scale they are thousands of edges while each distributed
-    propagation round costs ~1-2 s of pure job/shuffle overhead
-    (measured: 920 edges took ~9 s of rounds, <1 ms of union-find). The
-    distributed path is the 100 TB fallback, taken automatically the
-    moment the dup graph outgrows the gate; the result is IDENTICAL
-    (min-id representative is union-order-independent)."""
+    Size-adaptive execution: one ``limit(DRIVER_EDGES + 1)`` collect
+    gives both the size test and the rows, and when the graph holds at
+    most ``DRIVER_EDGES`` directed edges the component labels come from
+    a driver-side union-find over those rows instead of iterative label
+    propagation. Near-dup graphs hold only the documents that HAVE a
+    duplicate, so at every tested scale they are thousands of edges
+    while each distributed propagation round costs ~1-2 s of pure
+    job/shuffle overhead (measured: 920 edges took ~9 s of rounds, <1 ms
+    of union-find). The distributed path is the 100 TB fallback, taken
+    automatically the moment the dup graph outgrows the gate; the result
+    is IDENTICAL (min-id representative is union-order-independent)."""
     directed = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if checkpoint:
-        # materialize the DIRECTED list BEFORE symmetrizing: the union
-        # with its own swap would otherwise evaluate the (expensive
-        # upstream pair-detection) lineage twice in one pass, and the
-        # per-round re-joins re-run it every round
-        directed = directed.localCheckpoint(eager=True)
+    head = directed.limit(DRIVER_EDGES + 1).collect()
+    if len(head) <= DRIVER_EDGES:
+        return _driver_union_find(directed, head)
+
+    # materialize the DIRECTED list BEFORE symmetrizing: the union with
+    # its own swap would otherwise evaluate the (expensive upstream
+    # pair-detection) lineage twice in one pass, and the per-round
+    # re-joins re-run it every round
+    directed = directed.localCheckpoint(eager=True)
     sym = directed.union(directed.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if checkpoint and directed.count() <= driver_threshold // 2:
-        return _driver_union_find(directed)
 
     # label(u) starts as min(u, min direct neighbor) — one propagation
     # round folded into initialization
@@ -76,11 +80,9 @@ def connected_components(
         sym.groupBy("u")
         .agg(F.min("v").alias("_mv"))
         .select("u", F.least(F.col("u"), F.col("_mv")).alias("comp"))
-    )
-    if checkpoint:
-        labels = labels.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
 
-    for _ in range(max_iterations):
+    for _ in range(MAX_ROUNDS):
         # candidate labels: own label ∪ each neighbor's label. The own-label
         # row is tagged so the SAME aggregation that picks the new label also
         # recovers the old one — convergence is then a cheap scan-count over
@@ -93,25 +95,24 @@ def connected_components(
             nbr.unionByName(labels.select("u", "comp", F.col("comp").alias("own")))
             .groupBy("u")
             .agg(F.min("comp").alias("comp"), F.min("own").alias("_old"))
-        )
-        if checkpoint:
-            new_labels = new_labels.localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
         converged = new_labels.filter(F.col("comp") != F.col("_old")).isEmpty()
         labels = new_labels.select("u", "comp")
         if converged:
             return labels.select(F.col("u").alias("id"), F.col("comp").alias("component"))
     raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} rounds"
+        f"connected_components did not converge in {MAX_ROUNDS} rounds"
     )
 
 
-def _driver_union_find(sym: DataFrame) -> DataFrame:
-    """Union-find with path compression over a SMALL (size-gated,
-    already-materialized) edge list; returns the same (id, component)
-    contract as the distributed propagation. collect(), not
-    toLocalIterator: the gate bounds the size, and toLocalIterator runs
-    one sequential job per partition (measured ~4 s for 32 near-empty
-    partitions vs one ~0.1 s collect job)."""
+def _driver_union_find(directed: DataFrame, rows: list) -> DataFrame:
+    """Union-find with path compression over the size-gated edge
+    ``rows`` collected from ``directed``; returns the same
+    (id, component) contract as the distributed propagation. The rows
+    come from one collect, not toLocalIterator: the gate bounds the
+    size, and toLocalIterator runs one sequential job per partition
+    (measured ~4 s for 32 near-empty partitions vs one ~0.1 s collect
+    job)."""
     parent: dict = {}
 
     def find(x):
@@ -122,8 +123,7 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in sym.collect():
-        u, v = row[0], row[1]
+    for u, v in rows:
         parent.setdefault(u, u)
         parent.setdefault(v, v)
         ru, rv = find(u), find(v)
@@ -135,10 +135,10 @@ def _driver_union_find(sym: DataFrame) -> DataFrame:
         m = comp_min.get(r)
         if m is None or node < m:
             comp_min[r] = node
-    rows = [(node, comp_min[find(node)]) for node in parent]
-    schema = sym.schema["u"].dataType
+    labels = [(node, comp_min[find(node)]) for node in parent]
+    schema = directed.schema["u"].dataType
     return local_frame(
-        sym.sparkSession, rows,
+        directed.sparkSession, labels,
         f"id {schema.simpleString()}, component {schema.simpleString()}",
     )
 

@@ -9,14 +9,14 @@ canonical scale-killer. This module decomposes the three global-order
 primitives the catalog uses — ROW_NUMBER, running SUM, NTILE — into:
 
 1. a MONOTONE value-range block id on the leading sort key
-   (``(v - min) * n_blocks / (span + 1)``: any monotone non-decreasing
+   (``(v - min) * N_BLOCKS / (span + 1)``: any monotone non-decreasing
    map works, because rows in different blocks are already totally
    ordered by the leading key, and rows in the SAME block are ordered by
    the full sort spec inside the block);
 2. a per-block window (``partitionBy(_blk)`` — parallel, spills never
    exceed one block);
 3. a block-offset stitch: per-block row counts / value sums are a frame
-   of at most ``n_blocks`` rows (constant, default 1024 — the
+   of at most ``N_BLOCKS`` rows (a module constant, 1024 — the
    "histogram buckets" bounded class); it is collected once, the
    cumulative offsets are computed driver-side in exact Python
    integers, and the tiny offsets relation broadcast-joins back as a
@@ -39,8 +39,9 @@ DESC => NULLS LAST); NaN floating keys map to the top block (Spark
 sorts NaN greatest under both directions). Equal leading-key values
 always land in the same block, so ties are broken entirely inside a
 block by the remaining sort columns — a dominant equal-value atom
-bounds parallelism, which the helpers now observe and surface as a
-`BlockSkewWarning` (or an error under ``on_skew="raise"``). The frame is ``localCheckpoint(eager=True)``-ed once so the
+bounds parallelism, which the helpers observe and surface as a
+`BlockSkewWarning` (a ``warnings`` filter turns it into an error or
+silences it). The frame is ``localCheckpoint(eager=True)``-ed once so the
 block assignment, the per-block windows, and the block-size aggregate
 all consume one materialization of the (already aggregated) input
 instead of re-evaluating its subtree.
@@ -48,9 +49,13 @@ instead of re-evaluating its subtree.
 Skew note: value-range blocking keys on the VALUE distribution, not the
 row distribution — a heavy-tailed key (Zipf revenue) can pile most rows
 into few blocks. That still beats one task by the number of occupied
-blocks, and a caller with a known-skewed key can pass a monotone
-pre-transform of it (e.g. log1p) as the leading sort key's block proxy
-via ``block_on``.
+blocks, and a caller with a known-skewed key prepends a monotone proxy
+column to the spec: ``[("_p", "desc"), ("rev", "desc"), ...]`` with
+``_p = log1p(rev)`` is the same total order (ties on ``_p`` fall to
+``rev``), and the blocks spread on ``_p``. A DATE key takes the same
+recipe with ``_p = unix_date(d)``.
+
+``N_BLOCKS`` is a module constant read at call time; tests patch it.
 """
 
 from __future__ import annotations
@@ -79,14 +84,13 @@ class BlockSkewWarning(UserWarning):
     """A scalewin block holds most of the frame — parallelism degraded.
 
     Fired when the largest value-range block exceeds the warn threshold
-    share of rows. Fix: pass a finer-grained leading sort key, or a
-    monotone spreading transform of it via ``block_on`` (e.g. ``log1p``
-    for heavy-tailed revenue)."""
+    share of rows. Fix: a finer-grained leading sort key, or a prepended
+    monotone proxy column (e.g. ``log1p`` of a heavy-tailed revenue)."""
 
 
 # NOTE: this module plans NO unpartitioned window at all — the offset
 # stitch computes cumulative block offsets driver-side from the
-# collected (<= n_blocks+1 row) block-size aggregate, so the JVM
+# collected (<= N_BLOCKS+1 row) block-size aggregate, so the JVM
 # WindowExec "No Partition Defined" WARN can never fire from here.
 
 
@@ -99,10 +103,9 @@ def _order_exprs(order_by: OrderSpec) -> list[Column]:
     return out
 
 
-def _block_expr(lead: Column, mn: Column, mx: Column,
-                n_blocks: int) -> Column:
+def _block_expr(lead: Column, mn: Column, mx: Column) -> Column:
     """Monotone non-decreasing map of the leading key into
-    [0, n_blocks-1]; NULLs to the sentinel block that matches Spark's
+    [0, N_BLOCKS-1]; NULLs to the sentinel block that matches Spark's
     default null ordering. All arithmetic runs in double AFTER the cast:
     IEEE subtract/multiply/divide by positive constants are weakly
     monotone (block assignment only needs v1 <= v2 => blk(v1) <=
@@ -115,14 +118,14 @@ def _block_expr(lead: Column, mn: Column, mx: Column,
     leadd = lead.cast("double")
     mnd, mxd = mn.cast("double"), mx.cast("double")
     span = (mxd - mnd) + F.lit(1.0)
-    raw = F.floor((leadd - mnd) * F.lit(float(n_blocks)) / span)
-    blk = F.greatest(F.lit(0), F.least(F.lit(n_blocks - 1), raw))
+    raw = F.floor((leadd - mnd) * F.lit(float(N_BLOCKS)) / span)
+    blk = F.greatest(F.lit(0), F.least(F.lit(N_BLOCKS - 1), raw))
     # Spark defaults: ASC => NULLS FIRST, DESC => NULLS LAST. Block -1
     # satisfies both: it sorts before every real block ascending and
     # after every real block descending. NaN is the symmetric top case.
     return (
         F.when(lead.isNull(), F.lit(-1))
-        .when(F.isnan(leadd), F.lit(n_blocks - 1))
+        .when(F.isnan(leadd), F.lit(N_BLOCKS - 1))
         .otherwise(blk)
         .cast("long")
     )
@@ -131,11 +134,10 @@ def _block_expr(lead: Column, mn: Column, mx: Column,
 def _stitch(d: DataFrame, blk: str, local_col: str, bulk_agg: Column,
             direction: str, out: str, total_col: str | None = None,
             nonnull_count_agg: Column | None = None,
-            context: str = "", on_skew: str = "warn",
-            n_blocks: int = N_BLOCKS,
+            context: str = "",
             sizes_rows: list | None = None) -> DataFrame:
     """Add ``out`` = block-local value + cumulative offset of earlier
-    blocks. The offsets window runs over at most n_blocks+1 rows — a
+    blocks. The offsets window runs over at most N_BLOCKS+1 rows — a
     constant-bounded frame, never data-sized. ``total_col`` additionally
     attaches the GRAND total (sum over all blocks) — free here, because
     the per-block sums already exist; callers that need the scalar
@@ -149,14 +151,14 @@ def _stitch(d: DataFrame, blk: str, local_col: str, bulk_agg: Column,
     returns the earlier blocks' sum when any earlier non-null value
     exists, and NULL only when none does.
 
-    The per-block aggregate (at most n_blocks+1 rows by construction)
+    The per-block aggregate (at most N_BLOCKS+1 rows by construction)
     is collected ONCE and the cumulative offsets are computed
     driver-side in exact Python integers, then broadcast-joined back
     as a JVM local relation (``local_frame``): no unpartitioned stitch
     window remains in the plan, and the same collected rows feed the
-    max-block-share degeneration signal for free
-    (``context``/``on_skew``) — observing skew costs zero extra jobs. Multi-spec callers pass ``sizes_rows``
-    (rows keyed ``_b``/``_bulk``/``_cnt``, pre-collected for ALL specs
+    max-block-share degeneration signal for free (``context``) —
+    observing skew costs zero extra jobs. Multi-spec callers pass
+    ``sizes_rows`` (rows keyed ``_b``/``_bulk``/``_cnt``, pre-collected for ALL specs
     in one job) so K specs cost one job, not K.
 
     Overflow contract: the driver-side cumulative offsets are exact
@@ -172,11 +174,11 @@ def _stitch(d: DataFrame, blk: str, local_col: str, bulk_agg: Column,
             aggs.append(nonnull_count_agg.alias("_nn"))
         sizes_rows = (
             d.groupBy(F.col(blk).alias("_b")).agg(*aggs).collect()
-        )  # <= n_blocks+1 rows
+        )  # <= N_BLOCKS+1 rows
     sizes = sorted(
         sizes_rows, key=lambda r: r["_b"], reverse=(direction == "desc")
     )
-    _warn_block_share(sizes, context, on_skew, n_blocks)
+    _warn_block_share(sizes, context)
 
     nonnull_bulks = [r["_bulk"] for r in sizes if r["_bulk"] is not None]
     total = sum(nonnull_bulks) if nonnull_bulks else None
@@ -216,20 +218,17 @@ def _stitch(d: DataFrame, blk: str, local_col: str, bulk_agg: Column,
     return joined.withColumn(out, out_expr).drop(*drop)
 
 
-def _warn_block_share(sizes, context: str, on_skew: str,
-                      n_blocks: int) -> None:
+def _warn_block_share(sizes, context: str) -> None:
     """Surface blocking degeneration from the stitch's own collected
     per-block rows (zero extra jobs). Equal-value atoms of the leading
     key cannot be split across blocks, so a dominant atom bounds
-    parallelism at 1/share — warn (or raise under ``on_skew="raise"``)
-    past the threshold instead of leaving the hazard as documentation.
-    Frames smaller than ``n_blocks`` rows never warn: below that, even
-    the single-partition window is in the constant-bounded class the
-    plan gate allowlists."""
-    if on_skew == "ignore" or not sizes:
-        return
+    parallelism at 1/share — warn past the threshold instead of leaving
+    the hazard as documentation (a ``warnings`` filter on
+    `BlockSkewWarning` gives "raise" or "ignore"). Frames smaller than
+    ``N_BLOCKS`` rows never warn: below that, even the single-partition
+    window is in the constant-bounded class the plan gate allowlists."""
     n = sum(r["_cnt"] for r in sizes)
-    if not n or n < n_blocks:
+    if n < N_BLOCKS:
         return
     share = max(r["_cnt"] for r in sizes) / n
     if share > BLOCK_SHARE_WARN:
@@ -237,43 +236,36 @@ def _warn_block_share(sizes, context: str, on_skew: str,
             f"scalewin {context}: largest value-range block holds "
             f"{share:.0%} of {n} rows (> {BLOCK_SHARE_WARN:.0%}) — "
             "blocking has degenerated toward a single partition. Use a "
-            "finer leading sort key, or pass a monotone spreading "
-            "transform via block_on (e.g. log1p for heavy-tailed keys)."
+            "finer leading sort key, or prepend a monotone proxy column "
+            "to the spec: [('_p', 'desc'), ('rev', 'desc'), ...] with "
+            "_p = log1p(rev) is the same total order (ties on _p fall to "
+            "rev)."
         )
-        if on_skew == "raise":
-            raise ValueError(msg)
         warnings.warn(msg, BlockSkewWarning, stacklevel=4)
 
 
 def with_global_row_numbers(
     df: DataFrame,
     specs: Mapping[str, OrderSpec],
-    n_blocks: int = N_BLOCKS,
-    block_on: Mapping[str, Column] | None = None,
     count_col: str | None = None,
-    on_skew: str = "warn",
 ) -> DataFrame:
     """df + one exact global ROW_NUMBER() column per spec, with no
     data-sized single-partition window. ``specs`` maps output column ->
     total-order spec; several ranks (e.g. RFM's three orderings) share
-    one checkpointed materialization of ``df``. ``block_on`` optionally
-    overrides the block proxy for a spec's leading key (must be a
-    monotone transform of it). ``count_col`` attaches the frame's total
-    row count (from the first spec's block sizes — no extra pass), the
-    ``n`` that `ntile_from_rank` needs. ``on_skew`` ("warn" | "raise" |
-    "ignore") controls the max-block-share degeneration signal."""
-    block_on = dict(block_on or {})
+    one checkpointed materialization of ``df``. ``count_col`` attaches
+    the frame's total row count (from the first spec's block sizes — no
+    extra pass), the ``n`` that `ntile_from_rank` needs. A dominant
+    block warns with `BlockSkewWarning`."""
     mins, maxs = [], []
     for out, spec in specs.items():
-        proxy = block_on.get(out, F.col(spec[0][0]))
-        block_on[out] = proxy
+        lead = F.col(spec[0][0])
         # NaN-EXCLUDED bounds: F.max over a double column returns NaN if
         # ANY value is NaN (Spark sorts NaN greatest), which would poison
         # the span and collapse every non-NaN row into block 0 — the
         # exact single-task shape this module exists to prevent. NaN
         # rows are routed to the top block explicitly by _block_expr,
         # so the bounds must come from the non-NaN values only.
-        clean = F.nanvl(proxy.cast("double"), F.lit(None).cast("double"))
+        clean = F.nanvl(lead.cast("double"), F.lit(None).cast("double"))
         mins.append(F.min(clean).alias(f"_mn_{out}"))
         maxs.append(F.max(clean).alias(f"_mx_{out}"))
     # checkpoint the INPUT once — every per-spec window and block-size
@@ -295,11 +287,11 @@ def with_global_row_numbers(
             mn = mx = 0
         d = d.withColumn(
             f"_blk_{out}",
-            _block_expr(block_on[out], F.lit(mn), F.lit(mx), n_blocks),
+            _block_expr(F.col(spec[0][0]), F.lit(mn), F.lit(mx)),
         )
     # block sizes for ALL specs in ONE collected job (explode to
     # (spec, block) pairs; map-side combine collapses each task's
-    # contribution to <= specs x (n_blocks+1) rows) — K specs cost one
+    # contribution to <= specs x (N_BLOCKS+1) rows) — K specs cost one
     # extra job, not K, and the same rows feed the skew observation
     pair_structs = [
         F.struct(F.lit(out).alias("_s"), F.col(f"_blk_{out}").alias("_b"))
@@ -325,8 +317,7 @@ def with_global_row_numbers(
         d = _stitch(d, blk, f"_lrn_{out}", F.count(F.lit(1)),
                     spec[0][1], out,
                     total_col=count_col if i == 0 else None,
-                    context=f"row_numbers[{out}]", on_skew=on_skew,
-                    n_blocks=n_blocks,
+                    context=f"row_numbers[{out}]",
                     sizes_rows=sizes_by_spec[out]).drop(blk)
     return d
 
@@ -336,9 +327,7 @@ def with_global_running_sum(
     order_by: OrderSpec,
     value_col: str,
     out: str,
-    n_blocks: int = N_BLOCKS,
     total_col: str | None = None,
-    on_skew: str = "warn",
 ) -> DataFrame:
     """df + exact global ``SUM(value) OVER (ORDER BY ... ROWS UNBOUNDED
     PRECEDING..CURRENT ROW)`` without a data-sized single-partition
@@ -349,8 +338,8 @@ def with_global_running_sum(
     running sum of non-nulls) via a per-block non-null count in the
     stitch. ``total_col`` attaches the grand total (free from the
     block sums; the cum/tot threshold comparisons read it instead of a
-    second aggregation pass). ``on_skew`` as in
-    `with_global_row_numbers`."""
+    second aggregation pass). A dominant block warns with
+    `BlockSkewWarning`, as in `with_global_row_numbers`."""
     from pyspark.sql import Observation
 
     lead, direction = order_by[0]
@@ -366,7 +355,7 @@ def with_global_running_sum(
     if mn is None:
         mn = mx = 0
     d = d.withColumn(
-        "_blk", _block_expr(F.col(lead), F.lit(mn), F.lit(mx), n_blocks)
+        "_blk", _block_expr(F.col(lead), F.lit(mn), F.lit(mx))
     )
     wloc = (
         Window.partitionBy("_blk")
@@ -377,8 +366,7 @@ def with_global_running_sum(
     return _stitch(d, "_blk", "_lcum", F.sum(value_col), direction,
                    out, total_col=total_col,
                    nonnull_count_agg=F.count(value_col),
-                   context=f"running_sum[{out}]", on_skew=on_skew,
-                   n_blocks=n_blocks).drop("_blk")
+                   context=f"running_sum[{out}]").drop("_blk")
 
 
 def ntile_from_rank(rank: Column, n: Column, k: int) -> Column:

@@ -52,30 +52,32 @@ def bounded_broadcast(df: DataFrame, kind: str) -> DataFrame:
     return F.broadcast(df)
 
 
-# Driver-memory cap of bounded_collect in estimated bytes: the schema's
-# Catalyst row width (StructType.defaultSize — fixed-width types at their
-# size, 20 B per string, an array or map at ONE element) times the rows.
+# Driver-memory caps of bounded_collect, read at call time (tests patch
+# them): rows, and estimated bytes — the schema's Catalyst row width
+# (StructType.defaultSize — fixed-width types at their size, 20 B per
+# string, an array or map at ONE element) times the rows.
+MAX_COLLECT_ROWS = 2_000_000
 MAX_COLLECT_BYTES = 1 << 30
 
 
-def bounded_collect(df: DataFrame, kind: str, max_rows: int = 2_000_000,
-                    hint: str = "") -> list:
+def bounded_collect(df: DataFrame, kind: str, hint: str = "") -> list:
     """The ONLY sanctioned way to ``collect()`` an UNBOUNDED-shaped frame
     to the driver inside an operator/query path — the collect analogue of
     ``bounded_broadcast`` (same ``kind`` vocabulary, same audit intent:
     a driver collect of a side that grows with the data is a guaranteed
     driver OOM at the 100 TB design point).
 
-    ``max_rows`` enforces the bound at runtime: the collect itself is
-    capped via ``limit(max_rows + 1)`` so the driver NEVER materializes
-    more than the cap even on a runaway input, and exceeding it raises
+    ``MAX_COLLECT_ROWS`` enforces the bound at runtime: the collect
+    itself is capped via ``limit(MAX_COLLECT_ROWS + 1)`` so the driver
+    NEVER materializes more than the cap even on a runaway input, and
+    exceeding it raises
     with ``hint`` naming the scale-safe alternative (e.g. the
     ``exact=False`` LSH path for the exact cosine baseline). Under the
     cap ``limit`` returns every row, so callers see the full result.
     ``MAX_COLLECT_BYTES`` tightens the row cap the same way for wide
     rows: at most ``MAX_COLLECT_BYTES // row width`` rows come back.
     Collects that are already bounded by construction (``.limit(k)``,
-    a ≤n_blocks aggregate, an explicit size gate) stay raw — the
+    a ≤N_BLOCKS aggregate, an explicit size gate) stay raw — the
     plan-quality source gate pins their exact census.
     """
     if kind not in _BOUNDED_KINDS:
@@ -84,11 +86,11 @@ def bounded_collect(df: DataFrame, kind: str, max_rows: int = 2_000_000,
             f"{sorted(_BOUNDED_KINDS)}; got {kind!r}"
         )
     width = max(df._jdf.schema().defaultSize(), 1)
-    cap = min(max_rows, MAX_COLLECT_BYTES // width)
+    cap = min(MAX_COLLECT_ROWS, MAX_COLLECT_BYTES // width)
     rows = df.limit(cap + 1).collect()
     if len(rows) > cap:
         bound = (
-            f"{max_rows} rows" if cap == max_rows
+            f"{MAX_COLLECT_ROWS} rows" if cap == MAX_COLLECT_ROWS
             else f"{MAX_COLLECT_BYTES} estimated bytes ({width} B/row)"
         )
         raise ValueError(

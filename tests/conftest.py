@@ -13,6 +13,14 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    # every run ends with its ten slowest tests, so the suite's time
+    # budget is visible without a rerun; --durations on the command line
+    # still decides
+    if config.option.durations is None:
+        config.option.durations = 10
+
+
 @pytest.fixture(scope="session")
 def spark():
     import tempfile

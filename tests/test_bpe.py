@@ -6,8 +6,7 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-from pyspark.sql import functions as F
-
+from shuttlestandalonedbcreator_spark.operators import bpe
 from shuttlestandalonedbcreator_spark.operators.bpe import (
     EOW,
     encode_bpe,
@@ -54,7 +53,7 @@ def _ref_bpe(texts: list[str], n_merges: int, min_freq: int = 2):
     return merges
 
 
-def test_bpe_training_matches_reference(spark):
+def test_bpe_training_matches_reference(spark, monkeypatch):
     texts = [
         "the cat sat on the mat",
         "the cats sat on the mats",
@@ -66,9 +65,8 @@ def test_bpe_training_matches_reference(spark):
     )
     want = _ref_bpe(texts, n_merges=15, min_freq=2)
     fast = train_bpe_merges(docs, "text", n_merges=15, min_freq=2)  # driver path
-    slow = train_bpe_merges(
-        docs, "text", n_merges=15, min_freq=2, driver_threshold=0
-    )  # forced distributed rounds
+    monkeypatch.setattr(bpe, "DRIVER_WORDS", 0)
+    slow = train_bpe_merges(docs, "text", n_merges=15, min_freq=2)  # distributed
     assert fast == want and slow == want and len(want) > 5
 
 
@@ -127,61 +125,3 @@ def test_bpe_encode_preserves_string_id_type(spark):
     assert enc.schema["doc_id"].dataType.simpleString() == "string"
     got = {r["doc_id"] for r in enc.collect()}
     assert got == {"doc-a", "doc-b"}
-
-
-def test_bpe_batched_paths_agree_and_cut_rounds(spark, monkeypatch):
-    """batch_size>1: driver and distributed paths select identically
-    (same disjoint top-K from the same candidate horizon), the
-    distributed loop runs ~batch_size× fewer rounds (= Spark jobs), and
-    batch_size=1 output is byte-identical to the sequential reference."""
-    import shuttlestandalonedbcreator_spark.operators.bpe as bpe_mod
-
-    texts = [
-        "the cat sat on the mat",
-        "the cats sat on the mats",
-        "low lower lowest new newer newest",
-        "the low cat the new mat",
-        "newest lowest mats cats sat sat",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-
-    rounds = {"n": 0}
-    orig = bpe_mod._select_batch
-
-    def counting(ranked, k, min_freq):
-        rounds["n"] += 1
-        return orig(ranked, k, min_freq)
-
-    monkeypatch.setattr(bpe_mod, "_select_batch", counting)
-
-    batched_driver = train_bpe_merges(
-        docs, "text", n_merges=24, min_freq=2, batch_size=8
-    )
-    driver_rounds = rounds["n"]
-    rounds["n"] = 0
-    batched_dist = train_bpe_merges(
-        docs, "text", n_merges=24, min_freq=2, batch_size=8,
-        driver_threshold=0,
-    )
-    dist_rounds = rounds["n"]
-
-    assert batched_driver == batched_dist, "paths must select identically"
-    assert len(batched_driver) > 8
-    # ~batch_size× fewer counting rounds than merges learned
-    assert dist_rounds <= len(batched_dist) // 4
-    assert driver_rounds <= len(batched_driver) // 4
-
-    # batching changes the merge TRAJECTORY (deferred newly-created
-    # pairs), so assert the semantic contract instead of set equality:
-    # same-budget batched merges compress the corpus essentially as well
-    # as sequential ones (within 10%)
-    seq = train_bpe_merges(docs, "text", n_merges=24, min_freq=2)
-    n_seq = encode_bpe(docs, seq, "text", "doc_id").agg(
-        F.sum("n_tokens")
-    ).collect()[0][0]
-    n_bat = encode_bpe(docs, batched_driver, "text", "doc_id").agg(
-        F.sum("n_tokens")
-    ).collect()[0][0]
-    assert n_bat <= n_seq * 1.10, (n_bat, n_seq)

@@ -69,6 +69,7 @@ SF, TMP = {sf!r}, os.getcwd()
 import pandas as pd
 
 from shuttlestandalonedbcreator_spark.functions.udtf_pii import register_pii_udtf
+from shuttlestandalonedbcreator_spark.operators import bpe as bpe_module
 from shuttlestandalonedbcreator_spark.operators.bpe import encode_bpe, train_bpe_merges
 from shuttlestandalonedbcreator_spark.queries import CATALOG
 from shuttlestandalonedbcreator_spark.session import get_spark
@@ -131,7 +132,8 @@ def bpe():
         [(i, "low lower lowest newer wider") for i in range(8)],
         "doc_id long, text string",
     )
-    merges = train_bpe_merges(docs, "text", n_merges=4, min_freq=2, driver_threshold=0)
+    bpe_module.DRIVER_WORDS = 0  # the distributed rounds run on workers
+    merges = train_bpe_merges(docs, "text", n_merges=4, min_freq=2)
     return len(encode_bpe(docs, merges).collect())
 
 

@@ -8,41 +8,50 @@ from pyspark.sql import functions as F
 
 from shuttlestandalonedbcreator_spark.functions import text as T
 from shuttlestandalonedbcreator_spark.operators import dedup as D
+from shuttlestandalonedbcreator_spark.operators import graph
 from shuttlestandalonedbcreator_spark.operators.graph import (
     cluster_keep_list,
     connected_components,
 )
 
 
+@pytest.fixture
+def propagation(monkeypatch):
+    """A zero driver gate sends every graph past the union-find into the
+    distributed label propagation."""
+    monkeypatch.setattr(graph, "DRIVER_EDGES", 0)
+
+
 def _components(spark, edges):
     df = spark.createDataFrame(edges, "a long, b long")
     return {
         r["id"]: r["component"]
-        for r in connected_components(df, "a", "b", checkpoint=False).collect()
+        for r in connected_components(df, "a", "b").collect()
     }
 
 
-def test_components_two_clusters(spark):
+def test_components_two_clusters(spark, propagation):
     got = _components(spark, [(1, 2), (2, 3), (10, 11)])
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_components_chain_needs_propagation(spark):
+def test_components_chain_needs_propagation(spark, propagation):
     # a path graph is the worst case for label propagation (diameter = n);
     # 8 nodes converges well inside the default round budget
     got = _components(spark, [(i, i + 1) for i in range(1, 8)])
     assert set(got.values()) == {1} and len(got) == 8
 
 
-def test_components_cycle_terminates(spark):
+def test_components_cycle_terminates(spark, propagation):
     got = _components(spark, [(1, 2), (2, 3), (3, 1)])
     assert got == {1: 1, 2: 1, 3: 1}
 
 
-def test_components_nonconvergence_raises(spark):
+def test_components_nonconvergence_raises(spark, propagation, monkeypatch):
+    monkeypatch.setattr(graph, "MAX_ROUNDS", 2)
     df = spark.createDataFrame([(i, i + 1) for i in range(1, 30)], "a long, b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, "a", "b", max_iterations=2, checkpoint=False)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(df, "a", "b")
 
 
 def test_cluster_keep_list_isolated_docs_keep_themselves(spark):
@@ -88,7 +97,7 @@ def test_repetition_metrics(spark):
     assert got[3] == (0.0, 0.0)  # empty gram arrays → 0, not NULL
 
 
-def test_driver_union_find_equals_distributed_propagation(spark):
+def test_driver_union_find_equals_distributed_propagation(spark, monkeypatch):
     """The size-gated driver union-find and the distributed label
     propagation must produce identical (id, component) labelings on a
     random graph with chains, triangles, stars, and isolated pairs."""
@@ -105,10 +114,9 @@ def test_driver_union_find_equals_distributed_propagation(spark):
         (r["id"], r["component"])
         for r in connected_components(df, "a", "b").collect()  # driver path
     }
+    monkeypatch.setattr(graph, "DRIVER_EDGES", 0)
     slow = {
         (r["id"], r["component"])
-        for r in connected_components(
-            df, "a", "b", driver_threshold=0
-        ).collect()  # forced distributed propagation
+        for r in connected_components(df, "a", "b").collect()  # distributed
     }
     assert fast == slow and len(fast) > 0

@@ -606,12 +606,12 @@ def test_no_unguarded_driver_collects_in_operator_modules():
     until it is routed or justified here.
 
     Census of the by-construction-bounded sites:
-    - operators/scalewin.py x2 — ≤ n_blocks+1 (≤1025) aggregate rows per
+    - operators/scalewin.py x2 — ≤ N_BLOCKS+1 (≤1025) aggregate rows per
       spec, the documented stitch contract;
     - operators/bpe.py x2 — one behind the ``vocab.count() <=
-      driver_threshold`` size gate, one behind ``.limit(max(4*k, 8))``;
-    - operators/graph.py x1 — ``_driver_union_find`` runs only under the
-      caller's size gate over a materialized edge count;
+      DRIVER_WORDS`` size gate, one behind ``.limit(1)``;
+    - operators/graph.py x1 — the edge list behind
+      ``.limit(DRIVER_EDGES + 1)``, which is also the size gate;
     - queries.py x1 — token_id_encode's vocab behind ``.limit(100)``.
     """
     import pathlib
@@ -757,20 +757,22 @@ def test_cache_and_persist_census():
     )
 
 
-def test_bounded_collect_contract(spark):
+def test_bounded_collect_contract(spark, monkeypatch):
     """bounded_collect returns every row under the cap, never
-    materializes more than max_rows+1, and raises with the caller's
-    scale-pointer hint when the side exceeds the cap."""
+    materializes more than MAX_COLLECT_ROWS+1, and raises with the
+    caller's scale-pointer hint when the side exceeds the cap."""
+    from shuttlestandalonedbcreator_spark.operators import util
     from shuttlestandalonedbcreator_spark.operators.util import bounded_collect
 
     df = spark.range(10)
-    rows = bounded_collect(df, "one_row", max_rows=100)
+    monkeypatch.setattr(util, "MAX_COLLECT_ROWS", 100)
+    rows = bounded_collect(df, "one_row")
     assert sorted(r["id"] for r in rows) == list(range(10))
     import pytest as _pytest
 
+    monkeypatch.setattr(util, "MAX_COLLECT_ROWS", 5)
     with _pytest.raises(ValueError, match="exceeded 5 rows.*use the LSH path"):
-        bounded_collect(df, "caller_contract", max_rows=5,
-                        hint="use the LSH path")
+        bounded_collect(df, "caller_contract", hint="use the LSH path")
     with _pytest.raises(ValueError, match="justification"):
         bounded_collect(df, "because_i_said_so")
 
@@ -790,6 +792,27 @@ def test_bounded_collect_byte_cap(spark, monkeypatch):
     assert len(util.bounded_collect(wide.limit(5), "one_row")) == 5
     with _pytest.raises(ValueError, match="exceeded 4000 estimated bytes"):
         util.bounded_collect(wide, "one_row", hint="shard it")
+
+
+def test_operator_caps_are_module_constants_not_parameters():
+    """The graph, BPE, scalewin and bounded_collect caps are module
+    constants that tests patch, not keyword parameters: the public
+    signatures carry only what a caller means."""
+    import inspect
+
+    from shuttlestandalonedbcreator_spark.operators import bpe, graph, scalewin, util
+
+    want = {
+        graph.connected_components: ["edges", "src", "dst"],
+        bpe.train_bpe_merges: ["docs", "text_col", "n_merges", "min_freq"],
+        scalewin.with_global_row_numbers: ["df", "specs", "count_col"],
+        scalewin.with_global_running_sum: [
+            "df", "order_by", "value_col", "out", "total_col"
+        ],
+        util.bounded_collect: ["df", "kind", "hint"],
+    }
+    got = {f: list(inspect.signature(f).parameters) for f in want}
+    assert got == want
 
 
 def test_no_scratch_files_at_repo_root():

@@ -99,7 +99,9 @@ def test_sanitize_matches_java_semantics(s):
 def test_connected_components_matches_union_find(spark, edges):
     """Random graphs vs an independent pure-Python union-find: every node's
     component label must be the minimum id reachable from it."""
-    from shuttlestandalonedbcreator_spark.operators.graph import connected_components
+    from unittest import mock
+
+    from shuttlestandalonedbcreator_spark.operators import graph
 
     parent: dict[int, int] = {}
 
@@ -118,11 +120,14 @@ def test_connected_components_matches_union_find(spark, edges):
         roots[r] = min(roots.get(r, n), n)
     expect = {n: roots[find(n)] for n in nodes}
 
+    # the distributed propagation; Hypothesis rejects function-scoped
+    # fixtures, so the driver gate is patched without monkeypatch
     df = spark.createDataFrame(edges, "a long, b long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(df, "a", "b", checkpoint=False).collect()
-    }
+    with mock.patch.object(graph, "DRIVER_EDGES", 0):
+        got = {
+            r["id"]: r["component"]
+            for r in graph.connected_components(df, "a", "b").collect()
+        }
     assert got == expect
 
 

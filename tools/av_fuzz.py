@@ -41,6 +41,7 @@ def audio_case(spark, con, sf_dir, rng):
     """One random audio-fingerprint parameterization, both engines."""
     from pyspark.sql import functions as F
 
+    from shuttlestandalonedbcreator_spark.operators import dedup as D
     from shuttlestandalonedbcreator_spark.queries import _image_idiv, _t
     from shuttlestandalonedbcreator_spark.streaming import audiocodec as AC
 
@@ -150,9 +151,8 @@ def audio_case(spark, con, sf_dir, rng):
         for r in cand.join(ha, "id_a").join(hb, "id_b")
         .select(
             "id_a", "id_b",
-            (F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-             + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b"))))
-            .cast("int").alias("hamming"),
+            (D.hamming64(F.col("hi_a"), F.col("hi_b"))
+             + D.hamming64(F.col("lo_a"), F.col("lo_b"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= ham)
         .collect()
@@ -343,6 +343,7 @@ def image_case(spark, con, sf_dir, rng):
     DuckDB recomputing everything from the pixel formula."""
     from pyspark.sql import functions as F
 
+    from shuttlestandalonedbcreator_spark.operators import dedup as D
     from shuttlestandalonedbcreator_spark.queries import _image_px, _t
     from shuttlestandalonedbcreator_spark.streaming import imagecodec as IC
 
@@ -439,9 +440,8 @@ def image_case(spark, con, sf_dir, rng):
         for r in cand.join(ha, "id_a").join(hb, "id_b")
         .select(
             "id_a", "id_b",
-            (F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-             + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b"))))
-            .cast("int").alias("hamming"),
+            (D.hamming64(F.col("hi_a"), F.col("hi_b"))
+             + D.hamming64(F.col("lo_a"), F.col("lo_b"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= ham)
         .collect()

@@ -10,7 +10,8 @@ could not reach (it is SQL-only; scalewin is a Python-side operator):
 - NaN injection into floating leading keys,
 - DECIMAL(38) and int64-extreme (+-2^62) leading keys,
 - single-row / tiny / all-equal frames,
-- every (direction, n_blocks in {4, 16, 64, 1024}) combination.
+- every (direction, N_BLOCKS in {4, 16, 64, 1024}) combination, set on
+  the module per seed.
 
 Usage: python tools/scalewin_fuzz.py [sf_dir] [n_seeds] [seed_base]
 
@@ -26,6 +27,7 @@ import random
 import sys
 import time
 import warnings
+from unittest import mock
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -40,28 +42,27 @@ TABLES_COLS = {
 
 
 def _lead_expr(rng: random.Random, F, idc: str, intc: str, dblc: str):
-    """A leading-key column expression from the hazard pool. Returns
-    (expr, needs_block_on_proxy_or_None)."""
+    """A leading-key column expression from the hazard pool."""
     kind = rng.choice(
         ["int", "tie_heavy", "const", "null_heavy", "double", "nan_double",
          "decimal", "int64_extreme", "negated", "md5_int"]
     )
     if kind == "int":
-        return F.col(intc), None
+        return F.col(intc)
     if kind == "tie_heavy":
-        return F.col(idc) % rng.choice([2, 3, 5]), None
+        return F.col(idc) % rng.choice([2, 3, 5])
     if kind == "const":
-        return F.lit(rng.randrange(100)) + F.col(idc) * 0, None
+        return F.lit(rng.randrange(100)) + F.col(idc) * 0
     if kind == "null_heavy":
         k = rng.choice([2, 3, 4])
-        return F.nullif(F.col(idc) % k, F.lit(0)), None
+        return F.nullif(F.col(idc) % k, F.lit(0))
     if kind == "double":
-        return F.col(dblc) * rng.choice([1.0, -1.0, 1.0007]), None
+        return F.col(dblc) * rng.choice([1.0, -1.0, 1.0007])
     if kind == "nan_double":
         k = rng.choice([3, 7, 10])
         return F.when(
             F.col(idc) % k == 0, F.lit(float("nan"))
-        ).otherwise(F.col(dblc)), None
+        ).otherwise(F.col(dblc))
     if kind == "decimal":
         # multiply by a DECIMAL literal: `** k` lowers to F.pow (DOUBLE)
         # and decimal*double is implicitly cast back to double, which
@@ -69,19 +70,19 @@ def _lead_expr(rng: random.Random, F, idc: str, intc: str, dblc: str):
         k = rng.choice([0, 5, 15])
         key = (F.col(dblc).cast("decimal(38,10)")
                * F.lit(10 ** k).cast("decimal(38,0)"))
-        return key, None
+        return key
     if kind == "int64_extreme":
         sign = rng.choice([1, -1])
         return (F.col(idc) % 2 * 2 - 1) * (
             F.col(idc).cast("long") * F.lit(2**40) * sign
-        ), None
+        )
     if kind == "negated":
-        return -F.col(intc), None
+        return -F.col(intc)
     # md5_int: hash-spread key (~2^32 values — genuinely uniform, no
     # ties; F.ascii would read only the FIRST hex char = 16 atoms)
     return F.conv(
         F.substring(F.md5(F.col(idc).cast("string")), 1, 8), 16, 10
-    ).cast("long"), None
+    ).cast("long")
 
 
 def run_seed(spark, seed: int) -> list[str]:
@@ -105,7 +106,7 @@ def run_seed(spark, seed: int) -> list[str]:
     elif frac == "one":
         base = base.filter(F.col(idc) == base.agg(F.min(idc)).collect()[0][0])
 
-    lead, _ = _lead_expr(rng, F, idc, intc, dblc)
+    lead = _lead_expr(rng, F, idc, intc, dblc)
     direction = rng.choice(["asc", "desc"])
     n_blocks = rng.choice([4, 16, 64, 1024])
     df = base.select(
@@ -126,10 +127,10 @@ def run_seed(spark, seed: int) -> list[str]:
             problems.append(f"{tag} diverged (table={table} lead kind seed={seed})")
 
     op = rng.choice(["rank", "rank", "sum", "ntile"])
-    with warnings.catch_warnings():
+    with warnings.catch_warnings(), mock.patch.object(SW, "N_BLOCKS", n_blocks):
         warnings.simplefilter("ignore")  # skew warnings are the point here
         if op == "rank":
-            got = SW.with_global_row_numbers(df, {"rn": spec}, n_blocks=n_blocks)
+            got = SW.with_global_row_numbers(df, {"rn": spec})
             exp = df.withColumn(
                 "rn", F.row_number().over(Window.orderBy(*order)).cast("long")
             )
@@ -142,7 +143,7 @@ def run_seed(spark, seed: int) -> list[str]:
                 else F.col("x")
             )
             d2 = df.withColumn("v", val.cast("long"))
-            got = SW.with_global_running_sum(d2, spec, "v", "cum", n_blocks=n_blocks)
+            got = SW.with_global_running_sum(d2, spec, "v", "cum")
             w = Window.orderBy(*order).rowsBetween(
                 Window.unboundedPreceding, Window.currentRow
             )
@@ -151,7 +152,7 @@ def run_seed(spark, seed: int) -> list[str]:
         else:
             k = rng.choice([2, 3, 7, 10, 100])
             got = SW.with_global_row_numbers(
-                df, {"r": spec}, n_blocks=n_blocks, count_col="n"
+                df, {"r": spec}, count_col="n"
             ).select(
                 "id", SW.ntile_from_rank(F.col("r"), F.col("n"), k).alias("t")
             )
