@@ -244,8 +244,8 @@ def merge_probe(spark, sf_dir: str) -> dict[str, float]:
 
 
 def scale_probes(spark, sf_dir: str) -> dict[str, float]:
-    """Measured (not asserted) ratios for the two operators whose 100 TB
-    story differs most from their small-SF behavior:
+    """Measured (not asserted) ratios for the four operator groups whose
+    100 TB story differs most from their small-SF behavior:
 
     - BLAS rerank: exact cosine top-k for a 500-query probe set via
       Arrow-batch matmul (`matmul_topk`) vs the per-pair HOF fold
@@ -256,6 +256,11 @@ def scale_probes(spark, sf_dir: str) -> dict[str, float]:
       batch joined against it (`incremental_neardup_pairs`) vs a full
       corpus re-compare (`minhash_lsh_pairs`) — the growing-corpus path
       where the index means ingest cost stays O(batch), not O(corpus).
+    - Heavy-hitter pre-pass: the Misra-Gries candidate set
+      (`frequent_items_exact`) vs the naive per-item groupBy on a
+      synthetic heavy-tail stream, as exchange cardinalities.
+    - Record-linkage blocking: candidate pairs through the equality
+      blocks vs the all-pairs cross product they avoid.
 
     Results land in BENCH_DETAIL.json under "scale_probes"; SCALING.md
     quotes the measured ratios.
@@ -381,61 +386,6 @@ def scale_probes(spark, sf_dir: str) -> dict[str, float]:
         probes["linkage_all_pairs"] / max(cand, 1), 1
     )
 
-    # prefix-filter Jaccard join: candidate-pair cardinality through the
-    # df-ordered prefix postings vs the FULL posting-list join the plain
-    # inverted-index strategy would expand (Σ df·(df−1)/2) — the AllPairs
-    # pruning claim as a measured count, matching prefix_filter_jaccard's
-    # construction exactly (t = 0.6, docs with ≥5 distinct shingles)
-    from pyspark.sql import Window as _W
-
-    from shuttlestandalonedbcreator_spark.queries import PFJ_MIN_GRAMS
-
-    grams = (
-        docs.select(
-            F.col("doc_id"), F.explode(D.word_ngrams(F.col("text"), 3)).alias("g")
-        )
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("g"), 1, 15), 16, 10)
-            .cast("long")
-            .alias("hh"),
-        )
-        .distinct()
-    )
-    sz = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).filter(
-        F.col("n") >= PFJ_MIN_GRAMS
-    )
-    eligible = grams.join(sz, "doc_id")
-    full_pairs = (
-        eligible.groupBy("hh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.sum(F.expr("df * (df - 1) div 2")).alias("p"))
-        .collect()[0]["p"]
-    )
-    ranked = eligible.join(
-        eligible.groupBy("hh").agg(F.count(F.lit(1)).alias("df")), "hh"
-    ).withColumn(
-        "rk",
-        F.row_number().over(
-            _W.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("hh").asc())
-        ),
-    )
-    pre = ranked.filter(
-        F.col("rk") <= F.col("n") - F.expr("(3 * n + 4) div 5") + F.lit(1)
-    )
-    prefix_pairs = (
-        pre.groupBy("hh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.sum(F.expr("df * (df - 1) div 2")).alias("p"))
-        .collect()[0]["p"]
-    )
-    probes["pfj_full_posting_pairs"] = float(full_pairs or 0)
-    probes["pfj_prefix_posting_pairs"] = float(prefix_pairs or 0)
-    probes["pfj_candidate_reduction"] = round(
-        probes["pfj_full_posting_pairs"]
-        / max(probes["pfj_prefix_posting_pairs"], 1.0),
-        1,
-    )
     return probes
 
 

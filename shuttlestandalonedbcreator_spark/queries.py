@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
+from fractions import Fraction
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -11165,158 +11166,28 @@ PFJ_MIN_GRAMS = 5
 
 
 def q_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaccard >= 0.6 similarity self-join via PREFIX FILTERING (the
-    AllPairs/PPJoin family; Bayardo et al., WWW'07) — the third exact
-    near-dup strategy next to the full posting-list join
-    (ngram_jaccard_dedup) and approximate MinHash-LSH: order each doc's
-    shingles by ascending global document frequency, keep only the first
-    n - ceil(t*n) + 1 ("prefix"); any pair with Jaccard >= t MUST share
-    a prefix shingle, so candidates come from the prefix postings alone
-    and are then verified exactly.
+    """Jaccard >= 0.6 similarity self-join via PREFIX FILTERING
+    (``dedup.prefix_filter_pairs``, AllPairs/PPJoin) over word-trigram
+    hash sets — the third exact near-dup strategy next to the full
+    posting-list join (ngram_jaccard_dedup) and approximate MinHash-LSH.
+    Oracle is the straight all-pairs join, so the pruning is PROVEN
+    lossless at every SF, not assumed.
 
-    Scale: the prefix postings are a small, rare-shingle-biased slice of
-    the full inverted index — hot boilerplate shingles (the quadratic
-    hazard of plain posting-list joins) sort LAST by df and rarely enter
-    any prefix, so candidate blow-up is structurally damped. Threshold
-    compare is integer cross-multiplied (5*inter >= 3*union) — no float
-    boundary. Verification joins the candidates back to per-doc sorted
-    shingle-hash arrays (array_intersect, exact int counts). Oracle is
-    the straight all-pairs join, so the pruning is PROVEN lossless at
-    every SF, not assumed. The distinct shingle frame is eagerly
-    checkpointed — four consumers (sizes, df table, prefix ranking,
-    verify sets) would each re-run the shingle pipeline otherwise.
-
-    r10 optimization (guide §2.3/§2.4 + §4.1): shingles are 64-bit
-    xxhash64 keys computed straight from the token columns
-    (word_ngram_hashes — no gram strings, no md5; the hash never reaches
-    the output, and prefix filtering is lossless under ANY consistent
-    shingle total order, so (df, hh) stays a valid order with the new
-    hash family). The per-doc gram ARRAY is the checkpointed base: doc
-    sizes ride along as size(_arr) instead of a groupBy, the verify sets
-    are the arrays themselves instead of a collect_list re-aggregation,
-    and the old explode+distinct exchange disappears (the arrays are
-    distinct by construction). Docs below PFJ_MIN_GRAMS are dropped
-    before everything — they can never appear in the output, and
-    pruning them up front shrinks every downstream frame."""
+    Shingles are 64-bit xxhash64 keys computed straight from the token
+    columns (word_ngram_hashes — no gram strings; the hash never reaches
+    the output), distinct by construction, so the per-doc array is the
+    kernel's set column as is. Docs below PFJ_MIN_GRAMS are dropped
+    before the kernel — they can never appear in the output, and pruning
+    them up front shrinks every downstream frame."""
     from shuttlestandalonedbcreator_spark.operators.util import fan_out
 
     # fan_out first (r10, guide §2.2): the single-split toy parquet would
     # otherwise run the whole shingle-hash pass on one core
     docs = fan_out(_t(spark, sf_dir, "documents"))
-    base = (
-        docs.select(
-            "doc_id", D.word_ngram_hashes(F.col("text"), 3).alias("_arr")
-        )
-        .withColumn("n", F.size("_arr").cast("long"))
-        .filter(F.col("n") >= PFJ_MIN_GRAMS)
-    )
-    base = base.localCheckpoint(eager=True)
-    grams = base.select("doc_id", "n", F.explode("_arr").alias("hh"))
-    df_tbl = grams.groupBy("hh").agg(F.count(F.lit(1)).alias("df"))
-    wrk = Window.partitionBy("doc_id").orderBy(
-        F.col("df").asc(), F.col("hh").asc()
-    )
-    ranked = grams.join(df_tbl, "hh").withColumn(
-        "rk", F.row_number().over(wrk)
-    )
-    pre = (
-        # prefix length = n - ceil(0.6*n) + 1; ceil(3n/5) = (3n+4) div 5
-        ranked.filter(
-            F.col("rk") <= F.col("n") - F.expr("(3 * n + 4) div 5") + F.lit(1)
-        )
-        .select("doc_id", "n", "hh", "rk")
-    )
-    plists = pre.groupBy("hh").agg(
-        F.array_sort(F.collect_set(F.struct("doc_id", "n", "rk"))).alias("ids")
-    )
-    # r10 introduced the PPJoin POSITIONAL filter (guide §2.3; Xiao et
-    # al., WWW'08) at each pair's first co-occurrence: inter ≤ 1 +
-    # min(na − rka, nb − rkb) there. r11 tightens it to the ACCUMULATED
-    # positional bound over ALL co-occurrences (the per-pair analogue of
-    # PPJoin's running-overlap prune, taken instead of the recursive
-    # suffix filter, which would need whole gram arrays inside the
-    # posting lists — a shuffle-byte regression at scale). Derivation:
-    # both docs' gram lists are ranked by the SAME global (df, hh) order,
-    # so (a) any common shingle ordered before a shingle that sits in
-    # both prefixes also sits in both prefixes (its positions are
-    # strictly smaller on both sides) — hence the c co-occurrences of a
-    # pair are EXACTLY its common shingles up to the last co-occurrence,
-    # and (b) the co-occurrence maximizing rka also maximizes rkb. Common
-    # shingles after the last co-occurrence number at most
-    # min(na − rka_max, nb − rkb_max), so
-    #     inter ≤ c + min(na − rka_max, nb − rkb_max)
-    # and the verify condition 5·inter ≥ 3·(na+nb−inter) ⇔ 8·inter ≥
-    # 3·(na+nb) is increasing in inter — a verifying pair always passes:
-    # lossless. Writing bound_k = k + min(na − rka_k, nb − rkb_k) for the
-    # k-th co-occurrence, rk grows by ≥1 per step so bound_k is
-    # non-increasing in k: the aggregated bound (k = c) is the TIGHTEST,
-    # strictly subsuming r10's first-occurrence form. Mechanically the
-    # per-pair aggregation replaces the r10 distinct — the SAME single
-    # (id_a, id_b)-keyed exchange, map-side partial agg collapsing
-    # duplicate co-occurrences exactly where distinct did — and the
-    # in-expansion filter keeps only the PAIR-CONSTANT size test
-    # 8·min(n) ≥ 3·(na+nb) (an occurrence-dependent pre-filter would
-    # corrupt c; the size test drops all of a hopeless pair's
-    # occurrences or none). Measured at sf0.1: 193,134 candidates under
-    # the size test → 68,704 under the r10 first-occurrence bound →
-    # 66,352 under the accumulated bound; the candidate volume is what
-    # the verify join re-attaches full gram arrays to, so it is the
-    # quantity that survives at 100 TB.
-    occ = plists.select(
-        ordered_pairs(
-            F.col("ids"),
-            lambda x, y: F.struct(
-                x["doc_id"].alias("id_a"), y["doc_id"].alias("id_b"),
-                x["n"].alias("nx"), y["n"].alias("ny"),
-                x["rk"].alias("rkx"), y["rk"].alias("rky"),
-            ),
-            lambda p: F.lit(8) * F.least(p["nx"], p["ny"])
-            >= F.lit(3) * (p["nx"] + p["ny"]),
-        ).alias("p")
-    ).select("p.*")
-    pairs = (
-        occ.groupBy("id_a", "id_b", "nx", "ny")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.max("rkx").alias("rkx_max"),
-            F.max("rky").alias("rky_max"),
-        )
-        .filter(
-            F.lit(8)
-            * (
-                F.col("c")
-                + F.least(
-                    F.col("nx") - F.col("rkx_max"),
-                    F.col("ny") - F.col("rky_max"),
-                )
-            )
-            >= F.lit(3) * (F.col("nx") + F.col("ny"))
-        )
-        .select("id_a", "id_b")
-    )
-    sa = base.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("_arr").alias("sa"),
-        F.col("n").alias("na"),
-    )
-    sb = base.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("_arr").alias("sb"),
-        F.col("n").alias("nb"),
-    )
-    v = (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "inter_cnt",
-            F.size(F.array_intersect("sa", "sb")).cast("long"),
-        )
-        .withColumn(
-            "union_cnt", F.col("na") + F.col("nb") - F.col("inter_cnt")
-        )
-        .filter(F.lit(5) * F.col("inter_cnt") >= F.lit(3) * F.col("union_cnt"))
-    )
-    return v.select("id_a", "id_b", "inter_cnt", "union_cnt")
+    sets = docs.select(
+        "doc_id", D.word_ngram_hashes(F.col("text"), 3).alias("grams")
+    ).filter(F.size("grams") >= PFJ_MIN_GRAMS)
+    return D.prefix_filter_pairs(sets, "doc_id", "grams", Fraction(3, 5))
 
 
 SQL_PREFIX_FILTER_JACCARD = f"""

@@ -717,6 +717,36 @@ def test_no_hand_written_pair_expansions():
     )
 
 
+def test_one_prefix_filter_implementation():
+    """The df-ordered prefix filter lives only in
+    ``operators.dedup.prefix_filter_pairs``. Source-level gate over the
+    package, ``tools/`` and ``bench.py``: the df-ascending prefix rank
+    (``orderBy(F.col("df")``) and the prefix-length ``(num * n + den - 1)
+    div den`` SQL may appear ONLY in ``operators/dedup.py``."""
+    import pathlib
+    import re
+
+    import shuttlestandalonedbcreator_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    kernel = root / "operators" / "dedup.py"
+    files = [
+        *root.rglob("*.py"),
+        *(root.parent / "tools").glob("*.py"),
+        root.parent / "bench.py",
+    ]
+    rank = re.compile(r'orderBy\(\s*F\.col\("df"\)')
+    prefix_len = re.compile(r"\*\s*n\s*\+[^)]*\)\s*div\b", re.IGNORECASE)
+    assert _kernel_copies([kernel], root.parent, rank, prefix_len), "kernel moved"
+    offenders = _kernel_copies(
+        [py for py in files if py != kernel], root.parent, rank, prefix_len
+    )
+    assert not offenders, (
+        "prefix-filter copies found (use operators.dedup.prefix_filter_pairs):\n"
+        + "\n".join(offenders)
+    )
+
+
 def test_minhash_lsh_dedup_is_one_posting_list_pipeline(spark, sf_small):
     """MinHash-LSH pairs come from ONE (band, bucket)-keyed exchange into
     signature-carrying posting lists: no self-join of the banded

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from fractions import Fraction
 
 import pytest
 from pyspark.sql import Window
@@ -35,14 +36,24 @@ from shuttlestandalonedbcreator_spark.queries import (
 )
 
 
-def test_prefix_filter_is_lossless_vs_brute_force(spark, sf_small):
+@pytest.mark.parametrize(
+    "n,threshold,floor,via_entry",
+    [(3, Fraction(3, 5), 5, True), (2, Fraction(4, 5), 3, False)],
+    ids=["entry", "n2_t4_5_floor3"],
+)
+def test_prefix_filter_is_lossless_vs_brute_force(
+    spark, sf_small, n, threshold, floor, via_entry
+):
     """The AllPairs prefix guarantee, re-proven inside Spark: the
     prefix-filtered join returns EXACTLY the pairs the unfiltered
-    posting-list join qualifies at the same threshold."""
+    posting-list join qualifies at the same threshold — through the
+    catalog entry at its own point, and through the kernel away from it
+    so the num/den algebra is exercised off t = 3/5."""
+    num, den = threshold.numerator, threshold.denominator
     docs = _t(spark, sf_small, "documents")
     grams = (
         docs.select(
-            "doc_id", F.explode(D.word_ngrams(F.col("text"), 3)).alias("g")
+            "doc_id", F.explode(D.word_ngrams(F.col("text"), n)).alias("g")
         )
         .select(
             "doc_id",
@@ -53,7 +64,7 @@ def test_prefix_filter_is_lossless_vs_brute_force(spark, sf_small):
         .distinct()
     )
     sz = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).filter(
-        F.col("n") >= 5
+        F.col("n") >= floor
     )
     el = grams.join(sz, "doc_id")
     a = el.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"), "hh")
@@ -68,12 +79,20 @@ def test_prefix_filter_is_lossless_vs_brute_force(spark, sf_small):
             F.first("nb").alias("nb"),
         )
         .filter(
-            F.lit(5) * F.col("inter")
-            >= F.lit(3) * (F.col("na") + F.col("nb") - F.col("inter"))
+            F.lit(den) * F.col("inter")
+            >= F.lit(num) * (F.col("na") + F.col("nb") - F.col("inter"))
         )
         .select("id_a", "id_b")
     )
-    got = q_prefix_filter_jaccard(spark, sf_small).select("id_a", "id_b")
+    if via_entry:
+        got = q_prefix_filter_jaccard(spark, sf_small)
+    else:
+        sets = docs.select(
+            "doc_id", D.word_ngram_hashes(F.col("text"), n).alias("grams")
+        ).filter(F.size("grams") >= floor)
+        got = D.prefix_filter_pairs(sets, "doc_id", "grams", threshold)
+    got = got.select("id_a", "id_b")
+    assert brute.count() > 0
     assert got.exceptAll(brute).count() == 0
     assert brute.exceptAll(got).count() == 0
 

@@ -65,3 +65,49 @@ def test_no_tool_shadows_a_stdlib_module():
     pyspark."""
     stems = {f[:-3] for f in os.listdir(os.path.join(REPO, "tools")) if f.endswith(".py")}
     assert stems & sys.stdlib_module_names == set()
+
+
+def test_plan_rows_reproducible_and_unexecuted(spark, sf_small):
+    """PLANS.md rows come from the static plan: two regenerations agree,
+    and a row runs no more jobs than the entry's build, never the query
+    itself, so no runtime statistic can reach it."""
+    from shuttlestandalonedbcreator_spark.queries import CATALOG
+    from tools.entry_profile import plan_row
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for name in ("prefix_filter_jaccard", "lsh_tuning_audit"):
+        sc.setJobGroup(f"build-{name}", "build")
+        CATALOG[name].spark(spark, sf_small)
+        rows = []
+        for i in range(2):
+            sc.setJobGroup(f"row{i}-{name}", "plan row")
+            rows.append(plan_row(spark, sf_small, name))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows[0] == rows[1], rows
+        # AQE runs a job per shuffle stage, so the static build can only
+        # need fewer jobs; executing the query would add its own
+        built = len(tracker.getJobIdsForGroup(f"build-{name}"))
+        ran = [len(tracker.getJobIdsForGroup(f"row{i}-{name}")) for i in range(2)]
+        assert ran[0] == ran[1] <= built, (name, ran, built)
+
+
+def test_text_fuzz_prefix_case_runs_the_shipped_kernel(spark, sf_small):
+    """tools/text_fuzz.py's prefix-filter draws call
+    operators/dedup.py:prefix_filter_pairs and agree with the DuckDB
+    all-pairs join on two fixed seeds."""
+    import random
+
+    import duckdb
+
+    from tools import text_fuzz
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_small}/documents.parquet'"
+    )
+    for seed in (4, 10):
+        got, exp, label = text_fuzz.prefix_filter_case(
+            spark, con, sf_small, random.Random(seed)
+        )
+        assert got and got == exp, label

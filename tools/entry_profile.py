@@ -4,8 +4,9 @@ times, printed to stdout.
 Usage: python tools/entry_profile.py [entry ...] [--sf DIR] [--plan] [--metrics]
                                [--layers]
 
-- No entry: the catalog-wide plan-shape table (``PLANS.md`` is this
-  output: ``python tools/entry_profile.py > PLANS.md``).
+- No entry: the catalog-wide plan-shape table, counted from static plans
+  (``PLANS.md`` is this output: ``python tools/entry_profile.py >
+  PLANS.md``).
 - An entry and no flag: its first 50 rows and its row count.
 - ``--plan``: the formatted plan of every frame the build
   ``localCheckpoint``s, taken before the checkpoint truncates its lineage,
@@ -161,14 +162,40 @@ def metrics_lines(df) -> list[str]:
     return lines
 
 
+def plan_row(spark, sf_dir: str, name: str) -> str:
+    """``name``'s plan-shape facts as a markdown table row, counted from
+    the static physical plan: adaptive execution is off while the entry
+    is built and planned, and the query is not run, so no runtime
+    statistic (stage sizes, the order stages finish in) can change the
+    row. AQE's
+    final plan re-plans per finished stage, and its codegen spans read
+    8 or 9 for ``prefix_filter_jaccard`` and 10 or 13 for
+    ``lsh_tuning_audit`` from run to run."""
+    key = "spark.sql.adaptive.enabled"
+    adaptive = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plan = CATALOG[name].spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, adaptive)
+    shuffles = plan.count("Exchange hashpartitioning")
+    bcast = plan.count("BroadcastHashJoin")
+    scans = plan.count("FileScan parquet")
+    pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
+    wscg = len(set(re.findall(r"\*\((\d+)\)", plan)))
+    nested = "yes" if ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan) else ""
+    return f"| {name} | {shuffles} | {bcast} | {scans} | {pushed} | {wscg} | {nested} |"
+
+
 def plan_table(spark, sf_dir: str) -> list[str]:
     """Plan-shape facts of every catalog entry, as a markdown table."""
-    lines = [
+    return [
         "# PLANS — physical-plan quality per headline query",
         "",
-        f"Generated by `tools/entry_profile.py` at `{sf_dir}` (plan shape is",
-        "scale-independent; only AQE's runtime coalescing changes with data).",
-        "Columns: shuffles = `Exchange hashpartitioning` count; bcast =",
+        f"Generated by `tools/entry_profile.py` at `{sf_dir}` from each",
+        "entry's static physical plan (adaptive execution off; the query is",
+        "planned, not run), so a regeneration on the same data gives the same",
+        "table. Columns: shuffles = `Exchange hashpartitioning` count; bcast =",
         "broadcast joins; scans; pushed = scans with non-empty PushedFilters;",
         "wscg = whole-stage-codegen spans; cartesian/NL = CartesianProduct or",
         "BroadcastNestedLoopJoin present (only acceptable for intentional",
@@ -176,26 +203,8 @@ def plan_table(spark, sf_dir: str) -> list[str]:
         "",
         "| query | shuffles | bcast | scans | pushed | wscg | cartesian/NL |",
         "|---|---|---|---|---|---|---|",
+        *(plan_row(spark, sf_dir, name) for name in CATALOG),
     ]
-    for name in CATALOG:
-        df = CATALOG[name].spark(spark, sf_dir)
-        # collect() runs THIS df's queryExecution, so AQE finalizes it and
-        # the executed plan carries `*(n)` whole-stage-codegen markers
-        # (df.write / df.count build a different execution and leave this
-        # one with isFinalPlan=false)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # the final-plan string appends an "== Initial Plan ==" section —
-        # cut it off or every node counts twice
-        plan = plan.split("== Initial Plan ==")[0]
-        shuffles = plan.count("Exchange hashpartitioning")
-        bcast = plan.count("BroadcastHashJoin")
-        scans = plan.count("FileScan parquet")
-        pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
-        wscg = len(set(re.findall(r"\*\((\d+)\)", plan)))
-        nested = "yes" if ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan) else ""
-        lines.append(f"| {name} | {shuffles} | {bcast} | {scans} | {pushed} | {wscg} | {nested} |")
-    return lines
 
 
 def layers(spark, sf_dir: str, name: str) -> dict[str, dict]:

@@ -13,13 +13,13 @@ Case families (seed-chosen):
 - containment_case  — operators/dedup.py:containment_pairs (asymmetric
                       |A∩B|/min(|A|,|B|), contained/container ordering
                       with the lower-id tie rule) at random n/threshold.
-- prefix_filter_case — the AllPairs prefix bound (queries.py:
-                      q_prefix_filter_jaccard generalized to random n,
-                      t = num/den, min_grams): candidates come ONLY from
-                      df-ordered prefix postings, verified exactly with
-                      the integer cross-multiplied compare; the oracle
-                      is the UNFILTERED all-pairs join — every draw
-                      re-proves the pruning lossless, not just t=0.6/n=3.
+- prefix_filter_case — operators/dedup.py:prefix_filter_pairs (the
+                      AllPairs/PPJoin join behind prefix_filter_jaccard,
+                      with its accumulated positional bound) over
+                      word_ngram_hashes sets at random n, t = num/den
+                      and min_grams floor; the oracle is the UNFILTERED
+                      all-pairs join, so every draw re-proves the
+                      shipped pruning lossless, not just t=3/5, n=3.
 
 Corpus perturbation (identical on both sides, derived from the seed):
 a doc_id modulus subset and an optional truncate-to-first-W-words
@@ -173,10 +173,11 @@ WHERE c * 1.0 / least(sa.s, sb.s) >= {num} / {den}.0
 
 
 def prefix_filter_case(spark, con, sf_dir, rng):
-    """Random-draw re-proof that the AllPairs prefix bound is lossless:
-    prefix length n_doc - ceil(t*n_doc) + 1 with t = num/den, integer
-    cross-multiplied verify, vs the UNFILTERED all-pairs oracle."""
-    from pyspark.sql import Window
+    """Random-draw re-proof that the shipped prefix-filter join
+    (operators/dedup.py:prefix_filter_pairs) is lossless at t = num/den,
+    n and the min_grams floor, vs the UNFILTERED all-pairs oracle."""
+    from fractions import Fraction
+
     from pyspark.sql import functions as F
 
     from shuttlestandalonedbcreator_spark.operators import dedup as D
@@ -185,78 +186,15 @@ def prefix_filter_case(spark, con, sf_dir, rng):
     num, den = rng.choice([t for t in THRESHOLDS if t[0] / t[1] >= 0.5])
     min_grams = rng.choice([3, 4, 5, 6, 8])
     corpus_sql, params = _corpus_sql(rng)
-    corpus = _corpus_df(spark, sf_dir, params)
-
-    grams = (
-        corpus.select(
-            "doc_id", F.explode(D.word_ngrams(F.col("text"), n)).alias("g")
-        )
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("g"), 1, 15), 16, 10)
-            .cast("long")
-            .alias("hh"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sz = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    df_tbl = grams.groupBy("hh").agg(F.count(F.lit(1)).alias("df"))
-    wrk = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("hh").asc())
-    ranked = grams.join(df_tbl, "hh").withColumn("rk", F.row_number().over(wrk))
-    # ceil(num*n/den) = (num*n + den - 1) div den
-    pre = (
-        ranked.join(sz, "doc_id")
-        .filter(F.col("n") >= min_grams)
-        .filter(
-            F.col("rk")
-            <= F.col("n")
-            - F.expr(f"({num} * n + {den - 1}) div {den}")
-            + F.lit(1)
-        )
-        .select("doc_id", "hh")
-    )
-    cand = (
-        pre.alias("a").join(pre.alias("b"), "hh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-    sets = grams.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list("hh")).alias("s"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    sa = sets.select(
-        F.col("doc_id").alias("id_a"), F.col("s").alias("sa"),
-        F.col("cnt").alias("na"),
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("id_b"), F.col("s").alias("sb"),
-        F.col("cnt").alias("nb"),
-    )
+    sets = _corpus_df(spark, sf_dir, params).select(
+        "doc_id", D.word_ngram_hashes(F.col("text"), n).alias("grams")
+    ).filter(F.size("grams") >= min_grams)
     got = sorted(
-        (r.id_a, r.id_b, r.inter_cnt, r.union_cnt)
-        for r in (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn(
-                "inter_cnt",
-                F.size(F.array_intersect("sa", "sb")).cast("long"),
-            )
-            .withColumn(
-                "union_cnt", F.col("na") + F.col("nb") - F.col("inter_cnt")
-            )
-            .filter(
-                F.lit(den) * F.col("inter_cnt")
-                >= F.lit(num) * F.col("union_cnt")
-            )
-            .select("id_a", "id_b", "inter_cnt", "union_cnt")
-            .collect()
-        )
+        tuple(r)
+        for r in D.prefix_filter_pairs(
+            sets, "doc_id", "grams", Fraction(num, den)
+        ).collect()
     )
-    grams.unpersist()
     sql = _grams_cte(corpus_sql, n) + f"""
 , sz AS (
   SELECT doc_id, len(g) AS n FROM grams WHERE len(g) >= {min_grams}
