@@ -57,12 +57,13 @@ def bpe_ish_token_count(col: Column) -> Column:
     )
 
 
-def stopword_ratio(col: Column, stopwords: tuple[str, ...] = LANG_MARKERS["en"]) -> Column:
-    """Share of word tokens that are ``stopwords``; 0.0 for a text with
-    no tokens. The tokenization is let-bound once."""
+def stopword_ratio(col: Column) -> Column:
+    """Share of word tokens that are English stopwords
+    (``LANG_MARKERS["en"]``); 0.0 for a text with no tokens. The
+    tokenization is let-bound once."""
 
     def ratio(toks: Column) -> Column:
-        hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
+        hits = F.size(F.filter(toks, lambda t: t.isin(*LANG_MARKERS["en"])))
         return F.when(
             F.size(toks) > 0, hits.cast("double") / F.size(toks).cast("double")
         ).otherwise(F.lit(0.0))

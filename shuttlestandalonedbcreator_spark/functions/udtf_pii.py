@@ -52,6 +52,6 @@ class PiiFindings:
                 yield kind, m.group(0), m.start(), m.end()
 
 
-def register_pii_udtf(spark: SparkSession, name: str = "pii_findings") -> None:
-    """Register for SQL lateral joins (idempotent)."""
-    spark.udtf.register(name, PiiFindings)
+def register_pii_udtf(spark: SparkSession) -> None:
+    """Register as ``pii_findings`` for SQL lateral joins (idempotent)."""
+    spark.udtf.register("pii_findings", PiiFindings)

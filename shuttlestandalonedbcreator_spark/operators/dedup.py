@@ -405,6 +405,10 @@ def prefix_filter_pairs(
 # Chosen so seed*h2 stays far below 2^63 (no overflow in any engine).
 MINHASH_PRIME = 1_000_000_007
 
+# Shape of the persisted near-dup index: word 3-grams, 32 minhashes in
+# 8 bands. ``incremental_neardup_pairs`` signs new batches the same way.
+INDEX_NGRAM, INDEX_HASHES, INDEX_BANDS = 3, 32, 8
+
 
 def minhash_signature(df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int) -> DataFrame:
     """Per doc: array of ``num_hashes`` minhash values over word n-grams.
@@ -459,14 +463,7 @@ def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("_id", "_sig", F.col("_bb.band").alias("_band"), F.col("_bb.bucket").alias("_bucket"))
 
 
-def minhash_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
+def minhash_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Persistable near-dup index for INCREMENTAL dedup: one row per
     (doc, band) with the doc's full signature and the band's bucket hash.
 
@@ -474,8 +471,8 @@ def minhash_index(
     by `bucket`) and each new ingest batch only joins against it — the
     corpus is never re-shingled and never re-compared against itself.
     Columns: (id, sig, band, bucket)."""
-    sig = minhash_signature(df, id_col, text_col, n, num_hashes)
-    return _banded(sig, num_hashes, bands).select(
+    sig = minhash_signature(df, id_col, text_col, INDEX_NGRAM, INDEX_HASHES)
+    return _banded(sig, INDEX_HASHES, INDEX_BANDS).select(
         F.col("_id").alias("id"),
         F.col("_sig").alias("sig"),
         F.col("_band").alias("band"),
@@ -499,15 +496,11 @@ def incremental_neardup_pairs(
     index: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
 ) -> DataFrame:
-    """Near-dup pairs of a NEW batch against an existing ``minhash_index``
-    (same n/num_hashes/bands as at index build time — the signatures are
-    deterministic, so incremental results equal what a full recompute
-    would say about new×corpus pairs).
+    """Near-dup pairs (estimated Jaccard >= 0.5) of a NEW batch against an
+    existing ``minhash_index``, signed with the index's shape — the
+    signatures are deterministic, so incremental results equal what a
+    full recompute would say about new×corpus pairs.
 
     Scale: cost is O(batch × shingles) to sign the batch plus a join keyed
     on (band, bucket) against the index — the corpus signature store is
@@ -516,7 +509,9 @@ def incremental_neardup_pairs(
     est_jaccard); new-batch-internal duplicates come from running plain
     ``minhash_lsh_pairs`` on the (small) batch."""
     new_banded = _banded(
-        minhash_signature(new_docs, id_col, text_col, n, num_hashes), num_hashes, bands
+        minhash_signature(new_docs, id_col, text_col, INDEX_NGRAM, INDEX_HASHES),
+        INDEX_HASHES,
+        INDEX_BANDS,
     )
     cand = (
         new_banded.alias("a")
@@ -535,9 +530,9 @@ def incremental_neardup_pairs(
     return (
         cand.withColumn(
             "est_jaccard",
-            _est_jaccard(_agree(F.col("_siga"), F.col("_sigb")), num_hashes),
+            _est_jaccard(_agree(F.col("_siga"), F.col("_sigb")), INDEX_HASHES),
         )
-        .filter(F.col("est_jaccard") >= threshold)
+        .filter(F.col("est_jaccard") >= 0.5)
         .select("new_id", "match_id", "est_jaccard")
     )
 
@@ -599,7 +594,7 @@ def minhash_lsh_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """60-bit SimHash per document over its distinct token set.
 
     Entirely a NARROW map — no explode, no shuffle: the distinct-token
@@ -611,7 +606,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
     ~7× slower end-to-end because Catalyst spends seconds planning the
     60-branch tree. At any scale this is scan-parallel with zero network
     traffic."""
-    nbits = min(bits, 60)
+    nbits = 60  # md5_long hashes carry 60 bits
     hashed = fan_out(df).select(
         F.col(id_col).alias("_id"),
         F.transform(F.array_distinct(tokens(F.col(text_col))), lambda t: md5_long(t)).alias("_hs"),

@@ -147,20 +147,19 @@ def cluster_keep_list(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
-    """Join a near-dup pair list back onto the corpus: every row of ``df``
-    gains (cluster_id, keep) — cluster_id is the component representative
-    (the row's own id when it has no duplicates), keep=1 exactly for the
-    representative. Dropping keep=0 rows deduplicates the corpus while
-    retaining one member per duplicate group.
+    """Join a near-dup pair list (``id_a``, ``id_b``) back onto the
+    corpus: every row of ``df`` gains (cluster_id, keep) — cluster_id is
+    the component representative (the row's own id when it has no
+    duplicates), keep=1 exactly for the representative. Dropping keep=0
+    rows deduplicates the corpus while retaining one member per
+    duplicate group.
 
     The component table holds only docs with at least one near-dup —
     small relative to the corpus but it SCALES with duplicate mass, so
     the join carries no broadcast hint (AQE broadcasts it while small).
     """
-    comp = connected_components(pairs, src, dst).withColumnRenamed("id", id_col)
+    comp = connected_components(pairs, "id_a", "id_b").withColumnRenamed("id", id_col)
     return (
         df.join(comp, id_col, "left")
         .withColumn("cluster_id", F.coalesce(F.col("component"), F.col(id_col)))

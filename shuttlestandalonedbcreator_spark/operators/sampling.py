@@ -34,12 +34,12 @@ from shuttlestandalonedbcreator_spark.operators.util import bounded_broadcast
 HASH_BUCKETS = 10_000
 
 
-def hash_bucket(col: Column, seed: int = 0, buckets: int = HASH_BUCKETS) -> Column:
-    """Uniform deterministic bucket in [0, buckets) from the portable
+def hash_bucket(col: Column, seed: int = 0) -> Column:
+    """Uniform deterministic bucket in [0, HASH_BUCKETS) from the portable
     60-bit md5 hash of the key. DuckDB-portable:
-    ``CAST(('0x' || substr(md5(concat('<seed>|', CAST(k AS VARCHAR))), 1, 15)) AS BIGINT) % buckets``.
+    ``CAST(('0x' || substr(md5(concat('<seed>|', CAST(k AS VARCHAR))), 1, 15)) AS BIGINT) % 10000``.
     """
-    return md5_long(col, seed=seed) % F.lit(buckets)
+    return md5_long(col, seed=seed) % F.lit(HASH_BUCKETS)
 
 
 def split_label(
@@ -68,7 +68,6 @@ def hash_split(
     key_col: str,
     splits: list[tuple[str, float]],
     seed: int = 0,
-    out_col: str = "split",
 ) -> DataFrame:
     """Assign each row to a named split (train/val/test/...) by hashing a
     stable key — deterministic, narrow (no shuffle), stable under data
@@ -76,9 +75,10 @@ def hash_split(
 
     ``splits`` is [(name, fraction), ...]; fractions must sum to <= 1.0
     (any remainder falls into the LAST split). Fractions are snapped to
-    1/10000ths so the cut points are exact integers.
+    1/10000ths so the cut points are exact integers. The label is the
+    ``split`` column.
     """
-    return df.withColumn(out_col, split_label(F.col(key_col), splits, seed=seed))
+    return df.withColumn("split", split_label(F.col(key_col), splits, seed=seed))
 
 
 def stratified_sample(
@@ -197,7 +197,6 @@ def mixture_rates(
     strata_col: str,
     budget_rows: int,
     weight_scale: int = 1000,
-    buckets: int = HASH_BUCKETS,
 ) -> DataFrame:
     """Temperature-based mixture weighting (α = 0.5): per-stratum keep
     rates ∝ √count, scaled so the expected kept total is ``budget_rows``
@@ -211,11 +210,11 @@ def mixture_rates(
     All math is INTEGER so rates are bit-identical across engines: the
     weight is floor(√n · scale) (IEEE sqrt is exactly rounded, so floor
     is deterministic), Σ wⱼ is an exact integer sum, and each threshold
-    rateᵢ·buckets = (budget·buckets·scale²) / (wᵢ·Σwⱼ) is evaluated as
-    TWO divisions, (numer div wᵢ) div Σwⱼ — exactly equal to the single
-    division for positive integers (floor(floor(a/b)/c) = floor(a/(bc)))
-    but immune to the int64 overflow of the product wᵢ·Σwⱼ, which at the
-    100 TB design point (~1e13 total rows → Σwⱼ ≈ √n·scale ≈ 3e9·#strata)
+    rateᵢ·buckets = (budget·buckets·scale²) / (wᵢ·Σwⱼ), with buckets =
+    HASH_BUCKETS, is evaluated as TWO divisions, (numer div wᵢ) div
+    Σwⱼ — exactly equal to the single division for positive integers
+    (floor(floor(a/b)/c) = floor(a/(bc))) but immune to the int64
+    overflow of the product wᵢ·Σwⱼ, which at the 100 TB design point (~1e13 total rows → Σwⱼ ≈ √n·scale ≈ 3e9·#strata)
     would otherwise go negative and silently select zero rows. The
     remaining bound is the numerator itself: budget·buckets·scale² must
     fit int64, asserted below. Returns (stratum, n_rows, _thresh) where
@@ -233,18 +232,18 @@ def mixture_rates(
         "_w", F.floor(F.sqrt(F.col("n_rows")) * weight_scale).cast("long")
     )
     denom = w.agg(F.sum("_w").alias("_s"))
-    numer = budget_rows * buckets * weight_scale * weight_scale
+    numer = budget_rows * HASH_BUCKETS * weight_scale * weight_scale
     if numer >= 2**63:
         raise ValueError(
             f"budget_rows*buckets*weight_scale^2 = {numer} overflows int64; "
-            "lower weight_scale or buckets"
+            "lower weight_scale"
         )
     return (
         w.crossJoin(bounded_broadcast(denom, "one_row"))
         .withColumn(
             "_thresh",
             F.least(
-                F.lit(buckets).cast("long"),
+                F.lit(HASH_BUCKETS).cast("long"),
                 F.expr(f"({numer}L div _w) div _s"),
             ),
         )

@@ -188,7 +188,6 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means partitions the base
     vectors into `n_centroids` cells; each query scores only the
@@ -198,7 +197,7 @@ def ivf_topk(
     capped sample), assignment is a narrow map (broadcast centroids), and
     the search join is keyed on cell id — each query touches
     n_probe/n_centroids of the data instead of all of it. Deterministic
-    via fixed seed.
+    via the fixed KMeans seed 42.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
@@ -216,7 +215,7 @@ def ivf_topk(
             vectors.sparkSession, [],
             "query_id long, neighbor_id long, score double, rank int",
         )
-    km = KMeans(k=n_centroids, seed=seed, featuresCol="_feat", predictionCol="_cell")
+    km = KMeans(k=n_centroids, seed=42, featuresCol="_feat", predictionCol="_cell")
     model = km.fit(base.select("_feat"))
     # corpus norm precomputed once per row (r10, guide §1.2) — the probe
     # join fans each vector out to every probing query, and the per-pair

@@ -12,12 +12,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+SALT_BUCKETS = 16  # reducers a hot key's rows spread over
+
 
 def salted_aggregate(
     df: DataFrame,
     keys: list[str],
     aggs: dict[str, tuple[str, str]],
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Two-phase aggregation with a salted first phase.
 
@@ -26,9 +27,9 @@ def salted_aggregate(
     decomposed by the caller into sum+count).
 
     Phase 1 groups on (keys..., salt) — the hot key's rows spread over
-    ``salt_buckets`` reducers; phase 2 re-aggregates the tiny partial
+    ``SALT_BUCKETS`` reducers; phase 2 re-aggregates the tiny partial
     results on the true keys. Total work is one extra narrow stage over a
-    result whose size is |distinct keys| × salt_buckets.
+    result whose size is |distinct keys| × SALT_BUCKETS.
     """
     refold = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
     first = {"sum": F.sum, "count": lambda c: F.count(F.lit(1)), "min": F.min, "max": F.max}
@@ -37,7 +38,7 @@ def salted_aggregate(
             raise ValueError(f"non-re-aggregable fn {fn!r}; decompose it first")
 
     salted = df.withColumn(
-        "_salt", (F.rand(seed=7) * salt_buckets).cast("int")
+        "_salt", (F.rand(seed=7) * SALT_BUCKETS).cast("int")
     )
     phase1 = salted.groupBy(*keys, "_salt").agg(
         *[first[fn](col).alias(out) for out, (col, fn) in aggs.items()]
@@ -48,14 +49,14 @@ def salted_aggregate(
 
 
 def top_k_per_key_skew_safe(
-    df: DataFrame, key: str, order_col: Column, k: int, salt_buckets: int = 16
+    df: DataFrame, key: str, order_col: Column, k: int
 ) -> DataFrame:
     """Per-key top-k without funneling a hot key through one reducer:
     local top-k per (key, salt) first, then exact top-k over the
-    salt_buckets × k survivors."""
+    SALT_BUCKETS × k survivors."""
     from pyspark.sql import Window
 
-    salted = df.withColumn("_salt", (F.rand(seed=7) * salt_buckets).cast("int"))
+    salted = df.withColumn("_salt", (F.rand(seed=7) * SALT_BUCKETS).cast("int"))
     w1 = Window.partitionBy(key, "_salt").orderBy(order_col)
     local = salted.withColumn("_r1", F.row_number().over(w1)).filter(F.col("_r1") <= k)
     w2 = Window.partitionBy(key).orderBy(order_col)
@@ -70,10 +71,9 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
+    salt_buckets: int = SALT_BUCKETS,
 ) -> DataFrame:
-    """Explicit-salt equi-join on a same-named ``key`` for hot keys AQE
+    """Explicit-salt inner equi-join on a same-named ``key`` for hot keys AQE
     can't split (e.g. skew introduced by an upstream explode, or a
     build side that must stay shuffled).
 
@@ -89,4 +89,4 @@ def salted_join(
         F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("_salt"),
     )
     big_s = big.withColumn("_salt", (F.rand(seed=7) * salt_buckets).cast("int"))
-    return big_s.join(small_rep, [key, "_salt"], how).drop("_salt")
+    return big_s.join(small_rep, [key, "_salt"]).drop("_salt")

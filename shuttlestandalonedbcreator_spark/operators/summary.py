@@ -27,11 +27,10 @@ def status_summary(
     status_col: str,
     file_predicate: Column,
     folder_predicate: Column,
-    unknown_label: str = "Unknown",
 ) -> DataFrame:
     """`status_summary` shape: for each COALESCE(status,'Unknown') emit
     total / conditional-file / conditional-folder counts, desc by total."""
-    status = F.coalesce(F.col(status_col), F.lit(unknown_label)).alias("status_name")
+    status = F.coalesce(F.col(status_col), F.lit("Unknown")).alias("status_name")
     return (
         df.groupBy(status)
         .agg(

@@ -7,6 +7,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType
 
 # The only justifications under which an EXPLICIT broadcast hint is
 # scale-safe. An explicit hint overrides spark.sql.autoBroadcastJoinThreshold,
@@ -53,9 +54,10 @@ def bounded_broadcast(df: DataFrame, kind: str) -> DataFrame:
 
 
 # Driver-memory caps of bounded_collect, read at call time (tests patch
-# them): rows, and estimated bytes — the schema's Catalyst row width
+# them): rows, and estimated bytes — the widest row's Catalyst width
 # (StructType.defaultSize — fixed-width types at their size, 20 B per
-# string, an array or map at ONE element) times the rows.
+# string — with each top-level array or map at its real element count)
+# times the rows.
 MAX_COLLECT_ROWS = 2_000_000
 MAX_COLLECT_BYTES = 1 << 30
 
@@ -85,7 +87,7 @@ def bounded_collect(df: DataFrame, kind: str, hint: str = "") -> list:
             f"driver collect needs a bounded-size justification, one of "
             f"{sorted(_BOUNDED_KINDS)}; got {kind!r}"
         )
-    width = max(df._jdf.schema().defaultSize(), 1)
+    width = max(_row_width(df), 1)
     cap = min(MAX_COLLECT_ROWS, MAX_COLLECT_BYTES // width)
     rows = df.limit(cap + 1).collect()
     if len(rows) > cap:
@@ -98,6 +100,26 @@ def bounded_collect(df: DataFrame, kind: str, hint: str = "") -> list:
             + (f" — {hint}" if hint else "")
         )
     return rows
+
+
+def _row_width(df: DataFrame) -> int:
+    """Catalyst width of ``df``'s widest row. ``defaultSize`` counts an
+    array or a map as ONE element, so a frame with a top-level array or
+    map column adds the widest row's other elements, found by one
+    top-1 job (no shuffle); other frames need no job."""
+    schema = df._jdf.schema()
+    multi = [
+        f.name for f in df.schema.fields if isinstance(f.dataType, ArrayType | MapType)
+    ]
+    if not multi:
+        return schema.defaultSize()
+    extra = sum(
+        F.greatest(F.size(df[c]).cast("long") - 1, F.lit(0))
+        * schema.apply(c).dataType().defaultSize()
+        for c in multi
+    )
+    widest = df.select(extra.alias("_extra")).orderBy(F.desc("_extra")).first()
+    return schema.defaultSize() + (widest[0] if widest else 0)
 
 
 def local_frame(spark, rows, ddl: str) -> DataFrame:
@@ -133,8 +155,7 @@ def local_frame(spark, rows, ddl: str) -> DataFrame:
 
 
 @contextmanager
-def runtime_bloom_filters(spark, app_side_scan_threshold: str = "10GB",
-                          creation_side_threshold: str = "10MB"):
+def runtime_bloom_filters(spark, app_side_scan_threshold: str = "10GB"):
     """Scope Spark's runtime bloom-filter join pruning to a block.
 
     When a shuffle join's build side carries a selective filter, Spark
@@ -146,16 +167,16 @@ def runtime_bloom_filters(spark, app_side_scan_threshold: str = "10GB",
     must be big enough to be worth it, the build side small enough to
     sketch), so toy-SF tests never see it with the defaults; this
     context manager pins the knobs (pass "0" for the app-side threshold
-    to force injection at any scan size) and restores the previous
-    session values on exit. At production scale the DEFAULTS are
-    correct — call sites should not lower thresholds permanently.
+    to force injection at any scan size; the creation side stays at
+    Spark's 10MB) and restores the previous session values on exit. At
+    production scale the DEFAULTS are correct — call sites should not
+    lower thresholds permanently.
     """
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter."
         "applicationSideScanSizeThreshold": app_side_scan_threshold,
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold":
-            creation_side_threshold,
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10MB",
     }
     old = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
@@ -170,9 +191,9 @@ def runtime_bloom_filters(spark, app_side_scan_threshold: str = "10GB",
                 spark.conf.set(k, v)
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Ensure at least ``min_partitions`` input splits before compute-heavy
-    narrow transforms (shingling, hashing, per-row scoring).
+def fan_out(df: DataFrame) -> DataFrame:
+    """Ensure at least ``defaultParallelism`` input splits before
+    compute-heavy narrow transforms (shingling, hashing, per-row scoring).
 
     A small parquet file arrives as ONE split, serializing all per-row
     compute onto a single core; at 100 TB inputs already split past the
@@ -181,12 +202,9 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """
     if df.isStreaming:
         # streaming frames can't be partition-inspected (df.rdd throws);
-        # file sources already split by file per micro-batch, so the
-        # DEFAULT floor is a batch-only concern — but an EXPLICIT
-        # min_partitions is a caller contract and repartition does work
-        # on streams, so honor it unconditionally
-        return df.repartition(min_partitions) if min_partitions else df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+        # file sources already split by file per micro-batch
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

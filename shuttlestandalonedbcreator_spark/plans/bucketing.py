@@ -24,12 +24,10 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
+    """Overwrite ``table`` as parquet hashed into ``n_buckets`` buckets
+    on ``bucket_col``."""
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
     writer.format("parquet").saveAsTable(table)
 
 
@@ -39,13 +37,12 @@ def cobucket_join(
     right_table: str,
     left_key: str,
     right_key: str,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join two co-bucketed tables on their bucket keys — planned as a
-    shuffle-free sort-merge join when bucket layouts match."""
+    """Inner-join two co-bucketed tables on their bucket keys — planned
+    as a shuffle-free sort-merge join when bucket layouts match."""
     left = spark.table(left_table)
     right = spark.table(right_table)
-    return left.join(right, left[left_key] == right[right_key], how)
+    return left.join(right, left[left_key] == right[right_key])
 
 
 def write_clustered(
@@ -53,14 +50,13 @@ def write_clustered(
     path: str,
     cluster_cols: list[str],
     n_files: int = 32,
-    mode: str = "overwrite",
 ) -> None:
-    """Range-cluster on write: repartitionByRange + sortWithinPartitions
-    on the hot predicate columns, so every output file covers a NARROW
-    value range and parquet row-group min/max statistics prune most files
-    at scan time (the poor man's Z-order; for true multi-dimensional
-    clustering interleave key bits into a z-value column and range-cluster
-    on that).
+    """Range-cluster on write, overwriting ``path``: repartitionByRange +
+    sortWithinPartitions on the hot predicate columns, so every output
+    file covers a NARROW value range and parquet row-group min/max
+    statistics prune most files at scan time (the poor man's Z-order; for
+    true multi-dimensional clustering interleave key bits into a z-value
+    column and range-cluster on that).
 
     At 100 TB this is the difference between reading every file for a
     selective predicate and reading ~1/n_files of them.
@@ -69,7 +65,7 @@ def write_clustered(
     (
         df.repartitionByRange(n_files, *cols)
         .sortWithinPartitions(*cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -79,15 +75,14 @@ def write_zordered(
     path: str,
     zorder_cols: list[str],
     n_files: int = 32,
-    bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
-    """Multi-dimensional clustering on write: range-cluster on the
-    interleaved z-value so every output file covers a small HYPER-RECTANGLE
-    of the key space — parquet min/max footer statistics then prune files
-    for selective predicates on ANY of the z-ordered columns, where 1-D
-    `write_clustered` only helps its leading column. The z column is
-    computational-only and dropped before the write.
+    """Multi-dimensional clustering on write, overwriting ``path``:
+    range-cluster on the interleaved z-value so every output file covers
+    a small HYPER-RECTANGLE of the key space — parquet min/max footer
+    statistics then prune files for selective predicates on ANY of the
+    z-ordered columns, where 1-D `write_clustered` only helps its leading
+    column. The z column is computational-only and dropped before the
+    write.
 
     At 100 TB this is the data-layout half of scan performance: a
     filter like `l_orderkey BETWEEN a AND b AND l_partkey BETWEEN c AND d`
@@ -95,7 +90,7 @@ def write_zordered(
     every file. Columns must be ints (hash or dictionary-encode anything
     else first).
 
-    Each column is first NORMALIZED to the full ``bits``-bit range from
+    Each column is first NORMALIZED to the full 16-bit range from
     its observed min/max (one tiny driver-side agg). Interleaving RAW
     bits is the classic z-order mistake: with columns of different
     magnitude (a 13-bit orderkey vs an 8-bit partkey) the wide column's
@@ -105,6 +100,7 @@ def write_zordered(
         *[F.min(c).cast("long").alias(f"_mn_{i}") for i, c in enumerate(zorder_cols)],
         *[F.max(c).cast("long").alias(f"_mx_{i}") for i, c in enumerate(zorder_cols)],
     ).collect()[0]
+    bits = 16
     top = (1 << bits) - 1
     norm = []
     for i, c in enumerate(zorder_cols):
@@ -119,7 +115,7 @@ def write_zordered(
         .repartitionByRange(n_files, F.col("_z"))
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

@@ -23,68 +23,50 @@ from shuttlestandalonedbcreator_spark.operators.dedup import minhash_lsh_pairs, 
 from shuttlestandalonedbcreator_spark.operators.graph import cluster_keep_list
 from shuttlestandalonedbcreator_spark.operators.sampling import hash_split
 
-DEFAULT_SPLITS = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
+SPLITS = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
 
 
-def curate_corpus(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    quality_threshold: float = 0.75,
-    max_top_bigram_frac: float = 0.2,
-    max_dup_trigram_frac: float = 0.2,
-    neardup_threshold: float = 0.5,
-    splits: list[tuple[str, float]] | None = None,
-    seed: int = 7,
-) -> DataFrame:
-    """Return the curated, split-labeled corpus: input rows that pass the
-    language/quality/repetition gates and are the canonical member of
-    their near-dup cluster, with a ``split`` column appended."""
-    toks = tokens(F.col(text_col))
+def curate_corpus(docs: DataFrame, quality_threshold: float = 0.75) -> DataFrame:
+    """Return the curated, split-labeled corpus: ``doc_id``/``text`` rows
+    that pass the language, quality (``quality_threshold``) and
+    repetition (top bigram and duplicate trigram share at most 0.2)
+    gates and are the canonical member of their near-dup cluster
+    (Jaccard 0.5), with a ``split`` column appended (``SPLITS``, seed 7).
+    """
+    text, toks = F.col("text"), F.col("_toks")
     gated = (
-        docs.withColumn("_toks", toks)
-        .filter(T.lang_id(F.col(text_col), F.col("_toks")) != "und")
-        .filter(T.quality_score(F.col(text_col), F.col("_toks")) >= quality_threshold)
-        .filter(T.top_ngram_frac(F.col("_toks"), n=2) <= max_top_bigram_frac)
-        .filter(T.dup_ngram_frac(F.col("_toks"), n=3) <= max_dup_trigram_frac)
+        docs.withColumn("_toks", tokens(text))
+        .filter(T.lang_id(text, toks) != "und")
+        .filter(T.quality_score(text, toks) >= quality_threshold)
+        .filter(T.top_ngram_frac(toks, n=2) <= 0.2)
+        .filter(T.dup_ngram_frac(toks, n=3) <= 0.2)
         .drop("_toks")
     )
-    pairs = minhash_lsh_pairs(gated, id_col, text_col, threshold=neardup_threshold)
+    pairs = minhash_lsh_pairs(gated, "doc_id", "text", threshold=0.5)
     kept = (
-        cluster_keep_list(gated, pairs, id_col)
+        cluster_keep_list(gated, pairs, "doc_id")
         .filter(F.col("keep") == 1)
         .drop("cluster_id", "keep")
     )
-    return hash_split(kept, id_col, splits or DEFAULT_SPLITS, seed=seed)
-
-
-def write_curated(
-    docs: DataFrame,
-    out_dir: str,
-    **kwargs,
-) -> DataFrame:
-    """Curate and persist, partitioned by split (pruned reads per split
-    for downstream consumers). Returns the curated DataFrame."""
-    curated = curate_corpus(docs, **kwargs)
-    curated.write.partitionBy("split").mode("overwrite").parquet(out_dir)
-    return curated
+    return hash_split(kept, "doc_id", SPLITS, seed=7)
 
 
 def write_curated_observed(
     docs: DataFrame,
     out_dir: str,
-    **kwargs,
+    quality_threshold: float = 0.75,
 ) -> tuple[DataFrame, dict]:
-    """`write_curated` with in-flight pipeline metrics via `observe()`:
-    the survivor count, distinct languages, and split histogram are
-    accumulated DURING the write — zero extra passes over the data, which
-    at 100 TB is the difference between free telemetry and a second job.
-    Returns (curated_df, metrics_dict).
+    """Curate and persist, partitioned by split (pruned reads per split
+    for downstream consumers), with in-flight pipeline metrics via
+    `observe()`: the survivor count, distinct languages, and split
+    histogram are accumulated DURING the write — zero extra passes over
+    the data, which at 100 TB is the difference between free telemetry
+    and a second job. Returns (curated_df, metrics_dict).
     """
     from pyspark.sql import Observation
 
     obs = Observation("curation")
-    curated = curate_corpus(docs, **kwargs).observe(
+    curated = curate_corpus(docs, quality_threshold=quality_threshold).observe(
         obs,
         F.count(F.lit(1)).alias("n_kept"),
         F.approx_count_distinct("lang").alias("n_langs"),

@@ -82,10 +82,10 @@ def write_transfer_table(
     df: DataFrame,
     path: str,
     partition_by: tuple[str, ...] = ("job_name",),
-    mode: str = "overwrite",
     file_format: str = "parquet",
 ) -> None:
-    """Primary sink: columnar files partitioned on the hot filter key(s).
+    """Primary sink: columnar files partitioned on the hot filter key(s),
+    overwriting ``path``.
 
     Partition pruning then serves the reference's indexed lookups
     (`WHERE job_name = ...` README.md:82) without any index structure.
@@ -93,7 +93,7 @@ def write_transfer_table(
     (default) or orc; both carry the same pruning/pushdown behavior, orc
     matters for Hive-ecosystem consumers.
     """
-    df.write.mode(mode).partitionBy(*partition_by).format(file_format).save(path)
+    df.write.mode("overwrite").partitionBy(*partition_by).format(file_format).save(path)
 
 
 def read_transfer_table(

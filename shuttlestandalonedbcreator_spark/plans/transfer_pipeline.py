@@ -87,33 +87,31 @@ def typed_projection(raw: DataFrame) -> DataFrame:
     return raw.select(*cols, *passthrough)
 
 
-def with_derived_columns(df: DataFrame, source_file: str | None = None) -> DataFrame:
+def with_derived_columns(df: DataFrame) -> DataFrame:
     """Materialized derived columns, computed once at ingest (reference
-    :538-546 — an intentional physical-design choice we keep)."""
+    :538-546 — an intentional physical-design choice we keep); the job
+    name comes from ``_source_file`` when the scan carries it."""
     out = (
         df.withColumn("level", path_level(F.col("file_name")))
         .withColumn("parent_folder", parent_folder(F.col("file_name")))
         .withColumn("import_timestamp", F.current_timestamp())
     )
-    if source_file is not None:
-        out = out.withColumn("job_name", job_name_from_filename(F.lit(source_file)))
-    elif "_source_file" in df.columns:
+    if "_source_file" in df.columns:
         out = out.withColumn("job_name", job_name_from_filename(F.col("_source_file")))
     else:
         out = out.withColumn("job_name", F.lit("Unknown"))
     return out
 
 
-def dedup_last_wins(df: DataFrame, seq_cols: list[str] | None = None) -> DataFrame:
+def dedup_last_wins(df: DataFrame) -> DataFrame:
     """A1: keep the latest row per (file_name, target_file_id) — the
     `INSERT OR REPLACE` upsert (:306, :713).
 
-    Arrival order: explicit ``seq_cols``, else whichever of
-    (_batch_id, _ingest_seq) exist — _ingest_seq alone restarts per
-    micro-batch, so the batch id must be the major key for cross-run
-    upserts; falls back to a synthetic id for already-unique inputs."""
-    if seq_cols is None:
-        seq_cols = [c for c in ("_batch_id", "_ingest_seq") if c in df.columns]
+    Arrival order: whichever of (_batch_id, _ingest_seq) exist —
+    _ingest_seq alone restarts per micro-batch, so the batch id must be
+    the major key for cross-run upserts; falls back to a synthetic id
+    for already-unique inputs."""
+    seq_cols = [c for c in ("_batch_id", "_ingest_seq") if c in df.columns]
     orders = (
         [F.desc(c) for c in seq_cols]
         if seq_cols
@@ -155,9 +153,7 @@ def resolve_parent_ids(df: DataFrame) -> DataFrame:
     ).drop("_pname")
 
 
-def ingest(
-    raw: DataFrame, source_file: str | None = None, materialize: bool = False
-) -> DataFrame:
+def ingest(raw: DataFrame, materialize: bool = False) -> DataFrame:
     """Full pipeline: typed projection → derived → dedup → parent ids.
 
     ``materialize=True`` localCheckpoints the deduped frame before
@@ -167,7 +163,7 @@ def ingest(
     twice. Parquet-backed inputs can leave it off (a rescan is cheap
     columnar IO); measured ~1.4× ingest throughput on the workbook
     bench (tools/ingest_bench.py)."""
-    deduped = dedup_last_wins(with_derived_columns(typed_projection(raw), source_file))
+    deduped = dedup_last_wins(with_derived_columns(typed_projection(raw)))
     if materialize:
         deduped = deduped.localCheckpoint(eager=True)
     return resolve_parent_ids(deduped)

@@ -7357,8 +7357,9 @@ def q_approx_topk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketched count equals the exact count and the exact top-10 is
     covered by the sketched top-20."""
     docs = _t(spark, sf_dir, "documents")
+    # the sketch, exact and top-10 branches each rescan the documents: a
+    # checkpoint of toks measured no faster than those rescans at sf0.01-0.1
     toks = docs.select(F.explode(D.tokens(F.col("text"))).alias("token"))
-    toks = toks.localCheckpoint(eager=True)  # feeds sketch + exact + top10
     sk = (
         toks.agg(F.expr("approx_top_k(token, 20)").alias("tk"))
         .select(F.explode("tk").alias("e"))

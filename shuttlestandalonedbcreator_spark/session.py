@@ -8,7 +8,7 @@ point (tests, bench, driver) gets the same profile.
 Scale notes (100 TB target):
 - ``spark.sql.adaptive.enabled``: runtime coalescing/skew-join — the knob
   that replaces hand-tuned partition counts when data volume varies 1000×.
-- ``spark.sql.shuffle.partitions`` defaults to the local core count here;
+- ``spark.sql.shuffle.partitions`` is the local core count here;
   on a real cluster this should be ~2-3× total executor cores (or left to
   AQE's coalescing with a high initial value).
 - session timezone pinned to UTC so timestamp semantics are deterministic
@@ -46,20 +46,17 @@ def spark_graft_cpus() -> int:
 
 def get_spark(
     app_name: str = "shuttlestandalonedbcreator-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's standard profile."""
+    """Build (or reuse) a SparkSession with the engine's standard profile:
+    master ``$SPARK_MASTER`` (else ``local[<cpus>]``), one shuffle
+    partition per core, then ``extra_conf`` over everything."""
     cpus = spark_graft_cpus()
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    shuffle_partitions = shuffle_partitions or cpus
-
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -87,12 +84,9 @@ def get_spark(
         # split_contamination -38%, pagerank/kcore/neardup/closure -10..-25%,
         # no entry slower across an interleaved 3-value sweep). At
         # production shuffle volumes the floor never binds, so the setting
-        # is local-scale-inert by construction; env-overridable for
-        # clusters that want the stock floor.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"),
-        )
+        # is local-scale-inert by construction; a cluster that wants the
+        # stock floor passes it in extra_conf.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

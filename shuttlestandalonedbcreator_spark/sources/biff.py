@@ -681,10 +681,11 @@ def build_workbook_stream(
     )
 
 
-def wrap_cfb(stream: bytes, stream_name: str = "Workbook") -> bytes:
-    """Wrap one stream in a v3 CFB container. The stream is zero-padded to
-    the 4096-byte mini cutoff so it lives in regular FAT sectors (no
-    mini-stream machinery needed); BIFF readers stop at EOF records."""
+def wrap_cfb(stream: bytes) -> bytes:
+    """Wrap one stream, named ``Workbook``, in a v3 CFB container. The
+    stream is zero-padded to the 4096-byte mini cutoff so it lives in
+    regular FAT sectors (no mini-stream machinery needed); BIFF readers
+    stop at EOF records."""
     content = stream + b"\x00" * max(0, 4096 - len(stream))
     n_stream = -(-len(content) // 512)
     n_fat = 1
@@ -714,7 +715,7 @@ def wrap_cfb(stream: bytes, stream_name: str = "Workbook") -> bytes:
 
     directory = (
         dirent("Root Entry", 5, 1, _ENDOFCHAIN, 0)
-        + dirent(stream_name, 2, _NOSTREAM, stream_start, len(content))
+        + dirent("Workbook", 2, _NOSTREAM, stream_start, len(content))
         + bytes(128) * 2
     )
 

@@ -28,15 +28,14 @@ def read_csv(
     path: str,
     schema: str | None = None,
     keep_corrupt: bool = False,
-    header: bool = True,
-    sep: str = ",",
 ) -> DataFrame:
-    """Tolerant CSV read. With `schema` + `keep_corrupt=True`, rows that
-    fail parsing/casting fill `_corrupt_record` (PERMISSIVE) for
-    `corrupt_stats` reconciliation; default path uses DROPMALFORMED (bad
-    rows skipped executor-side, job never fails — E1 contract). Without
-    `schema`, Spark infers (extra pass — test/dev only)."""
-    r = spark.read.option("header", header).option("sep", sep)
+    """Tolerant read of comma-separated files with a header row. With
+    `schema` + `keep_corrupt=True`, rows that fail parsing/casting fill
+    `_corrupt_record` (PERMISSIVE) for `corrupt_stats` reconciliation;
+    default path uses DROPMALFORMED (bad rows skipped executor-side, job
+    never fails — E1 contract). Without `schema`, Spark infers (extra
+    pass — test/dev only)."""
+    r = spark.read.option("header", True)
     if schema is not None and keep_corrupt:
         return (
             r.option("mode", "PERMISSIVE")
@@ -54,18 +53,14 @@ def write_csv(
     path: str,
     num_files: int | None = None,
     partition_by: tuple[str, ...] = (),
-    header: bool = True,
-    sep: str = ",",
-    compression: str | None = None,
 ) -> None:
-    """Write CSV shards. `num_files` bounds shard count (small-files
-    control); `partition_by` gives hive-style layout for partition
-    pruning by downstream readers."""
+    """Write uncompressed, comma-separated CSV shards with a header row.
+    `num_files` bounds shard count (small-files control); `partition_by`
+    gives hive-style layout for partition pruning by downstream
+    readers."""
     if num_files is not None:
         df = df.repartition(num_files)
-    w = df.write.mode("overwrite").option("header", header).option("sep", sep)
-    if compression:
-        w = w.option("compression", compression)
+    w = df.write.mode("overwrite").option("header", True)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.csv(path)

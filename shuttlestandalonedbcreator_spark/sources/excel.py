@@ -311,18 +311,15 @@ def read_workbook_rows(
     )
 
 
-def read_transfer_reports(
-    spark: SparkSession,
-    path: str,
-    sheet_prefix: str = "Transfer Report",
-) -> DataFrame:
-    """The reference's ingest scan (S1-S5): matching sheets, header row
-    dropped, cells mapped POSITIONALLY onto the 19 RAW_COLUMNS (headers
-    captured but never validated, :469-472, :511-513), short rows padded
-    with '' (:512). Feed the result to plans.transfer_pipeline.ingest."""
+def read_transfer_reports(spark: SparkSession, path: str) -> DataFrame:
+    """The reference's ingest scan (S1-S5): sheets named ``Transfer
+    Report*``, header row dropped, cells mapped POSITIONALLY onto the 19
+    RAW_COLUMNS (headers captured but never validated, :469-472,
+    :511-513), short rows padded with '' (:512). Feed the result to
+    plans.transfer_pipeline.ingest."""
     from shuttlestandalonedbcreator_spark.plans.transfer_pipeline import RAW_COLUMNS
 
-    raw = read_workbook_rows(spark, path, sheet_prefix=sheet_prefix)
+    raw = read_workbook_rows(spark, path, sheet_prefix="Transfer Report")
     no_header = raw.filter(F.col("_row_index") > 0)  # S5 per sheet
     cols = [
         # F.get (not getItem) → NULL past the end under ANSI; '' via coalesce

@@ -41,15 +41,12 @@ def read_fixed_width(
     path: str,
     colspecs: list[ColSpec],
     keep_corrupt: bool = False,
-    skip_blank: bool = True,
 ) -> DataFrame:
-    """Parse a fixed-width layout. ``keep_corrupt=True`` = PERMISSIVE
-    (malformed rows survive with all columns NULL + the raw line in
-    ``_corrupt_record``); default = DROPMALFORMED (malformed rows are
-    filtered executor-side)."""
-    raw = spark.read.text(path)
-    if skip_blank:
-        raw = raw.filter(F.length(F.rtrim(F.col("value"))) > 0)
+    """Parse a fixed-width layout; blank lines are skipped.
+    ``keep_corrupt=True`` = PERMISSIVE (malformed rows survive with all
+    columns NULL + the raw line in ``_corrupt_record``); default =
+    DROPMALFORMED (malformed rows are filtered executor-side)."""
+    raw = spark.read.text(path).filter(F.length(F.rtrim(F.col("value"))) > 0)
 
     cols = []
     ok = F.length(F.col("value")) >= _min_line_len(colspecs)

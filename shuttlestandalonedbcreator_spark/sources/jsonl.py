@@ -67,16 +67,13 @@ def write_jsonl(
     path: str,
     num_files: int | None = None,
     partition_by: tuple[str, ...] = (),
-    compression: str | None = None,
 ) -> None:
-    """Write a corpus as line-JSON shards. `num_files` bounds shard count
-    (small-files control); `partition_by` gives hive-style layout for
-    partition pruning by downstream readers."""
+    """Write a corpus as uncompressed line-JSON shards. `num_files`
+    bounds shard count (small-files control); `partition_by` gives
+    hive-style layout for partition pruning by downstream readers."""
     if num_files is not None:
         df = df.repartition(num_files)
     w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.json(path)

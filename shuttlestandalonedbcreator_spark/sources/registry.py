@@ -28,9 +28,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def ensure_utc(spark: SparkSession) -> None:
     """Pin the session timezone to UTC — an engine-wide invariant
     (session.get_spark sets it at build; this enforces it for
@@ -137,16 +134,10 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, only: tuple[str, ...] | None = None
-) -> dict[str, DataFrame]:
-    """Register tables as temp views (the engine's SQL surface —
-    reference exposes its data the same way, as SQLite views). ``only``
-    limits registration to the named tables (skips opening the rest)."""
-    if only is not None:
-        dfs = {name: load_table(spark, sf_dir, name) for name in only}
-    else:
-        dfs = load_tables(spark, sf_dir)
+def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Register every table as a temp view (the engine's SQL surface —
+    reference exposes its data the same way, as SQLite views)."""
+    dfs = load_tables(spark, sf_dir)
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs

@@ -35,10 +35,10 @@ def apply_cdc_stream(
     keys: list[str],
     order_col: str,
     checkpoint_dir: str,
-    op_col: str | None = "op",
     version_dir: str | None = None,
 ) -> StreamingQuery:
-    """Start merging the streaming ``changes`` into ``table_path``.
+    """Start merging the streaming ``changes`` into ``table_path``; an
+    ``op`` column, when present, marks deletes.
 
     With ``version_dir`` set, each applied micro-batch additionally
     commits the post-merge table as a snapshot there
@@ -52,7 +52,7 @@ def apply_cdc_stream(
         if batch.isEmpty():
             return
         merge_upsert(
-            batch.sparkSession, table_path, batch, keys, order_col, op_col
+            batch.sparkSession, table_path, batch, keys, order_col, "op"
         )
         if version_dir is not None:
             from shuttlestandalonedbcreator_spark.plans.versioned import (
@@ -80,15 +80,15 @@ def apply_cdc_stream_versioned(
     order_col: str,
     partition_col: str,
     checkpoint_dir: str,
-    op_col: str | None = "op",
 ) -> StreamingQuery:
-    """Start committing the streaming ``changes`` as one INCREMENTAL
-    snapshot per micro-batch (`plans/versioned.py:
-    write_version_incremental`) — the versioned table IS the store, no
-    side table: each commit rewrites only the partitions the batch
-    touches and hard-links the rest from the previous snapshot, so
-    per-batch cost scales with the batch, not the table, AND every
-    batch boundary is a retained, time-travelable version. This is the
+    """Start committing the streaming ``changes`` (deletes marked by an
+    ``op`` column, when present) as one INCREMENTAL snapshot per
+    micro-batch (`plans/versioned.py:write_version_incremental`) — the
+    versioned table IS the store, no side table: each commit rewrites
+    only the partitions the batch touches and hard-links the rest from
+    the previous snapshot, so per-batch cost scales with the batch, not
+    the table, AND every batch boundary is a retained, time-travelable
+    version. This is the
     100 TB form of `apply_cdc_stream(version_dir=...)`, whose history
     commit re-writes the full table per batch.
 
@@ -113,7 +113,7 @@ def apply_cdc_stream_versioned(
             keys,
             order_col,
             partition_col,
-            op_col,
+            "op",
         )
 
     return (

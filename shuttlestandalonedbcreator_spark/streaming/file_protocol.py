@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,23 +56,22 @@ def watch_folder(
     target_dir: str,
     checkpoint_dir: str,
     archive_dir: str | None = None,
-    file_format: str = "csv",
     max_files_per_trigger: int | None = None,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
     eager_archive: bool = False,
 ) -> StreamingQuery:
-    """Watch ``source_dir`` for transfer-report files; ingest each through
-    the batch pipeline and append to a parquet sink at ``target_dir``.
+    """Watch ``source_dir`` for transfer-report CSV files; ingest each
+    through the batch pipeline and append to a parquet sink at
+    ``target_dir``.
 
     Returns the started query (AvailableNow: call ``awaitTermination()``
     to drain everything currently in the folder and stop — re-run on the
     next poll, exactly the reference's cron-style protocol).
     """
     reader = (
-        spark.readStream.format(file_format)
+        spark.readStream.format("csv")
         .schema(RAW_SCHEMA)
         .option("header", "true")  # S5: header-row skip
-        .option("pathGlobFilter", "*.csv" if file_format == "csv" else "*")
+        .option("pathGlobFilter", "*.csv")
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -92,13 +90,7 @@ def watch_folder(
     # is form-decoding and would turn it into a space), then decode %XX
     basename = F.element_at(F.split(F.col("_source_file"), "/"), -1)
     basename = F.url_decode(F.regexp_replace(basename, r"\+", "%2B"))
-    if file_format == "csv":
-        basename = F.regexp_replace(basename, r"\.csv$", "")
-    pipeline = transform or (lambda batch: ingest(
-        batch.withColumn("_source_file", basename).withColumn(
-            "_ingest_seq", F.monotonically_increasing_id()
-        )
-    ))
+    basename = F.regexp_replace(basename, r"\.csv$", "")
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         # _batch_id is the major upsert-order key: _ingest_seq restarts
@@ -110,7 +102,11 @@ def watch_folder(
             src_files = [
                 r[0] for r in batch.select("_source_file").distinct().collect()
             ]
-        out = pipeline(batch).withColumn("_batch_id", F.lit(batch_id))
+        out = ingest(
+            batch.withColumn("_source_file", basename).withColumn(
+                "_ingest_seq", F.monotonically_increasing_id()
+            )
+        ).withColumn("_batch_id", F.lit(batch_id))
         out.write.mode("append").parquet(target_dir)
         if eager_archive and archive_dir:
             os.makedirs(archive_dir, exist_ok=True)

@@ -35,18 +35,13 @@ def dedupe_batch_against_index(
     index: DataFrame | None,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Pure batch core (unit-testable without a stream): rows of ``batch``
     that survive (1) within-batch near-dup clustering — smallest id per
     cluster kept — and (2) near-match against ``index`` (pass None for the
-    first-ever batch)."""
-    internal_pairs = minhash_lsh_pairs(
-        batch, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands, threshold=threshold
-    )
+    first-ever batch), both at estimated Jaccard 0.5 over the index's
+    MinHash shape."""
+    internal_pairs = minhash_lsh_pairs(batch, id_col, text_col)
     kept = (
         cluster_keep_list(batch, internal_pairs, id_col)
         .filter(F.col("keep") == 1)
@@ -55,7 +50,7 @@ def dedupe_batch_against_index(
     if index is None:
         return kept
     matched = incremental_neardup_pairs(
-        kept, index, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands, threshold=threshold
+        kept, index, id_col, text_col
     ).select(F.col("new_id").alias(id_col)).distinct()
     return kept.join(matched, id_col, "left_anti")
 
@@ -66,19 +61,13 @@ def dedupe_stream(
     corpus_dir: str,
     index_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    schema: str = "doc_id LONG, text STRING",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
 ) -> StreamingQuery:
-    """Watch ``source_dir`` for parquet document drops; append accepted
-    (never-seen) docs to ``corpus_dir`` and their signatures to
-    ``index_dir``. AvailableNow trigger: drains what exists, then stops —
-    rerun per poll cycle, like the reference's folder protocol."""
-    raw = spark.readStream.schema(schema).parquet(source_dir)
+    """Watch ``source_dir`` for parquet (doc_id LONG, text STRING) drops;
+    append accepted (never-seen) docs to ``corpus_dir`` and their
+    signatures to ``index_dir``. AvailableNow trigger: drains what
+    exists, then stops — rerun per poll cycle, like the reference's
+    folder protocol."""
+    raw = spark.readStream.schema("doc_id LONG, text STRING").parquet(source_dir)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         import os
@@ -92,13 +81,12 @@ def dedupe_stream(
             else None
         )
         accepted = dedupe_batch_against_index(
-            batch, index, id_col, text_col,
-            n=n, num_hashes=num_hashes, bands=bands, threshold=threshold,
+            batch, index, "doc_id", "text"
         ).localCheckpoint(eager=True)  # compute ONCE; feeds two writes
         accepted.write.mode("append").parquet(corpus_dir)
-        minhash_index(
-            accepted, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands
-        ).write.partitionBy("band").mode("append").parquet(index_dir)
+        minhash_index(accepted, "doc_id", "text").write.partitionBy("band").mode(
+            "append"
+        ).parquet(index_dir)
 
     return (
         raw.writeStream.foreachBatch(process_batch)

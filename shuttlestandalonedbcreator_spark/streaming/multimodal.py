@@ -174,9 +174,7 @@ def attach_binary_metadata(
     )
 
 
-def extract_features(
-    df: DataFrame, content_col: str = "content"
-) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature stage over (content_id, modality,
     n_bytes, sha, content). Per-row errors are captured, not thrown —
     operator E1's skip-and-count semantics applied to codecs."""
@@ -195,7 +193,7 @@ def extract_features(
                     err = f"no decoder registered for modality '{modality}'"
                 else:
                     try:
-                        feats.update(decoder(bytes(row[content_col])))
+                        feats.update(decoder(bytes(row["content"])))
                         ok = True
                     except Exception as e:  # per-row skip (E1)
                         err = str(e)[:200]
@@ -217,9 +215,7 @@ def extract_features(
     return fan_out(df).mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def resize_images(
-    df: DataFrame, target_w: int, target_h: int, content_col: str = "content"
-) -> DataFrame:
+def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Arrow-batched resize stage: (content_id, modality, content) →
     resized content + recorded dims. Rows whose modality has no
     registered resizer (or whose resizer throws) come back with
@@ -238,7 +234,7 @@ def resize_images(
                     err = f"no resizer registered for modality '{modality}'"
                 else:
                     try:
-                        content = resizer(bytes(row[content_col]), target_w, target_h)
+                        content = resizer(bytes(row["content"]), target_w, target_h)
                         ok = True
                     except Exception as e:  # per-row skip (E1)
                         err = str(e)[:200]
@@ -258,9 +254,7 @@ def resize_images(
     return fan_out(df).mapInPandas(run, schema=RESIZE_SCHEMA)
 
 
-def sample_frames(
-    df: DataFrame, n_frames: int = 4, content_col: str = "content"
-) -> DataFrame:
+def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """Arrow-batched frame-sampling stage: each (video) row expands to
     ``n_frames`` rows (content_id, frame_index, frame_ms, frame).
     Expansion happens inside mapInPandas — partition-parallel, no
@@ -287,7 +281,7 @@ def sample_frames(
                     )
                     continue
                 try:
-                    frames = sampler(bytes(row[content_col]), n_frames)
+                    frames = sampler(bytes(row["content"]), n_frames)
                 except Exception as e:  # per-row skip (E1)
                     out.append(
                         {

@@ -26,14 +26,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 
-def hourly_partial(events: DataFrame, ts_col: str = "ts", value_col: str = "value") -> DataFrame:
-    """Mergeable hourly partial aggregate of an event frame:
-    (epoch_hour, n_events, sum_scaled) with the value sum as an exact
+def hourly_partial(events: DataFrame) -> DataFrame:
+    """Mergeable hourly partial aggregate of an event frame over ``ts``:
+    (epoch_hour, n_events, sum_scaled) with the ``value`` sum as an exact
     scaled long (cents-style decimal encode, associative to merge)."""
-    scaled = (F.col(value_col).cast("decimal(18,2)") * 100).cast("long")
+    scaled = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     return (
         events.groupBy(
-            (F.unix_timestamp(F.col(ts_col)) / 3600).cast("long").alias("epoch_hour")
+            (F.unix_timestamp(F.col("ts")) / 3600).cast("long").alias("epoch_hour")
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -67,19 +67,18 @@ def maintain_hourly_rollup(
     rollup_dir: str,
     checkpoint_dir: str,
     schema: str,
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> StreamingQuery:
-    """Watch ``source_dir`` for parquet event drops and keep the hourly
-    rollup at ``rollup_dir`` fresh. AvailableNow trigger: drains what
-    exists, then stops — rerun per poll cycle, like the reference's
-    folder protocol (SQLiteDirectImporter.java:125-134)."""
+    """Watch ``source_dir`` for parquet event drops (``ts``, ``value``)
+    and keep the hourly rollup at ``rollup_dir`` fresh. AvailableNow
+    trigger: drains what exists, then stops — rerun per poll cycle, like
+    the reference's folder protocol (SQLiteDirectImporter.java:125-134).
+    """
     raw = spark.readStream.schema(schema).parquet(source_dir)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         import os
 
-        partial = hourly_partial(batch, ts_col, value_col)
+        partial = hourly_partial(batch)
         have_rollup = os.path.isdir(rollup_dir) and any(
             f.startswith("epoch_hour=") for f in os.listdir(rollup_dir)
         )

@@ -21,16 +21,15 @@ def tumbling_counts(
     events: DataFrame,
     window_size: str = "1 hour",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """Tumbling-window counts + sums with late-data bound.
+    """Tumbling-window counts + sums over ``ts`` with late-data bound.
 
     Streaming: per-window partial state, emitted on watermark expiry
     (append mode). Batch: plain groupBy on the window struct.
     """
-    src = events.withWatermark(ts_col, watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
-        src.groupBy(F.window(F.col(ts_col), window_size).alias("win"))
+        src.groupBy(F.window(F.col("ts"), window_size).alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
@@ -49,13 +48,12 @@ def sliding_rates(
     window_size: str = "1 hour",
     slide: str = "15 minutes",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """Sliding-window event rates per event_type."""
-    src = events.withWatermark(ts_col, watermark) if events.isStreaming else events
+    """Sliding-window event rates per event_type over ``ts``."""
+    src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
         src.groupBy(
-            F.window(F.col(ts_col), window_size, slide).alias("win"),
+            F.window(F.col("ts"), window_size, slide).alias("win"),
             F.col("event_type"),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -71,10 +69,10 @@ def session_aggregates(
     events: DataFrame,
     gap: str = "30 minutes",
     watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """Gap-based session windows per user (stateful session_window — the
-    native streaming realization of the batch sessionization query).
+    """Gap-based session windows over ``ts`` per user (stateful
+    session_window — the native streaming realization of the batch
+    sessionization query).
 
     Consumer gotcha (measured, Spark 4.1): do NOT put a plan-side
     ``.filter`` on ``session_start``/``session_end`` directly over this
@@ -89,10 +87,10 @@ def session_aggregates(
     path is unaffected (the watermark cut happens inside the stateful
     operator, after merging).
     """
-    src = events.withWatermark(ts_col, watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
         src.groupBy(
-            F.session_window(F.col(ts_col), gap).alias("win"), F.col("user_id")
+            F.session_window(F.col("ts"), gap).alias("win"), F.col("user_id")
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -112,8 +110,6 @@ def finalized_sessions(
     events: DataFrame,
     gap: str = "30 minutes",
     end_before=None,
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Session aggregates with a SAFE end-time cut (batch and stream).
 
@@ -135,7 +131,7 @@ def finalized_sessions(
     session_aggregates: one shuffle on user_id, merge-sort sessions
     per key.
     """
-    out = session_aggregates(events, gap=gap, watermark=watermark, ts_col=ts_col)
+    out = session_aggregates(events, gap=gap)
     if end_before is None:
         return out
     end_nd = F.shuffle(F.array(F.col("session_end")))[0]
@@ -146,12 +142,11 @@ def streaming_dedup(
     events: DataFrame,
     keys: list[str] | None = None,
     watermark: str = "1 hour",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    """Exactly-once-per-key within the watermark horizon
+    """Exactly-once-per-key within the ``ts`` watermark horizon
     (`dropDuplicatesWithinWatermark` keeps state bounded — the streaming
     realization of idempotent re-processing, reference :306)."""
     keys = keys or ["event_id"]
     if events.isStreaming:
-        return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+        return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
     return events.dropDuplicates(keys)

@@ -824,6 +824,24 @@ def test_bounded_collect_byte_cap(spark, monkeypatch):
         util.bounded_collect(wide, "one_row", hint="shard it")
 
 
+def test_bounded_collect_byte_cap_counts_array_elements(spark, monkeypatch):
+    """The byte cap sizes an array column by its real element count, not
+    as one element: a dense-vector side whose real bytes pass the cap is
+    refused."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from shuttlestandalonedbcreator_spark.operators import util
+
+    vecs = spark.range(10).select(
+        "id", F.array_repeat(F.col("id").cast("double"), 100).alias("v")
+    )  # 8 B id + 100 doubles = 808 B/row
+    monkeypatch.setattr(util, "MAX_COLLECT_BYTES", 4_000)
+    assert len(util.bounded_collect(vecs.limit(4), "one_row")) == 4
+    with _pytest.raises(ValueError, match=r"exceeded 4000 estimated bytes \(808 B/row\)"):
+        util.bounded_collect(vecs, "one_row", hint="shard it")
+
+
 def test_operator_caps_are_module_constants_not_parameters():
     """The graph, BPE, scalewin and bounded_collect caps are module
     constants that tests patch, not keyword parameters: the public
@@ -843,6 +861,104 @@ def test_operator_caps_are_module_constants_not_parameters():
     }
     got = {f: list(inspect.signature(f).parameters) for f in want}
     assert got == want
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    """No public package function keeps a defaulted parameter that no
+    call site sets: a value nobody passes is a constant, and the branches
+    that served other values are dead code. Source-level census of the
+    top-level public functions of the package, against every call in the
+    package, ``tools/``, ``bench.py``, ``__spark_entry__.py``,
+    ``perfbench/`` and ``tests/``. A call matches on the function's name
+    and sets a parameter by keyword or by position. A ``*``/``**``
+    forward sets every parameter, except that a function relaying its
+    own ``**kwargs`` sets only what its callers pass it by keyword."""
+    import ast
+    import bisect
+    import gc
+    import pathlib
+    import re
+
+    import shuttlestandalonedbcreator_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    repo = root.parent
+    package = sorted(root.rglob("*.py"))
+    files = [
+        *package,
+        *(repo / "tools").glob("*.py"),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+        *(repo / "perfbench").rglob("*.py"),
+        *(repo / "tests").rglob("*.py"),
+    ]
+    texts = {py: py.read_text() for py in files}
+    gc.disable()  # collections while parsing ~40k lines double the time
+    try:
+        trees = {py: ast.parse(text) for py, text in texts.items()}
+    finally:
+        gc.enable()
+    def callee(call):
+        return getattr(call.func, "id", None) or getattr(call.func, "attr", None)
+
+    defaulted = []  # (module, function, positional names, defaulted names)
+    relays = []  # (callee, function relaying its own **kwargs to it)
+    relayed = set()  # id() of the relaying calls
+    for py in package:
+        for fn in trees[py].body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = [p.arg for p in (*a.posonlyargs, *a.args)]
+            opt = pos[len(pos) - len(a.defaults):] + [
+                k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d
+            ]
+            if opt:
+                defaulted.append((py.relative_to(root).as_posix(), fn.name, pos, opt))
+            for c in ast.walk(fn) if a.kwarg else ():
+                if isinstance(c, ast.Call) and any(
+                    k.arg is None and getattr(k.value, "id", None) == a.kwarg.arg
+                    for k in c.keywords
+                ):
+                    relays.append((callee(c), fn.name))
+                    relayed.add(id(c))
+    set_by = {name: set() for _, name, _, _ in defaulted}  # keywords, counts, "*"
+    set_by.update((relay, set()) for _, relay in relays)
+    called = re.compile(r"\b(?:%s)\s*\(" % "|".join(set_by))
+    for py, text in texts.items():
+        lines = [text.count("\n", 0, m.start()) + 1 for m in called.finditer(text)]
+        nodes = [trees[py]] if lines else []
+        while nodes:  # descend only into nodes spanning a matched line
+            c = nodes.pop()
+            for n in ast.iter_child_nodes(c):
+                i = bisect.bisect_left(lines, getattr(n, "lineno", 0))
+                if i < len(lines) and lines[i] <= getattr(n, "end_lineno", lines[i]):
+                    nodes.append(n)
+            if not isinstance(c, ast.Call) or callee(c) not in set_by:
+                continue
+            got = set_by[callee(c)]
+            got.update(k.arg for k in c.keywords if k.arg)
+            got.add(len(c.args))
+            starred = any(isinstance(a, ast.Starred) for a in c.args)
+            if starred or (id(c) not in relayed and any(k.arg is None for k in c.keywords)):
+                got.add("*")
+    for _ in relays:
+        for name, relay in relays:
+            if name in set_by:
+                set_by[name] |= {k for k in set_by[relay] if isinstance(k, str)}
+    unset = []
+    for rel, name, pos, opt in defaulted:
+        got = set_by[name]
+        npos = max((n for n in got if isinstance(n, int)), default=0)
+        unset += [
+            f"{rel}:{name}({p})"
+            for p in opt
+            if "*" not in got and p not in got and p not in pos[:npos]
+        ]
+    assert not unset, (
+        f"{len(unset)} defaulted parameters that no call site sets (make "
+        "each the constant it defaults to):\n" + "\n".join(unset)
+    )
 
 
 def test_no_scratch_files_at_repo_root():

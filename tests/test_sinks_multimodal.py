@@ -185,11 +185,11 @@ def test_curation_pipeline_end_to_end(spark, sf_oracle, tmp_path):
     from pyspark.sql import functions as F
 
     from shuttlestandalonedbcreator_spark.operators.dedup import minhash_lsh_pairs
-    from shuttlestandalonedbcreator_spark.plans.curation import write_curated
+    from shuttlestandalonedbcreator_spark.plans.curation import write_curated_observed
 
     docs = spark.read.parquet(f"{sf_oracle}/documents.parquet")
     out = str(tmp_path / "curated")
-    curated = write_curated(docs, out)
+    curated, _ = write_curated_observed(docs, out)
 
     n_in, n_out = docs.count(), curated.count()
     assert 0 < n_out < n_in

@@ -43,6 +43,27 @@ def test_profile_plan_capture_and_layers(spark, sf_small, capsys):
     assert out.rstrip().endswith(trips[0])
 
 
+def test_round_trips_count_only_the_building_thread(spark):
+    """JVM calls another thread makes inside the block (py4j's finalizer
+    thread deleting released proxies, here a plain worker thread) are
+    not counted; the opening thread's calls are."""
+    import threading
+
+    from tools.entry_profile import count_round_trips
+
+    system = spark._jvm.java.lang.System
+    with count_round_trips() as alone:
+        system.nanoTime()
+    with count_round_trips() as trips:
+        worker = threading.Thread(target=lambda: [system.nanoTime() for _ in range(20)])
+        worker.start()
+        worker.join()
+        from_worker = trips[0]
+        system.nanoTime()
+    assert from_worker == 0
+    assert trips[0] == alone[0] > 0
+
+
 def test_readme_layout_names_every_tool():
     """README's layout section lists every tools/*.py, and every tool it
     lists exists."""

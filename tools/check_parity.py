@@ -18,11 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from shuttlestandalonedbcreator_spark.queries import CATALOG  # noqa: E402
 from shuttlestandalonedbcreator_spark.session import get_spark  # noqa: E402
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+from shuttlestandalonedbcreator_spark.sources.registry import TABLES  # noqa: E402
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:

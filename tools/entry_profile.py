@@ -18,7 +18,7 @@ Usage: python tools/entry_profile.py [entry ...] [--sf DIR] [--plan] [--metrics]
   benchmark's own op (``perfbench.workloads.run_entry`` under a
   ``perfbench.trace.Tracer``), so the numbers compare directly with a
   ``perfbench/run.py --trace 1`` run; then the py4j round trips of one
-  more build (each ``ClientServerConnection.send_command`` counts one).
+  more build (each ``send_command`` of the building thread counts one).
 
 ``--sf`` defaults to the sf0.01 fixture set.
 """
@@ -29,6 +29,7 @@ import argparse
 import os
 import re
 import sys
+import threading
 import types
 import uuid
 from contextlib import contextmanager
@@ -85,15 +86,17 @@ def capture_checkpoints():
 
 @contextmanager
 def count_round_trips():
-    """Count the py4j round trips made inside the block: every driver call
-    into the JVM is one ``ClientServerConnection.send_command``."""
+    """Count the py4j round trips (``ClientServerConnection.send_command``)
+    the opening thread makes inside the block; py4j's ``FinalizerWorker``
+    thread deleting released proxies is not counted."""
     from py4j.clientserver import ClientServerConnection
 
     count = [0]
     real = ClientServerConnection.send_command
+    owner = threading.get_ident()
 
     def counting(self, *args, **kwargs):
-        count[0] += 1
+        count[0] += threading.get_ident() == owner
         return real(self, *args, **kwargs)
 
     ClientServerConnection.send_command = counting

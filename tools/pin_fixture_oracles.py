@@ -51,6 +51,7 @@ sys.path.insert(0, REPO)
 
 from shuttlestandalonedbcreator_spark import queries as Q  # noqa: E402
 from shuttlestandalonedbcreator_spark.session import get_spark  # noqa: E402
+from shuttlestandalonedbcreator_spark.sources.registry import TABLES  # noqa: E402
 
 PIN_DIR = os.path.join(
     REPO, "shuttlestandalonedbcreator_spark", "oracle_pins"
@@ -65,10 +66,6 @@ SFS = (
     ("sf0_001", "/root/testdata/sf0.001"),
     ("sf0_01", "/root/testdata/sf0.01"),
     ("sf0_1", "/root/testdata/sf0.1"),
-)
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
 )
 
 
